@@ -56,8 +56,9 @@ import org.apache.spark.sql.functions._
   * via "only".
   *
   * Memo cold/warm split (round-12 advice): the dedup family shares
-  * per-(session, dir) memos — the signature table, the LSH pair list,
-  * and the cluster map (Dedup.sigCache/pairsCache/clusterCache). A
+  * session memos keyed on the documents file — the signature table,
+  * the LSH pair list, and the cluster map (graft.io.SessionMemo; a
+  * rewrite is detected by the file fingerprint; no call needed). A
   * FRESH-JVM median therefore includes exactly one cold memo build in
   * its first rep (later reps are steady-state warm); IN-SUITE numbers
   * are order-coupled — whichever consumer (d3-family, d6, d8, d16,

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.syntax._
-import graft.io.Tables
+import graft.io.{SessionMemo, Tables}
 
 /** Large-scale training-data deduplication operators over `documents`.
   *
@@ -123,128 +123,33 @@ object Dedup {
       .select($"doc_id", md5(concat((0 until NumHashes).map(i => col(s"m$i")): _*)).as("sig"))
       .orderBy($"doc_id")
 
+  /** The documents file(s) every dedup memo is keyed on. */
+  private def docsInput(dir: String): Seq[String] = Seq(s"$dir/documents.parquet")
+
   /** Session-level cache of the per-doc SIGNATURE table (m0..m15) —
     * the expensive stage (4 md5 evaluations per shingle) that D-2, D-3
     * and D-6 all consume; banding on top is a cheap projection. This is
     * the session-scale version of the documented production pattern
     * (persist the signature table; it is tiny next to the corpus).
-    *
-    * ASSUMES the zone dir is immutable for the session (true for the
-    * driver testdata; the medallion raw zone is append-only timestamped
-    * objects). Rewriting a cached dir in-session requires
-    * [[invalidateSignatureCache]]. Bounded: past [[MaxCachedDirs]]
-    * entries the oldest is unpersisted and dropped, so long-lived JVMs
-    * iterating many dirs neither pin sessions nor grow executor cache
-    * memory without bound. */
-  private val MaxCachedDirs = 4
-  private val sigCache =
-    new java.util.LinkedHashMap[(SparkSession, String), DataFrame](8, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(SparkSession, String), DataFrame]): Boolean =
-        if (size > MaxCachedDirs) {
-          scala.util.Try(e.getValue.unpersist()) // session may already be stopped
-          true
-        } else false
-    }
-
-  private def signatures(s: SparkSession, dir: String): DataFrame = sigCache.synchronized {
-    hookEvictOnStop(s)
-    sigCache.computeIfAbsent((s, dir), _ => {
+    * Keyed on the documents file fingerprint ([[graft.io.SessionMemo]]),
+    * so a rewritten corpus gets fresh signatures. */
+  private def signatures(s: SparkSession, dir: String): DataFrame =
+    SessionMemo(s, "signatures", docsInput(dir)) {
       val aggs = hashCols
       shingles(s, dir, distinct = false)
         .groupBy($"doc_id").agg(aggs.head, aggs.tail: _*).persist()
-    })
-  }
+    }
 
-  /** Session-lifecycle hygiene (round-12 verdict; generalized r13):
-    * LRU eviction alone let a STOPPED session's cached frames linger
-    * until four newer dirs arrived. The application-end listener lives
-    * at the shared seam ([[graft.io.Tables.hookEvictOnStop]] — every
-    * memoizing entry point routes through it), and THIS module's purge
-    * is registered as a callback the listener runs on a daemon thread:
-    * the dedup caches' monitors are held for entire multi-job memo
-    * builds (computeClusterTable's label-propagation loop runs minutes
-    * of jobs inside clusterCache.synchronized), and a listener-bus
-    * thread blocking on one would stall SparkContext.stop() until the
-    * build finished. Registration happens at object init — an app that
-    * never touches Dedup has no dedup caches to purge either. */
-  private def hookEvictOnStop(s: SparkSession): Unit =
-    graft.io.Tables.hookEvictOnStop(s)
-
-  private val purgeRegistered: Unit =
-    graft.io.Tables.registerPurgeCallback(() => purgeDedupCaches())
-
-  private def purgeDedupCaches(): Unit = {
-    def purge(m: java.util.LinkedHashMap[(SparkSession, String), DataFrame]): Unit =
-      m.synchronized {
-        val it = m.entrySet().iterator()
-        while (it.hasNext) {
-          val e = it.next()
-          if (e.getKey._1.sparkContext.isStopped) {
-            scala.util.Try(e.getValue.unpersist())
-            it.remove()
-          }
-        }
-      }
-    purge(sigCache); purge(pairsCache); purge(d9Cache); purge(clusterCache)
-  }
-
-  /** Drop cache entries owned by stopped sessions — normally driven
-    * by the application-end listener; public for tests/embedders. */
-  def purgeStoppedSessions(): Unit = {
-    purgeDedupCaches()
-    graft.io.Tables.purgeStoppedSessions()
-  }
-
-  /** Drop (and unpersist) cached signatures — call after rewriting a
-    * document dir within a session. */
   /** Session cache of the LSH candidate PAIR list — the production
     * artifact a dedup pipeline materializes ONCE per corpus version
     * and every downstream consumer reads (the d8 Jaccard verify, the
     * d6 cluster map build, d16 containment, d19 cluster split, and
     * t20's leakage audit all start from it). Before round 12 each of
     * them re-ran the band-bucket join per consumer — d8 alone embeds
-    * the pair plan four times. Same bounded-LRU + immutable-dir
-    * contract as [[sigCache]]; invalidated by
-    * [[invalidateSignatureCache]] (pairs derive from signatures). The
-    * d3 GATE entry stays on the raw plan so its bench timing keeps
-    * measuring candidate generation itself. */
-  private val pairsCache =
-    new java.util.LinkedHashMap[(SparkSession, String), DataFrame](8, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(SparkSession, String), DataFrame]): Boolean =
-        if (size > MaxCachedDirs) {
-          scala.util.Try(e.getValue.unpersist())
-          true
-        } else false
-    }
-
-  /** Memoized [[d3LshPairs]] for downstream consumers. */
+    * the pair plan four times. The d3 GATE entry stays on the raw plan
+    * so its bench timing keeps measuring candidate generation itself. */
   def lshPairsCached(s: SparkSession, dir: String): DataFrame =
-    pairsCache.synchronized {
-      hookEvictOnStop(s)
-      pairsCache.computeIfAbsent((s, dir), _ => d3LshPairs(s, dir).persist())
-    }
-
-  def invalidateSignatureCache(): Unit = {
-    sigCache.synchronized {
-      sigCache.values.forEach(df => scala.util.Try(df.unpersist()))
-      sigCache.clear()
-    }
-    pairsCache.synchronized {
-      pairsCache.values.forEach(df => scala.util.Try(df.unpersist()))
-      pairsCache.clear()
-    }
-    d9Cache.synchronized {
-      d9Cache.values.forEach(df => scala.util.Try(df.unpersist()))
-      d9Cache.clear()
-    }
-    invalidateClusterCache() // cluster map derives from the signatures
-    // The documented in-session rewrite contract is THIS call; cascade
-    // to the table-plan memo too, or the rewritten dir's stale file
-    // listing survives underneath the cleared signature caches.
-    graft.io.Tables.invalidateTableCache()
-  }
+    SessionMemo(s, "pairs", docsInput(dir))(d3LshPairs(s, dir).persist())
 
   /** Per-doc band signatures (Bands rows per doc). */
   private def banded(s: SparkSession, dir: String): DataFrame = {
@@ -539,37 +444,16 @@ object Dedup {
   /** Unsorted (doc_id, cluster_id, is_kept) assignment — the d6 body,
     * shared with d18 so its join does not inherit a pointless range
     * exchange from d6's output sort. */
-  /** Memo of the (doc_id, cluster_id, is_kept) assignment per
-    * (session, dir) — same contract and invalidation as [[sigCache]].
-    * d6, d18 and d19 all start from this table; without the memo each
-    * entry re-runs the whole label-propagation loop (the two slowest
-    * bench entries re-doing d6's work, round-7 advice). Production
-    * materializes the cluster map once per corpus snapshot; this cache
-    * is the in-session analogue. The result is persisted and FORCED
-    * before the loop's intermediates are unpersisted, so the cached
-    * plan no longer depends on them. */
-  private val clusterCache =
-    new java.util.LinkedHashMap[(SparkSession, String), DataFrame](8, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(SparkSession, String), DataFrame]): Boolean =
-        if (size > MaxCachedDirs) {
-          scala.util.Try(e.getValue.unpersist())
-          true
-        } else false
-    }
-
+  /** Memo of the (doc_id, cluster_id, is_kept) assignment, keyed like
+    * [[signatures]]. d6, d18 and d19 all start from this table; without
+    * the memo each entry re-runs the whole label-propagation loop (the
+    * two slowest bench entries re-doing d6's work, round-7 advice).
+    * Production materializes the cluster map once per corpus snapshot;
+    * this cache is the in-session analogue. The result is persisted and
+    * FORCED before the loop's intermediates are unpersisted, so the
+    * cached plan no longer depends on them. */
   private def clusterTable(s: SparkSession, dir: String): DataFrame =
-    clusterCache.synchronized {
-      hookEvictOnStop(s)
-      clusterCache.computeIfAbsent((s, dir), _ => computeClusterTable(s, dir))
-    }
-
-  /** Drop (and unpersist) cached cluster assignments — call after
-    * rewriting a document dir within a session. */
-  def invalidateClusterCache(): Unit = clusterCache.synchronized {
-    clusterCache.values.forEach(df => scala.util.Try(df.unpersist()))
-    clusterCache.clear()
-  }
+    SessionMemo(s, "clusters", docsInput(dir))(computeClusterTable(s, dir))
 
   private def computeClusterTable(s: SparkSession, dir: String): DataFrame = {
     val pairs = lshPairsCached(s, dir)
@@ -628,7 +512,7 @@ object Dedup {
       s"label propagation did not converge in $maxRounds rounds; component diameter exceeds cap")
     // one line per cold cluster-map build: the round count is the CC
     // loop's scale signal (≈ log₂ of the largest component diameter),
-    // and the memo means it prints once per (session, dir), not per
+    // and the memo means it prints once per corpus version, not per
     // consumer
     System.err.println(s"[graft] d6 cluster map converged in $rounds rounds")
     val docs = Tables.documents(s, dir).select($"doc_id")
@@ -794,21 +678,10 @@ object Dedup {
   /** Session cache of the (tiny) contamination table — D-9's output is
     * consumed again by D-10's purge and the P-2/P-3 pipelines, and at
     * production scale a contamination list is materialized once per
-    * corpus version, not recomputed per consumer. Same bounded-LRU
-    * discipline as [[sigCache]]; same immutable-dir assumption. */
-  private val d9Cache =
-    new java.util.LinkedHashMap[(SparkSession, String), DataFrame](8, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(SparkSession, String), DataFrame]): Boolean =
-        if (size > MaxCachedDirs) {
-          scala.util.Try(e.getValue.unpersist())
-          true
-        } else false
-    }
-
-  def d9Decontaminate(s: SparkSession, dir: String): DataFrame = d9Cache.synchronized {
-    hookEvictOnStop(s)
-    d9Cache.computeIfAbsent((s, dir), _ => {
+    * corpus version, not recomputed per consumer. Keyed like
+    * [[signatures]]. */
+  def d9Decontaminate(s: SparkSession, dir: String): DataFrame =
+    SessionMemo(s, "d9", docsInput(dir)) {
       val docs = graft.io.Tables.documents(s, dir)
       def shingles(df: DataFrame) = graft.functions.Shingles
         .kgramRows(df, Seq("doc_id"), k = 3)
@@ -821,8 +694,7 @@ object Dedup {
         .groupBy($"doc_id").agg(count(lit(1)).as("n_overlap"))
         .orderBy($"doc_id")
         .persist()
-    })
-  }
+    }
 
   /** D-11 core, width-parameterized — SimHash near-dup pairs
     * (hamming ≤ bands−1) via banding: pigeonhole guarantees ≤ bands−1

@@ -17,53 +17,6 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** The driver's events.parquet has shipped `ts` under two encodings:
-    * INT64 TIMESTAMP(NANOS) (rounds 1–5; vanilla Spark refuses it —
-    * [PARQUET_TYPE_ILLEGAL] — so we read nanos as long and convert) and
-    * plain TIMESTAMP(MICROS) without tz (round 6+; Spark infers
-    * TIMESTAMP_NTZ, which watermarks and unix_micros reject). Both are
-    * normalized HERE, the single batch seam, to TimestampType — the
-    * same tz-normalization step the reference performs on every read
-    * (`prescriptive_logic.py:43-46`). The session tz is UTC, so the
-    * NTZ→TZ cast is value-preserving. Conversion is a pure projection:
-    * pushdown/pruning on other columns is unaffected.
-    */
-  /** Memo of constructed table DataFrames per (session, dir, name).
-    * `spark.read.parquet` lists files and reads a footer to infer the
-    * schema on EVERY call — a constant metadata tax paid by all ~200
-    * gate entries (round-7 advice). The testdata dirs are immutable for
-    * a session's lifetime, so the logical plan (file index + schema +
-    * ts normalization) is reusable verbatim; execution still re-scans
-    * file CONTENT each run, exactly like a catalog table's cached
-    * metadata in production. Keyed by session so a restarted session
-    * (new file-index invalidation rules) never sees a stale entry. */
-  private val tableMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
-
-  /** Session-lifecycle hook (round-13 hygiene, generalized): ONE
-    * application-end listener per SparkContext, registered from every
-    * memoizing entry point — here at the shared table seam, so an app
-    * that only ever reads tables/SQL (never a dedup entry) still gets
-    * its stopped sessions purged (the r13 first cut hooked only from
-    * Dedup's entry points, leaving tableMemo/rawTsMemo/registered to
-    * leak in exactly that common case). The listener itself purges
-    * only this object's lock-free ConcurrentHashMaps; module purges
-    * that must take cache monitors (Dedup's LinkedHashMap caches) are
-    * registered as callbacks and run on a DAEMON thread — a memo
-    * build can hold its cache monitor for a whole multi-job compute,
-    * and blocking the listener-bus thread on it would stall
-    * SparkContext.stop() until the build finished. */
-  private val evictHooked = java.util.Collections.synchronizedSet(
-    new java.util.HashSet[org.apache.spark.SparkContext]())
-  private val purgeCallbacks =
-    new java.util.concurrent.CopyOnWriteArrayList[() => Unit]()
-
-  /** Modules with their own (session, dir) memos register their
-    * stopped-session purge here (Dedup does at object init — an app
-    * that never touches Dedup has nothing to purge there either). */
-  def registerPurgeCallback(cb: () => Unit): Unit =
-    if (!purgeCallbacks.contains(cb)) purgeCallbacks.add(cb)
-
   /** Effective scan parallelism of `dir/name.parquet`, and the widen
     * predicate built on it (round-13 finding, measured): parquet
     * assigns each ROW GROUP to the byte-split containing its start
@@ -81,121 +34,84 @@ object Tables {
     * plan, not the writer's layout. Only order-independent consumers
     * (digest/count/min/bit math) may widen — a round-robin exchange
     * reorders rows, which would move float-sum bits. */
-  private val rowGroupMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), Integer]()
-  private val plannedSplitMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), Integer]()
-
   def scanStarved(s: SparkSession, dir: String, name: String): Boolean =
     effectiveScanSplits(s, dir, name) < s.sparkContext.defaultParallelism
+
+  /** Sum of `probe` over the footers of every `.parquet` leaf under
+    * `path` — the driver's single FILE named `<name>.parquet` or a
+    * Spark-written DIRECTORY of part files, nested `key=val/` partition
+    * dirs included (listed through the Hadoop FileSystem API, so
+    * hdfs:// and s3a:// paths probe like local ones). None when there is
+    * no such leaf or a footer is unreadable. */
+  private def footerSum(s: SparkSession, path: String)(
+      probe: org.apache.parquet.hadoop.ParquetFileReader => Long): Option[Long] = {
+    val conf = s.sessionState.newHadoopConf()
+    scala.util.Try {
+      SessionMemo.leaves(s, path).map(_.getPath)
+        .filter(_.getName.endsWith(".parquet"))
+        .map { p =>
+          val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
+          try probe(r) finally r.close()
+        }
+    }.toOption.filter(_.nonEmpty).map(_.sum)
+  }
 
   /** Exact row count of `dir/name.parquet` from footer METADATA only —
     * no data pass (parquet footers carry per-row-group counts; this is
     * the same catalog-statistics class ANALYZE persists, read at plan
-    * construction the way CBO reads rowCount). Memoized per (dir, name)
-    * like [[effectiveScanSplits]]'s row-group probe. None when the
-    * probe fails (missing table, unreadable footer) — callers must then
-    * take the plan that assumes nothing about the table's size. */
-  private val rowCountMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), java.lang.Long]()
+    * construction the way CBO reads rowCount). None when the probe
+    * fails (missing table, unreadable footer) — callers must then take
+    * the plan that assumes nothing about the table's size. */
   def tableRowCount(s: SparkSession, dir: String, name: String): Option[Long] = {
-    val v = rowCountMemo.computeIfAbsent((dir, name), { _ =>
-      val conf = s.sessionState.newHadoopConf()
-      def footerRows(p: org.apache.hadoop.fs.Path): Long = {
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
-        try r.getRecordCount finally r.close()
-      }
-      scala.util.Try {
-        val root = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
-        val fs = root.getFileSystem(conf)
-        val leaves: Seq[org.apache.hadoop.fs.Path] =
-          if (fs.getFileStatus(root).isDirectory) {
-            val it = fs.listFiles(root, /* recursive = */ true)
-            val buf = scala.collection.mutable.ArrayBuffer[org.apache.hadoop.fs.Path]()
-            while (it.hasNext) {
-              val f = it.next()
-              if (f.isFile && f.getPath.getName.endsWith(".parquet"))
-                buf += f.getPath
-            }
-            buf.toSeq
-          } else Seq(root)
-        if (leaves.isEmpty) -1L else leaves.map(footerRows).sum
-      }.toOption.map(java.lang.Long.valueOf)
-        .getOrElse(java.lang.Long.valueOf(-1L))
-    })
-    if (v.longValue() < 0L) None else Some(v.longValue())
+    val path = s"$dir/$name.parquet"
+    SessionMemo(s, "rowCount", Seq(path))(footerSum(s, path)(_.getRecordCount))
   }
 
   /** min(planned FilePartitions, footer row groups); both memoized —
-    * `.rdd.getNumPartitions` costs a planning pass and the footer
-    * read an open+parse, each paid once per (session,) dir/table.
-    * Handles both layouts: the driver's single FILE named
-    * `<name>.parquet` and a Spark-written DIRECTORY of part files
-    * (row groups summed across parts, listed RECURSIVELY through the
-    * Hadoop FileSystem API — a partitioned `key=val/` layout nests its
-    * leaves, and the FS API means hdfs://s3a:// paths probe like local
-    * ones instead of silently failing through java.io.File; both were
-    * r13 ADVICE). If the footer probe fails or finds NO parquet leaves,
-    * the row-group bound falls back to "unknown = not limiting"
-    * (MaxValue) — the conservative direction: no widen, plan exactly as
-    * before the predicate existed. (A literal 0 would be the opposite
-    * failure: scanStarved pinned true, the widen exchange taxed onto
-    * every consumer of that dir forever.) */
+    * `.rdd.getNumPartitions` costs a planning pass and the footer read
+    * an open+parse. The planned count also depends on the split-
+    * planning confs and the core count, so its entry is keyed on them.
+    * If the footer probe fails or finds NO parquet leaves, the row-group
+    * bound falls back to "unknown = not limiting" (MaxValue) — the
+    * conservative direction: no widen, plan exactly as before the
+    * predicate existed. (A literal 0 would be the opposite failure:
+    * scanStarved pinned true, the widen exchange taxed onto every
+    * consumer of that dir forever.) */
   def effectiveScanSplits(s: SparkSession, dir: String, name: String): Int = {
-    val planned = plannedSplitMemo.computeIfAbsent((s, dir, name),
-      _ => Integer.valueOf(table(s, dir, name).rdd.getNumPartitions))
-    val groups = rowGroupMemo.computeIfAbsent((dir, name), { _ =>
-      val conf = s.sessionState.newHadoopConf()
-      def footerGroups(p: org.apache.hadoop.fs.Path): Long = {
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
-        try r.getRowGroups.size.toLong finally r.close()
-      }
-      scala.util.Try {
-        val root = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
-        val fs = root.getFileSystem(conf)
-        val leaves: Seq[org.apache.hadoop.fs.Path] =
-          if (fs.getFileStatus(root).isDirectory) {
-            val it = fs.listFiles(root, /* recursive = */ true)
-            val buf = scala.collection.mutable.ArrayBuffer[org.apache.hadoop.fs.Path]()
-            while (it.hasNext) {
-              val f = it.next()
-              if (f.isFile && f.getPath.getName.endsWith(".parquet"))
-                buf += f.getPath
-            }
-            buf.toSeq
-          } else Seq(root)
-        if (leaves.isEmpty) Integer.MAX_VALUE.toLong
-        else math.min(leaves.map(footerGroups).sum, Integer.MAX_VALUE.toLong)
-      }.toOption.map(n => Integer.valueOf(n.toInt))
-        .getOrElse(Integer.valueOf(Integer.MAX_VALUE))
-    })
-    math.min(planned.intValue(), groups.intValue())
-  }
-
-  private[graft] def hookEvictOnStop(s: SparkSession): Unit = {
-    val sc = s.sparkContext
-    if (evictHooked.add(sc)) {
-      sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onApplicationEnd(
-            e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
-          purgeStoppedSessions() // lock-free: safe on the bus thread
-          if (!purgeCallbacks.isEmpty) {
-            val t = new Thread(() => purgeCallbacks.forEach(_.apply()),
-              "graft-memo-purge")
-            t.setDaemon(true)
-            t.start()
-          }
-          evictHooked.remove(sc)
-        }
-      })
+    val path = s"$dir/$name.parquet"
+    val sql = s.sessionState.conf
+    val planned = SessionMemo(s, "plannedSplits", Seq(path),
+        (sql.filesMaxPartitionBytes, sql.filesOpenCostInBytes,
+          s.sparkContext.defaultParallelism)) {
+      table(s, dir, name).rdd.getNumPartitions
     }
+    val groups = SessionMemo(s, "rowGroups", Seq(path)) {
+      footerSum(s, path)(_.getRowGroups.size.toLong)
+        .fold(Int.MaxValue)(n => math.min(n, Int.MaxValue.toLong).toInt)
+    }
+    math.min(planned, groups)
   }
 
-  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
-    hookEvictOnStop(spark)
-    tableMemo.computeIfAbsent((spark, dir, name), { _ =>
+  /** The driver's events.parquet has shipped `ts` under two encodings:
+    * INT64 TIMESTAMP(NANOS) (rounds 1–5; vanilla Spark refuses it —
+    * [PARQUET_TYPE_ILLEGAL] — so we read nanos as long and convert) and
+    * plain TIMESTAMP(MICROS) without tz (round 6+; Spark infers
+    * TIMESTAMP_NTZ, which watermarks and unix_micros reject). Both are
+    * normalized HERE, the single batch seam, to TimestampType — the
+    * same tz-normalization step the reference performs on every read
+    * (`prescriptive_logic.py:43-46`). The session tz is UTC, so the
+    * NTZ→TZ cast is value-preserving. Conversion is a pure projection:
+    * pushdown/pruning on other columns is unaffected.
+    *
+    * `spark.read.parquet` lists files and reads a footer to infer the
+    * schema on EVERY call — a constant metadata tax paid by all ~200
+    * gate entries (round-7 advice) — so the plan is memoized per
+    * session and file fingerprint: a rewritten table is a new entry;
+    * execution still re-scans file CONTENT each run, exactly like a
+    * catalog table's cached metadata in production. */
+  def table(spark: SparkSession, dir: String, name: String): DataFrame =
+    SessionMemo(spark, "table", Seq(s"$dir/$name.parquet")) {
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val df = spark.read.parquet(s"$dir/$name.parquet")
       df.schema.fields.find(_.name == "ts").map(_.dataType) match {
@@ -206,47 +122,7 @@ object Tables {
             col("ts").cast(org.apache.spark.sql.types.TimestampType))
         case _ => df
       }
-    })
-  }
-
-  /** Drop memoized plans (file index + schema) for `dir` — the
-    * invalidation contract for the immutability assumption above. A
-    * caller that rewrites a data dir it also reads through [[table]]
-    * MUST call this (Dedup.invalidateSignatureCache cascades here), or
-    * the stale file listing yields stale rows / FileNotFoundException.
-    * Also forgets view registrations pointing at `dir`, since those
-    * views wrap the dropped plans. Pass no dir to clear everything. */
-  def invalidateTableCache(dir: String = null): Unit = {
-    val it = tableMemo.keySet.iterator()
-    while (it.hasNext) { val k = it.next(); if (dir == null || k._2 == dir) it.remove() }
-    val rt = rawTsMemo.keySet.iterator()
-    while (rt.hasNext) { val k = rt.next(); if (dir == null || k._2 == dir) rt.remove() }
-    registered.synchronized {
-      val rg = registered.entrySet().iterator()
-      while (rg.hasNext) { val e = rg.next(); if (dir == null || e.getValue == dir) rg.remove() }
     }
-    val rgm = rowGroupMemo.keySet.iterator()
-    while (rgm.hasNext) { val k = rgm.next(); if (dir == null || k._1 == dir) rgm.remove() }
-    val rcm = rowCountMemo.keySet.iterator()
-    while (rcm.hasNext) { val k = rcm.next(); if (dir == null || k._1 == dir) rcm.remove() }
-    val ps = plannedSplitMemo.keySet.iterator()
-    while (ps.hasNext) { val k = ps.next(); if (dir == null || k._2 == dir) ps.remove() }
-  }
-
-  /** Drop memo entries owned by STOPPED sessions (round-13 lifecycle
-    * hygiene — called from Dedup's application-end listener so a
-    * stopped session's plans don't linger until LRU pressure). */
-  def purgeStoppedSessions(): Unit = {
-    val it = tableMemo.keySet.iterator()
-    while (it.hasNext) if (it.next()._1.sparkContext.isStopped) it.remove()
-    val rt = rawTsMemo.keySet.iterator()
-    while (rt.hasNext) if (rt.next()._1.sparkContext.isStopped) rt.remove()
-    val rg = registered.keySet.iterator()
-    while (rg.hasNext) if (rg.next().sparkContext.isStopped) rg.remove()
-    val ps = plannedSplitMemo.keySet.iterator()
-    while (ps.hasNext) if (ps.next()._1.sparkContext.isStopped) ps.remove()
-    // rowGroupMemo is session-free (keyed by dir/table only)
-  }
 
   /** The documents table (optionally narrowed to `cols` first, so the
     * exchange ships only what the consumer reads), round-robin-widened
@@ -279,32 +155,41 @@ object Tables {
 
   /** Register every table as a temp view so spark.sql queries (scalar
     * subqueries, view layering) can reference them by name — the same
-    * names the DuckDB oracle uses. Memoized on the CURRENT dir per
-    * session (not a seen-set): alternating dirs within one session
-    * re-registers, so the views always point at the requested dir.
-    * The memo is recorded only AFTER all views registered successfully,
-    * under a lock — a partial failure or a concurrent caller with a
-    * different dir can never leave the memo claiming views it didn't
-    * finish creating (round-2 advice). */
-  private val registered =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, String]()
-  def registerViews(spark: SparkSession, dir: String): Unit =
-    registered.synchronized {
-      if (registered.get(spark) != dir) {
-        names.foreach(n => table(spark, dir, n).createOrReplaceTempView(n))
-        registered.put(spark, dir)
+    * names the DuckDB oracle uses. The views always point at the
+    * requested dir's CURRENT files: they are re-registered whenever the
+    * table plans differ from the ones last registered in this session
+    * (another dir, or a rewritten file). The plans are recorded only
+    * AFTER all views registered, under the session's lock — a partial
+    * failure or a concurrent caller with a different dir can never
+    * leave the record claiming views it didn't finish creating (round-2
+    * advice). */
+  def registerViews(spark: SparkSession, dir: String): Unit = {
+    val frames = names.map(table(spark, dir, _))
+    val v = views(spark)
+    v.synchronized {
+      if (!v.frames.corresponds(frames)(_ eq _)) {
+        names.zip(frames).foreach { case (n, df) => df.createOrReplaceTempView(n) }
+        v.frames = frames
       }
     }
+  }
+
+  /** The table plans the session's temp views were last made from. */
+  private final class Views { var frames: Seq[DataFrame] = Nil }
+  private def views(s: SparkSession): Views = SessionMemo(s, "views", Nil)(new Views)
 
   /** Drop the temp views created by [[registerViews]] and forget the
-    * memo. Temp views SHADOW catalog names in resolution, so this is
+    * record. Temp views SHADOW catalog names in resolution, so this is
     * the seam that makes the same SQL text resolve to the
     * [[registerCatalogTables]] stats-bearing relations instead —
     * SqlTwinCboSpec flips it per entry to prove CBO planning changes
     * no result. */
-  def unregisterViews(spark: SparkSession): Unit = registered.synchronized {
-    names.foreach(n => spark.catalog.dropTempView(n))
-    registered.remove(spark)
+  def unregisterViews(spark: SparkSession): Unit = {
+    val v = views(spark)
+    v.synchronized {
+      names.foreach(n => spark.catalog.dropTempView(n))
+      v.frames = Nil
+    }
   }
 
   /** Catalog-table registration path (round-9 verdict task 4): temp
@@ -329,7 +214,8 @@ object Tables {
     * so a later registerViews(dir) round-trips cleanly. */
   def registerCatalogTables(s: SparkSession, dir: String,
       analyze: Boolean = true): Unit = {
-    registered.synchronized { registered.remove(s) }
+    val v = views(s)
+    v.synchronized { v.frames = Nil }
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     names.foreach { n =>
       s.catalog.dropTempView(n)
@@ -418,18 +304,15 @@ object Tables {
     spark.readStream.schema(documentsStreamSchema)
       .option("pathGlobFilter", "documents.parquet").parquet(dir)
 
-  private val rawTsMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), org.apache.spark.sql.types.DataType]()
-
   def eventsStream(spark: SparkSession, dir: String): DataFrame = {
-    hookEvictOnStop(spark) // rawTsMemo is a memo too
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // Footer read decides the ts encoding; mirrors the batch reader's
     // LongType match so batch and stream always agree on semantics.
-    // Memoized per (session, dir): a streaming source needs its schema
-    // declared up front, but the footer only needs reading once.
-    val rawTsType = rawTsMemo.computeIfAbsent((spark, dir),
-      _ => spark.read.parquet(s"$dir/events.parquet").schema("ts").dataType)
+    // Memoized: a streaming source needs its schema declared up front,
+    // but the footer only needs reading once per file version.
+    val rawTsType = SessionMemo(spark, "eventsTs", Seq(s"$dir/events.parquet")) {
+      spark.read.parquet(s"$dir/events.parquet").schema("ts").dataType
+    }
     val raw = spark.readStream.schema(eventsStreamSchema(rawTsType))
       .option("pathGlobFilter", "events.parquet").parquet(dir)
     rawTsType match {

@@ -15,7 +15,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.syntax._
-import graft.io.Tables
+import graft.io.{SessionMemo, Tables}
 
 /** X-2 — a native Catalyst aggregate: KMV (k-minimum-values) bottom-k
   * sketch for distinct-count estimation.
@@ -192,12 +192,6 @@ object Sketches {
           exprs(0), exprs(1)), "scala_udf")
   }
 
-  /** Dim-side cardinality memo for x8's sketch sizing: constant per
-    * (session, dataset), so the eager sizing count runs once — repeated
-    * invocations (bench warmup + reps) must not re-scan the dim. */
-  private val dimCountCache =
-    new scala.collection.concurrent.TrieMap[(Int, String), Long]()
-
   /** X-8 — bloom-filter semi-join pre-reduction: the manual form of the
     * runtime filter a 100 TB shuffle join lives or dies by. The
     * selective dim side (urgent orders) folds into a ~100 KB bloom
@@ -217,11 +211,13 @@ object Sketches {
     // capacity silently saturates as SF grows, and a saturated bloom
     // passes everything — still correct (the semi-join scrubs false
     // positives) but the pre-shuffle reduction the sketch exists for is
-    // gone. 8 bits/item keeps fpp ≈ 2% at every SF.
-    val nd = dimCountCache.getOrElseUpdate(
-      (System.identityHashCode(s), dir),
+    // gone. 8 bits/item keeps fpp ≈ 2% at every SF. The count is
+    // memoized per orders version, so repeated invocations (bench
+    // warmup + reps) do not re-scan the dim.
+    val nd = SessionMemo(s, "x8DimCount", Seq(s"$dir/orders.parquet")) {
       math.max(100000L,
-        Tables.orders(s, dir).where($"o_orderpriority" === "1-URGENT").count()))
+        Tables.orders(s, dir).where($"o_orderpriority" === "1-URGENT").count())
+    }
     s.sql(s"""
       SELECT l.l_returnflag AS l_returnflag,
              count(*) AS n,

@@ -295,7 +295,6 @@ class PropertySpec extends AnyFunSuite {
         spark, "st6_stream_dedup", root, minBytes = 1L).isEmpty,
         "a 64-part events dir must not read as starved")
     } finally {
-      graft.io.Tables.invalidateTableCache(root)
       def rm(f: java.io.File): Unit = {
         Option(f.listFiles()).getOrElse(Array.empty).foreach(rm); f.delete()
       }

@@ -344,29 +344,42 @@ class StorageSpec extends AnyFunSuite {
     assert(new java.io.File(s"$cleanPath/_SUCCESS").exists)
   }
 
-  test("table memo invalidation: a rewritten dir serves fresh rows after invalidateTableCache") {
-    // The tableMemo's immutability assumption is a CONTRACT, not a
-    // convention: this spec rewrites a dir the memo has served and
-    // proves (a) the invalidation hook yields the new data, and (b) the
-    // documented rewrite path (Dedup.invalidateSignatureCache) cascades
-    // to the table memo too.
+  test("session memo: rewrites are seen with no invalidate call") {
+    // Every memo keyed on documents.parquet — the table plan, the dedup
+    // signatures, the temp views — must serve the latest write in the
+    // same session: the key is the file fingerprint, and there is no
+    // call a writer could forget.
     val dir = Files.createTempDirectory("graft_memo_").toString
+    // registerViews needs all ten tables: the nine others are copies
+    graft.io.Tables.names.filterNot(_ == "documents").foreach { n =>
+      Files.copy(java.nio.file.Paths.get(sf, s"$n.parquet"),
+        java.nio.file.Paths.get(dir, s"$n.parquet"))
+    }
     def write(n: Int): Unit = {
       import spark.implicits._
-      (0 until n).map(i => (i.toLong, s"doc $i", "en", "web", 5L))
+      (0 until n).map(i => (i.toLong, s"doc number $i here", "en", "web", 5L))
         .toDF("doc_id", "text", "lang", "source", "n_chars")
         .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     }
-    write(10)
-    assert(graft.io.Tables.documents(spark, dir).count() == 10)
-    write(25) // in-session rewrite of a dir the memo already holds
-    graft.io.Tables.invalidateTableCache(dir)
-    assert(graft.io.Tables.documents(spark, dir).count() == 25,
-      "memo served a stale plan after invalidateTableCache(dir)")
-    write(7)
-    graft.dedup.Dedup.invalidateSignatureCache() // documented rewrite path
-    assert(graft.io.Tables.documents(spark, dir).count() == 7,
-      "invalidateSignatureCache did not cascade to the table memo")
+    def viewCount(): Long =
+      spark.sql("SELECT count(*) FROM documents").head().getLong(0)
+    for (n <- Seq(10, 25, 7)) {
+      write(n)
+      assert(graft.io.Tables.documents(spark, dir).count() == n,
+        s"Tables.documents served a stale plan after writing $n rows")
+      assert(graft.dedup.Dedup.d2MinhashSig(spark, dir).count() == n,
+        s"d2 signatures are stale after writing $n rows")
+      graft.io.Tables.registerViews(spark, dir)
+      assert(viewCount() == n, s"the documents view is stale after writing $n rows")
+    }
+    // the views follow the CURRENT dir: A -> B -> A points back at A
+    graft.io.Tables.registerViews(spark, sf)
+    val sfDocs = viewCount()
+    assert(sfDocs != 7)
+    graft.io.Tables.registerViews(spark, dir)
+    assert(viewCount() == 7, "registerViews A -> B -> A left the views on B")
+    graft.io.Tables.registerViews(spark, sf)
+    assert(viewCount() == sfDocs)
   }
 
   test("work-dir sweep cutoff: 1h default spares fresh dirs, the measurement pre-sweep (0) clears them") {
@@ -420,7 +433,7 @@ class StorageSpec extends AnyFunSuite {
     // single coalesced write is ONE row group per 128 MB however many
     // byte splits planning reports. scanStarved drives the widen at
     // every compute-heavy scan seam; this pins the signal itself, the
-    // widen/no-widen branch, and the invalidation contract.
+    // widen/no-widen branch, and that a rewrite is seen with no call.
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_rg_").toString
     // ~20 MB of INCOMPRESSIBLE rows (hex-mixed tokens — repetitive
@@ -462,12 +475,11 @@ class StorageSpec extends AnyFunSuite {
       .collect().sortBy(_.getLong(0))
     assert(narrow.sameElements(wide), "widen changed row content")
 
-    // rewrite with tiny blocks → many row groups; the memo must serve
-    // the NEW layout only after the documented invalidation call
+    // rewrite with tiny blocks → many row groups; the memo is keyed on
+    // the file fingerprint, so the NEW layout is seen with no call
     write(64 * 1024)
-    assert(graft.io.Tables.effectiveScanSplits(spark, dir, "documents") == 1,
-      "row-group memo must hold until invalidateTableCache (immutable-dir contract)")
-    graft.io.Tables.invalidateTableCache(dir)
+    assert(graft.io.Tables.effectiveScanSplits(spark, dir, "documents") > 1,
+      "row-group memo served the old single-row-group layout after a rewrite")
     // Pin the split-planning confs for the eff >= par assertions (r13
     // ADVICE): with the session defaults, "a ~30 MB file plans >= par
     // splits" is an accident of defaultParallelism × 128 MB-partition
@@ -492,7 +504,6 @@ class StorageSpec extends AnyFunSuite {
     } finally {
       prevPins.foreach { case (k, v) =>
         v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
-      graft.io.Tables.invalidateTableCache(dir) // drop pinned-conf plans
     }
 
     // a Spark-written DIRECTORY layout must not break the footer read
