@@ -32,31 +32,81 @@ object Pipeline {
 
   private val TsFmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
 
-  /** Raw-zone snapshot writer width, derived from the SOURCE table's
-    * bytes (r16 optimization, guide §2.5 input skew / §6 file layout):
-    * the driver's single-row-group parquet files plan ONE scan task, so
-    * the raw CSV/JSON serialization (date_format per row) and the
-    * clean-zone parse-back both ran single-threaded — measured 738 ms
-    * for the sf0.1 lineitem CSV hop alone. One narrow round-robin
-    * exchange before the write spreads the text serialization and gives
-    * the raw zone a multi-file layout, which is what the clean-side
-    * reader needs for parallel parse. Scale-adaptive: ~1 MB of source
-    * parquet per writer task, clamped to the core count — at cluster
-    * SFs the scan is already wide and the clamp keeps this a no-op
-    * policy, never a fixed local constant. */
-  private def rawWriteWidth(s: SparkSession, dir: String, table: String): Int = {
-    val bytes = graft.streaming.Stream.tableBytes(dir, table)
-    math.max(1L, math.min(s.sparkContext.defaultParallelism.toLong,
-      bytes >> 20)).toInt
+  /** Raw object names carry the reference's `name_YYYYMMDD_HHMMSS`
+    * timestamp: a stale partial snapshot, then the latest complete one. */
+  private val StaleTs = "20010101_000000"
+  private val LatestTs = "20010102_000000"
+
+  /** The sheets payload: lineitem under messy headers, ts serialized
+    * explicitly (full control of the format on both sides of the CSV hop). */
+  private def messyActivity(li: DataFrame): DataFrame = li.select(
+    $"l_orderkey".as("L OrderKey"), $"l_partkey".as(" L PartKey"),
+    $"l_quantity".as("L Quantity "), date_format($"l_shipdate", TsFmt).as("L ShipDate"))
+
+  /** The API payload: events with ts serialized explicitly, same policy. */
+  private def envPayload(ev: DataFrame): DataFrame =
+    ev.select($"event_id", date_format($"ts", TsFmt).as("ts"),
+      $"user_id", $"event_type", $"value", $"props")
+
+  /** The one raw-object writer (JSON ignores `header`). Each object is
+    * written straight from the source scan, with no exchange. `rows` is
+    * the source's row count; with it, each file holds at most
+    * ceil(rows / cores) rows, so a single-task scan still lands `cores`
+    * files and the clean-side reader parses them on every core. A wide
+    * scan's tasks already hold fewer rows than the cap, so there the
+    * option changes nothing. Unknown rows: no cap, one file per scan
+    * task. */
+  private def writeRawObject(df: DataFrame, format: String, path: String,
+      rows: Option[Long] = None): Unit = {
+    val cores = df.sparkSession.sparkContext.defaultParallelism
+    val w = df.write.mode(SaveMode.Overwrite).format(format).option("header", "true")
+    rows.filter(_ > 0).fold(w)(n => w.option("maxRecordsPerFile", (n + cores - 1) / cores))
+      .save(path)
   }
 
+  /** The stale partial snapshot's rows: the scan's first 10. The global
+    * limit needs a single partition; `coalesce(1)` gives it one without
+    * an exchange, and its one task reads the scan in order and stops
+    * after 10 rows. */
+  private def first10(src: DataFrame): DataFrame = src.coalesce(1).limit(10)
+
+  /** One source's raw hop: the stale snapshot (taken before the
+    * projection), then the latest complete snapshot; returns the
+    * latest-picked object. */
+  private def rawHop(s: SparkSession, dir: String, table: String,
+      payload: DataFrame => DataFrame, format: String, root: String,
+      prefix: String): String = {
+    val src = Tables.table(s, dir, table)
+    writeRawObject(payload(first10(src)), format, s"$root/$prefix$StaleTs")
+    writeRawObject(payload(src), format, s"$root/$prefix$LatestTs",
+      Tables.tableRowCount(s, dir, table))
+    latestObject(root, prefix)
+  }
+
+  /** The API hop (O-8), shared by p1 and o8: env readings land as
+    * timestamped JSON objects (ref `ingestion/api_bmkg/bmkg_to_raw.py:49-57`
+    * puts the API payload at raw/api_bmkg/<name>_<ts>.json). Clean side:
+    * latest-pick, then a schema-first read (never inferSchema on a raw
+    * zone) with the explicit ts parse-back. */
+  private def envHop(s: SparkSession, dir: String, work: String): DataFrame =
+    s.read
+      .schema("event_id BIGINT, ts STRING, user_id BIGINT, event_type STRING, value DOUBLE, props STRING")
+      .json(rawHop(s, dir, "events", envPayload, "json", s"$work/raw-zone/api", "env_"))
+      .select($"event_id", to_timestamp($"ts", TsFmt).as("ts"),
+        $"user_id", $"event_type", $"value", $"props")
+
   /** Latest raw object by the name-embedded timestamp (O-13 on object
-    * names — the reference's list_objects + max(LastModified)). */
-  private def latestObject(root: String, prefix: String): String = {
+    * names — the reference's list_objects + max(LastModified)). Only
+    * entry names are matched, never the root's own path. */
+  private[graft] def latestObject(root: String, prefix: String): String = {
     val listing = Files.list(Paths.get(root))
-    try listing.toArray.map(_.toString)
-      .filter(_.contains(prefix)).max // total order on embedded ts
-    finally listing.close()
+    val names =
+      try listing.toArray.map(_.asInstanceOf[java.nio.file.Path].getFileName.toString)
+        .filter(_.startsWith(prefix))
+      finally listing.close()
+    if (names.isEmpty)
+      throw new IllegalStateException(s"no raw object named $prefix* under $root")
+    Paths.get(root, names.max).toString // total order on embedded ts
   }
 
   def run(s: SparkSession, dir: String, work: String): DataFrame = {
@@ -71,25 +121,12 @@ object Pipeline {
       scala.concurrent.ExecutionContext.fromExecutorService(pool)
 
     // sheets hop: timestamped immutable CSV snapshots (O-7) with messy
-    // headers, ts serialized explicitly (full control of the format on
-    // both sides of the CSV hop); then latest-object pick (O-13, the
-    // reference's list_objects+max(LastModified) done on the
-    // name-embedded ts), normalize/coerce/dropna, snapshot-overwrite (O-9).
+    // headers; then latest-object pick (O-13, the reference's
+    // list_objects+max(LastModified) done on the name-embedded ts),
+    // normalize/coerce/dropna, snapshot-overwrite (O-9).
     val sheetsHop = scala.concurrent.Future {
-      // widen BEFORE the date_format projection so the per-row text
-      // serialization runs post-exchange on every core (see rawWriteWidth)
-      val li = Tables.lineitem(s, dir)
-        .repartition(rawWriteWidth(s, dir, "lineitem"))
-      val messy = li.select(
-        $"l_orderkey".as("L OrderKey"), $"l_partkey".as(" L PartKey"),
-        $"l_quantity".as("L Quantity "), date_format($"l_shipdate", TsFmt).as("L ShipDate"))
-      def writeRaw(df: DataFrame, ts: String): Unit =
-        df.write.mode(SaveMode.Overwrite).option("header", "true")
-          .csv(s"$work/raw-zone/sheets/activity_$ts")
-      writeRaw(messy.limit(10), "20010101_000000") // stale partial snapshot
-      writeRaw(messy, "20010102_000000")           // latest complete snapshot
-
-      val latest = latestObject(s"$work/raw-zone/sheets", "activity_")
+      val latest = rawHop(s, dir, "lineitem", messyActivity, "csv",
+        s"$work/raw-zone/sheets", "activity_")
       val cleaned = Cleaning.dropNullKeys(
         Cleaning.normalizeColumns(
           s.read.option("header", "true")
@@ -104,28 +141,9 @@ object Pipeline {
       Snapshot.overwriteSnapshot(cleaned, s"$work/clean-zone/sheets/catatan_aktivitas")
     }
 
-    // API hop (O-8): env readings land as timestamped JSON objects (ref
-    // `ingestion/api_bmkg/bmkg_to_raw.py:49-57` puts the API payload at
-    // raw/api_bmkg/<name>_<ts>.json) — ts serialized explicitly so the
-    // hop is value-exact, same policy as the CSV hop. Clean side:
-    // latest-pick then schema-first read (never inferSchema on a raw
-    // zone) + explicit ts parse-back.
-    val apiHop = scala.concurrent.Future {
-      val ev = Tables.events(s, dir)
-        .repartition(rawWriteWidth(s, dir, "events"))
-      val evJson = ev.select($"event_id", date_format($"ts", TsFmt).as("ts"),
-        $"user_id", $"event_type", $"value", $"props")
-      def writeRawJson(df: DataFrame, ts: String): Unit =
-        df.write.mode(SaveMode.Overwrite).json(s"$work/raw-zone/api/env_$ts")
-      writeRawJson(evJson.limit(10), "20010101_000000") // stale partial payload
-      writeRawJson(evJson, "20010102_000000")           // latest complete payload
-
-      s.read
-        .schema("event_id BIGINT, ts STRING, user_id BIGINT, event_type STRING, value DOUBLE, props STRING")
-        .json(latestObject(s"$work/raw-zone/api", "env_"))
-        .select($"event_id", to_timestamp($"ts", TsFmt).as("ts"),
-          $"user_id", $"event_type", $"value", $"props")
-    }
+    // API hop (O-8), ts serialized explicitly so the hop is value-exact,
+    // same policy as the CSV hop
+    val apiHop = scala.concurrent.Future(envHop(s, dir, work))
 
     // fan-in: both hops must land before the prescriptive stage
     val cleanEv =
@@ -217,11 +235,8 @@ object Pipeline {
     // raw: only the STALE partial snapshot landed; crash hit before the
     // complete 20010102 object — retry must re-write and re-pick latest
     val li = Tables.lineitem(s, dir)
-    li.limit(10).select(
-        $"l_orderkey".as("L OrderKey"), $"l_partkey".as(" L PartKey"),
-        $"l_quantity".as("L Quantity "), date_format($"l_shipdate", TsFmt).as("L ShipDate"))
-      .write.mode(SaveMode.Overwrite).option("header", "true")
-      .csv(s"$work/raw-zone/sheets/activity_20010101_000000")
+    writeRawObject(messyActivity(first10(li)), "csv",
+      s"$work/raw-zone/sheets/activity_$StaleTs")
     // clean: overwrite died mid-write — truncated data, task-attempt
     // litter under _temporary, and no _SUCCESS marker
     val cleanPath = s"$work/clean-zone/sheets/catatan_aktivitas"
@@ -296,22 +311,14 @@ object Pipeline {
     finally old.close()
   }
 
-  /** O-8 standalone: the JSON raw hop in isolation — write the env
-    * payload as two timestamped JSON objects, latest-pick, schema-first
-    * read-back, then an exact-cents aggregate proving the round-trip
-    * lost nothing (same check the oracle runs on the source table). */
+  /** O-8 standalone: p1's JSON raw hop in isolation ([[envHop]]: two
+    * timestamped JSON objects, latest-pick, schema-first read-back),
+    * then an exact-cents aggregate proving the round-trip lost nothing
+    * (same check the oracle runs on the source table). */
   def o8JsonRaw(s: SparkSession, dir: String): DataFrame = {
     sweepOldWorkDirs()
     val work = Files.createTempDirectory("graft_pipeline_o8_").toString
-    val ev = Tables.events(s, dir)
-    val evJson = ev.select($"event_id", date_format($"ts", TsFmt).as("ts"),
-      $"user_id", $"event_type", $"value", $"props")
-    evJson.limit(10).write.mode(SaveMode.Overwrite).json(s"$work/raw-zone/api/env_20010101_000000")
-    evJson.write.mode(SaveMode.Overwrite).json(s"$work/raw-zone/api/env_20010102_000000")
-    s.read
-      .schema("event_id BIGINT, ts STRING, user_id BIGINT, event_type STRING, value DOUBLE, props STRING")
-      .json(latestObject(s"$work/raw-zone/api", "env_"))
-      .select(to_timestamp($"ts", TsFmt).as("ts"), $"event_type", $"value")
+    envHop(s, dir, work)
       .groupBy($"event_type")
       .agg(count(lit(1)).as("n"),
         sum(round($"value" * 100).cast("bigint")).as("sum_value_c"),

@@ -344,6 +344,75 @@ class StorageSpec extends AnyFunSuite {
     assert(new java.io.File(s"$cleanPath/_SUCCESS").exists)
   }
 
+  test("raw hop: every raw-zone write runs straight from the scan, no shuffle") {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import scala.jdk.CollectionConverters._
+    // every node of an executed plan: AQE final plans, query stages and
+    // subqueries included (the wrappers are childless to `collect`)
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => q +: nodes(q.plan)
+      case _ => p +: (p.children ++ p.subqueries).flatMap(nodes)
+    }
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[(String, SparkPlan)]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        nodes(qe.executedPlan).foreach {
+          case w: DataWritingCommandExec => w.cmd match {
+            case i: InsertIntoHadoopFsRelationCommand =>
+              writes.add(i.outputPath.toString -> qe.executedPlan)
+            case _ => ()
+          }
+          case _ => ()
+        }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val work = Files.createTempDirectory("graft_rawhop_spec_").toString
+    spark.listenerManager.register(listener)
+    def rawWrites = writes.asScala.toSeq.filter(_._1.contains("/raw-zone/"))
+    try {
+      graft.pipeline.Pipeline.run(spark, sf, work).collect()
+      // the listener posts on the async bus: wait for all four raw objects
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (rawWrites.size < 4 && System.nanoTime() < deadline) Thread.sleep(100)
+    } finally spark.listenerManager.unregister(listener)
+    val raw = rawWrites
+    assert(raw.map(_._1.replaceAll(".*/raw-zone/", "")).sorted == Seq(
+      "api/env_20010101_000000", "api/env_20010102_000000",
+      "sheets/activity_20010101_000000", "sheets/activity_20010102_000000"))
+    raw.foreach { case (path, plan) =>
+      assert(!nodes(plan).exists(_.isInstanceOf[ShuffleExchangeExec]),
+        s"the raw write to $path shuffles:\n$plan")
+    }
+    // the latest sheets object is cores-wide even from a one-task scan
+    val rows = graft.io.Tables.tableRowCount(spark, sf, "lineitem").get
+    val parts = new java.io.File(s"$work/raw-zone/sheets/activity_20010102_000000")
+      .listFiles.count(_.getName.startsWith("part-"))
+    assert(parts == math.min(spark.sparkContext.defaultParallelism.toLong, rows))
+    val stale = spark.read.option("header", "true")
+      .csv(s"$work/raw-zone/sheets/activity_20010101_000000")
+    assert(stale.count() == 10)
+    assert(spark.read.parquet(s"$work/clean-zone/sheets/catatan_aktivitas").count() ==
+      graft.io.Tables.lineitem(spark, sf).filter(col("l_shipdate").isNotNull).count())
+  }
+
+  test("latestObject matches entry names only, and names root and prefix when empty") {
+    // a work dir whose own path contains both prefixes: matching on the
+    // whole path would make every sibling a candidate
+    val root = Files.createTempDirectory("graft_activity_env_")
+    Seq("activity_20010101_000000", "activity_20010102_000000", "env_20990101_000000")
+      .foreach(n => Files.createDirectories(root.resolve(n)))
+    val pick = graft.pipeline.Pipeline.latestObject(root.toString, _: String)
+    assert(pick("activity_") == root.resolve("activity_20010102_000000").toString)
+    assert(pick("env_") == root.resolve("env_20990101_000000").toString)
+    val e = intercept[IllegalStateException](pick("graft_"))
+    assert(e.getMessage.contains(root.toString) && e.getMessage.contains("graft_*"))
+  }
+
   test("session memo: rewrites are seen with no invalidate call") {
     // Every memo keyed on documents.parquet — the table plan, the dedup
     // signatures, the temp views — must serve the latest write in the
