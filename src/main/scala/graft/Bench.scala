@@ -57,11 +57,12 @@ import org.apache.spark.sql.functions._
   *
   * Memo cold/warm split (round-12 advice): the dedup family shares
   * session memos keyed on the documents file — the signature table,
-  * the LSH pair list, and the cluster map (graft.io.SessionMemo; a
-  * rewrite is detected by the file fingerprint; no call needed). A
+  * the LSH pair list, the pair-overlap table and the cluster map
+  * (graft.io.SessionMemo; a rewrite is detected by the file
+  * fingerprint; no call needed). A
   * FRESH-JVM median therefore includes exactly one cold memo build in
   * its first rep (later reps are steady-state warm); IN-SUITE numbers
-  * are order-coupled — whichever consumer (d3-family, d6, d8, d16,
+  * are order-coupled — whichever consumer (d3-family, d6, d8, d14,
   * d19, t20) runs first in the suite pays the materialization and the
   * rest read it warm. Cross-round per-entry comparisons of memo
   * consumers must compare fresh-to-fresh (same cold-build placement)

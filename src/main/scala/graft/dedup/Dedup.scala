@@ -32,26 +32,17 @@ object Dedup {
     * every pair look similar; 3-grams give a ~vocab³ shingle space).
     * Spark arrays are 0-based; the oracle's DuckDB lists are 1-based —
     * both enumerate the same trigrams. */
-  /** `distinct = false` skips the dedup entirely — safe wherever the
-    * consumer is duplicate-insensitive (min() for MinHash signatures);
-    * set-cardinality consumers (Jaccard counts) need `distinct = true`.
-    * Since round 13 the distinct runs IN-ROW (`array_distinct` on the
-    * zipped k-grams — per-doc dedup is global dedup because the rows
-    * are doc-keyed), so neither variant exchanges anything: the old
-    * corpus-sized (doc_id, shingle) distinct shuffle is gone from
-    * every Jaccard consumer (d4/d8/d16/t20). */
-  private def shingles(s: SparkSession, dir: String, distinct: Boolean = true): DataFrame = {
+  /** The corpus-wide stream keeps per-doc duplicates: its one
+    * consumer, the MinHash signature min(), is duplicate-insensitive.
+    * Set-cardinality consumers (Jaccard, containment) shingle only
+    * their pair docs, through [[pairOverlap]]. */
+  private def shingles(s: SparkSession, dir: String): DataFrame =
     // Widened-when-starved (Tables.documentsWide): the shingle
-    // enumeration + in-row dedup + every consumer's map-side partial
-    // agg (MinHash mins, Jaccard counts) fuse into the SCAN stage,
-    // whose width is row-group-bound. All consumers are
-    // digest/min/count math — order-independent.
-    val docs = Tables.documentsWide(s, dir, Seq("doc_id", "text"))
-    if (distinct)
-      graft.functions.Shingles.kgramRowsDistinct(docs, Seq("doc_id"), k = 3)
-    else
-      graft.functions.Shingles.kgramRows(docs, Seq("doc_id"), k = 3)
-  }
+    // enumeration + the signature's map-side partial mins fuse into
+    // the SCAN stage, whose width is row-group-bound. min() is
+    // order-independent.
+    graft.functions.Shingles.kgramRows(
+      Tables.documentsWide(s, dir, Seq("doc_id", "text")), Seq("doc_id"), k = 3)
 
   /** D-1 — exact dedup: hash-groupBy on content. Output one row per
     * distinct content hash with the kept (minimum) doc_id and the
@@ -136,20 +127,19 @@ object Dedup {
   private def signatures(s: SparkSession, dir: String): DataFrame =
     SessionMemo(s, "signatures", docsInput(dir)) {
       val aggs = hashCols
-      shingles(s, dir, distinct = false)
+      shingles(s, dir)
         .groupBy($"doc_id").agg(aggs.head, aggs.tail: _*).persist()
     }
 
   /** Session cache of the LSH candidate PAIR list — the production
     * artifact a dedup pipeline materializes ONCE per corpus version
-    * and every downstream consumer reads (the d8 Jaccard verify, the
-    * d6 cluster map build, d16 containment, d19 cluster split, and
-    * t20's leakage audit all start from it). Before round 12 each of
-    * them re-ran the band-bucket join per consumer — d8 alone embeds
-    * the pair plan four times. The d3 GATE entry stays on the raw plan
-    * so its bench timing keeps measuring candidate generation itself. */
+    * and every downstream consumer reads (the d3 gate entry, the
+    * overlap table behind d8 and d14, the d6 cluster map build, d19
+    * cluster split, and t20's leakage audit all start from it). Before
+    * round 12 each of them re-ran the band-bucket join per consumer —
+    * d8 alone embedded the pair plan four times. */
   def lshPairsCached(s: SparkSession, dir: String): DataFrame =
-    SessionMemo(s, "pairs", docsInput(dir))(d3LshPairs(s, dir).persist())
+    SessionMemo(s, "pairs", docsInput(dir))(lshPairsPlan(s, dir).persist())
 
   /** Per-doc band signatures (Bands rows per doc). */
   private def banded(s: SparkSession, dir: String): DataFrame = {
@@ -234,45 +224,83 @@ object Dedup {
       .select(col(aName),
         explode(slice(col(arr), col("__i") + lit(2), size(col(arr)))).as(bName))
 
-  def d3LshPairs(s: SparkSession, dir: String): DataFrame =
+  /** The pair list's build plan; only [[lshPairsCached]] runs it. */
+  private def lshPairsPlan(s: SparkSession, dir: String): DataFrame =
     pairsFromSortedArray(d3Buckets(s, dir), "ids", "doc_a", "doc_b")
       .distinct()
       .orderBy($"doc_a", $"doc_b")
 
-  /** D-4 — exact n-gram Jaccard on a deterministic pair sample
-    * (every-100th doc vs the next 3 docs): intersection via shingle
-    * equi-join, union = |A|+|B|-∩. At scale the pair source is
-    * [[d3LshPairs]]; the sample keeps the gate output non-empty at
-    * small SF where no true near-dups exist. */
-  /** Shared pair-scoring subplan for d4/d16: the deterministic pair
-    * sample (every-100th doc anchored to the next 3 ids) with shingle
-    * sizes and intersection — (doc_a, doc_b, na, nb, n_inter). Pair
-    * generation is a UNION of three EQUI-joins (doc_b = doc_a + k,
-    * k ∈ 1..3) — hash-partitionable on doc_a, so it scales; the round-1
-    * crossJoin + range filter planned as a BroadcastNestedLoopJoin
-    * (O(N/100 × N), a 10⁹-doc scale-killer). */
-  private def anchorPairScores(s: SparkSession, dir: String): DataFrame = {
-    val sh = shingles(s, dir)
-    val sizes = sh.groupBy($"doc_id").agg(count(lit(1)).as("n"))
-    val anchors = sizes.filter($"doc_id" % 100 === 0)
-      .select($"doc_id".as("doc_a"), $"n".as("na"))
-    val pairs = (1 to 3).map { k =>
-        sizes.select(($"doc_id" - k).as("doc_a"), $"doc_id".as("doc_b"), $"n".as("nb"))
-      }.reduce(_ unionAll _)
-      .join(anchors, "doc_a")
-      .select($"doc_a", $"doc_b", $"na", $"nb")
-    val inter = sh.filter($"doc_id" % 100 === 0).select($"doc_id".as("doc_a"), $"shingle")
-      .join(sh.select($"doc_id".as("doc_b"), $"shingle"), "shingle")
-      .filter($"doc_b" > $"doc_a" && $"doc_b" <= $"doc_a" + 3)
-      .groupBy($"doc_a", $"doc_b").agg(count(lit(1)).as("n_inter"))
-    pairs.join(inter, Seq("doc_a", "doc_b"), "left")
+  /** D-3 gate entry: the memoized pair list, so a cold session builds
+    * it once whichever consumer asks first. */
+  def d3LshPairs(s: SparkSession, dir: String): DataFrame = lshPairsCached(s, dir)
+
+  /** Exact shingle overlap of each candidate pair — the verify half of
+    * filter-then-verify: `pairs (doc_a, doc_b)` →
+    * `(doc_a, doc_b, na, nb, n_inter)` with na = |A|, nb = |B| and
+    * n_inter = |A∩B| over distinct word-3-gram sets. Every Jaccard and
+    * containment score in the family is a ratio of these three counts.
+    *
+    * Only the docs named in `pairs` are shingled: their ids broadcast-
+    * semi-join into `docs` before the Generate, so the corpus-wide
+    * shingle stream never exists. Each doc's distinct shingles fold
+    * into ONE array (the rows are already distinct per doc, so the list
+    * is the set), the two sets join onto their pair row, and the
+    * intersection is counted in the row by `array_intersect` — no
+    * (pair, shingle) join and no per-pair regroup. A pair with a
+    * shingle-less side (fewer than 3 tokens) has no set and drops out
+    * on the inner join, as the oracles' inner join on `sizes` does.
+    *
+    * PRECONDITION (r12): the broadcast() hint bypasses
+    * autoBroadcastJoinThreshold — pair docs ~ corpus (pathological
+    * near-dup density) would build a corpus-sized broadcast rather than
+    * degrade to a shuffle. A sparse candidate set is the operating
+    * assumption of the whole LSH family; a deployment expecting the
+    * dense regime must drop the hint. */
+  private[graft] def pairOverlap(docs: DataFrame, pairs: DataFrame): DataFrame = {
+    val pairDocs = pairs.select($"doc_a".as("doc_id"))
+      .union(pairs.select($"doc_b".as("doc_id"))).distinct()
+    val sets = graft.functions.Shingles.kgramRowsDistinct(
+        docs.join(broadcast(pairDocs), Seq("doc_id"), "left_semi"), Seq("doc_id"), k = 3)
+      .groupBy($"doc_id").agg(collect_list($"shingle").as("sh"))
+    pairs
+      .join(sets.select($"doc_id".as("doc_a"), $"sh".as("sa")), "doc_a")
+      .join(sets.select($"doc_id".as("doc_b"), $"sh".as("sb")), "doc_b")
+      .select($"doc_a", $"doc_b",
+        size($"sa").cast("long").as("na"), size($"sb").cast("long").as("nb"),
+        size(array_intersect($"sa", $"sb")).cast("long").as("n_inter"))
   }
 
+  /** |A∩B| / |A∪B| over a [[pairOverlap]] row. */
+  private val jaccard = $"n_inter" / ($"na" + $"nb" - $"n_inter")
+
+  /** The overlap of every LSH candidate pair, memoized like
+    * [[lshPairsCached]]: d8 filters it and d14 joins its other two
+    * signals onto it, so the verify work runs once per corpus version. */
+  private def lshOverlap(s: SparkSession, dir: String): DataFrame =
+    SessionMemo(s, "overlap", docsInput(dir))(
+      pairOverlap(Tables.documents(s, dir), lshPairsCached(s, dir)).persist())
+
+  /** [[pairOverlap]] on the deterministic pair sample d4, d12 and d16
+    * score: every 100th doc anchored to the next 3 ids. The sample
+    * keeps the gate outputs non-empty at small SF, where no true
+    * near-dups exist; at scale the pair source is [[d3LshPairs]]. Pairs
+    * come from one in-row explode of the anchor ids — no join, so no
+    * nested loop (the round-1 crossJoin + range filter planned as a
+    * BroadcastNestedLoopJoin, O(N/100 × N)); an id past the corpus has
+    * no shingle set and drops out like a shingle-less doc. */
+  private def anchorOverlap(s: SparkSession, dir: String): DataFrame = {
+    val docs = Tables.documents(s, dir)
+    val pairs = docs.filter($"doc_id" % 100 === 0)
+      .select($"doc_id".as("doc_a"),
+        explode(array((1 to 3).map(k => $"doc_id" + k): _*)).as("doc_b"))
+    pairOverlap(docs, pairs)
+  }
+
+  /** D-4 — exact n-gram Jaccard on the anchor pair sample
+    * ([[anchorOverlap]]): ∩ / (|A| + |B| − ∩). */
   def d4NgramJaccard(s: SparkSession, dir: String): DataFrame =
-    anchorPairScores(s, dir)
-      .select($"doc_a", $"doc_b",
-        round(coalesce($"n_inter", lit(0)) / ($"na" + $"nb" - coalesce($"n_inter", lit(0))), 4)
-          .as("jaccard"))
+    anchorOverlap(s, dir)
+      .select($"doc_a", $"doc_b", round(jaccard, 4).as("jaccard"))
       .orderBy($"doc_a", $"doc_b")
 
   /** Containment threshold above which D-16 flags the smaller doc as
@@ -287,17 +315,15 @@ object Dedup {
     * small side is ~1. A doc whose shingles are ≥ [[ContainCap]]
     * contained in its pair partner is flagged `subsumed` — the
     * training-set policy is to drop the smaller of the two. Pair
-    * source and plan shape are d4's (anchor equi-joins; at scale the
-    * pair source is [[d3LshPairs]]); only the scoring changes, so the
-    * extra cost over Jaccard is zero — both divisions read the same
-    * (na, nb, n_inter) row. */
+    * source and plan shape are d4's ([[anchorOverlap]]); only the
+    * scoring changes, so the extra cost over Jaccard is zero — both
+    * divisions read the same (na, nb, n_inter) row. */
   def d16Containment(s: SparkSession, dir: String): DataFrame =
-    anchorPairScores(s, dir)
+    anchorOverlap(s, dir)
       .select($"doc_a", $"doc_b",
-        round(coalesce($"n_inter", lit(0)) / $"na", 4).as("contain_a"),
-        round(coalesce($"n_inter", lit(0)) / $"nb", 4).as("contain_b"),
-        (greatest(coalesce($"n_inter", lit(0)) / $"na",
-          coalesce($"n_inter", lit(0)) / $"nb") >= ContainCap).cast("int")
+        round($"n_inter" / $"na", 4).as("contain_a"),
+        round($"n_inter" / $"nb", 4).as("contain_b"),
+        (greatest($"n_inter" / $"na", $"n_inter" / $"nb") >= ContainCap).cast("int")
           .as("subsumed"))
       .orderBy($"doc_a", $"doc_b")
 
@@ -379,58 +405,13 @@ object Dedup {
   /** D-8 — the near-dup verdict: exact Jaccard on the LSH candidate
     * pairs (the real pipeline stage between candidate generation and
     * clustering — D-4's sampled variant keeps the gate non-empty at
-    * small SF). Shingle sets are joined only for candidate docs. */
-  def d8LshJaccard(s: SparkSession, dir: String): DataFrame = {
-    val pairs = lshPairsCached(s, dir)
-    // Candidate-doc filter FIRST (round 12): the scaladoc's "shingle
-    // sets are joined only for candidate docs" used to hold for the
-    // join OUTPUT but not the plan — the full-corpus (doc, shingle)
-    // stream was distinct'd and shuffled before the candidate join
-    // touched it. Candidates ≪ corpus is LSH's entire point, so the
-    // candidate doc list broadcast-semi-joins into the shingle SCAN:
-    // the corpus-wide stream never exchanges, and the distinct + size
-    // aggregation run over candidate rows only (measured at sf10:
-    // 91.8 s → see SCALING.md §round-12).
-    // PRECONDITION (r12 advice): the explicit broadcast() hint
-    // BYPASSES autoBroadcastJoinThreshold — there is no automatic
-    // fallback. Candidates ~ corpus (pathological near-dup density)
-    // would build a corpus-sized broadcast, not degrade to a shuffle;
-    // a deployment expecting that regime must drop the hint (AQE's
-    // runtime stats then choose broadcast exactly when candidates are
-    // small) and accept the corpus shuffle as the honest cost. The
-    // hint stays because a sparse candidate set is the operating
-    // assumption of the entire LSH family, and hintless planning with
-    // AQE off degrades THIS plan to the corpus-wide sort-merge the
-    // r12 rewrite removed.
-    val candDocs = pairs.select($"doc_a".as("doc_id"))
-      .union(pairs.select($"doc_b".as("doc_id"))).distinct()
-    // Candidate filter at the DOC level, dedup IN-ROW (r13): the old
-    // spelling joined candDocs into the exploded shingle stream and
-    // then ran a global (doc_id, shingle) DISTINCT — a candidate-
-    // shingle-sized exchange (~1.8 B rows at the fourth decade; it
-    // filled this box's disk). Filtering before the Generate touches
-    // ~400× fewer rows, and per-doc array_distinct is the same dedup
-    // with zero exchange. `sizes` partial-aggregates map-side to one
-    // row per doc (a doc's shingles never leave their partition), so
-    // its shuffle is doc-count-sized.
-    val sh = graft.functions.Shingles.kgramRowsDistinct(
-      Tables.documents(s, dir).join(broadcast(candDocs), "doc_id"),
-      Seq("doc_id"), k = 3)
-    val sizes = sh.groupBy($"doc_id").agg(count(lit(1)).as("n"))
-    val inter = pairs
-      .join(sh.select($"doc_id".as("doc_a"), $"shingle"), "doc_a")
-      .join(sh.select($"doc_id".as("doc_b"), $"shingle"), Seq("doc_b", "shingle"))
-      .groupBy($"doc_a", $"doc_b").agg(count(lit(1)).as("n_inter"))
-    pairs
-      .join(sizes.select($"doc_id".as("doc_a"), $"n".as("na")), "doc_a")
-      .join(sizes.select($"doc_id".as("doc_b"), $"n".as("nb")), "doc_b")
-      .join(inter, Seq("doc_a", "doc_b"), "left")
-      .select($"doc_a", $"doc_b",
-        round(coalesce($"n_inter", lit(0)) / ($"na" + $"nb" - coalesce($"n_inter", lit(0))), 4)
-          .as("jaccard"))
+    * small SF): a projection of the memoized LSH pair overlap
+    * ([[lshOverlap]]), which shingles candidate docs only. */
+  def d8LshJaccard(s: SparkSession, dir: String): DataFrame =
+    lshOverlap(s, dir)
+      .select($"doc_a", $"doc_b", round(jaccard, 4).as("jaccard"))
       .filter($"jaccard" >= 0.5)
       .orderBy($"doc_a", $"doc_b")
-  }
 
   /** D-6 — duplicate clustering: connected components over the LSH
     * candidate graph, so each near-dup group keeps exactly one doc.
@@ -613,7 +594,7 @@ object Dedup {
 
   /** Shared CTE chain ending in `lsh_pairs(doc_a, doc_b)` (used by the
     * D-3 oracle and as the edge set of the D-6 clustering oracle). */
-  /** DuckDB twin of [[anchorPairScores]]: CTE chain ending in
+  /** DuckDB twin of [[anchorOverlap]]: CTE chain ending in
     * pairs(doc_a, na, doc_b, nb) and inter(doc_a, doc_b, n_inter) —
     * shared by the d4 and d16 oracles. */
   private def anchorPairCtes: String =
@@ -877,32 +858,19 @@ object Dedup {
     * family, slicing bug) shows up as |16·n_inter − n_match·n_union|
     * mass. This is the dedup stack's index-quality gate, playing the
     * role s6's recall@k plays for the ANN index. Cost: the signature
-    * table (cached) + a pair-restricted shingle join — never all-pairs. */
+    * table (cached) + the anchor pairs' overlap ([[anchorOverlap]]) —
+    * never all-pairs. */
   def d12MinhashCalibration(s: SparkSession, dir: String): DataFrame = {
-    val sh = shingles(s, dir)
-    val sizes = sh.groupBy($"doc_id").agg(count(lit(1)).as("n"))
-    val anchors = sizes.filter($"doc_id" % 100 === 0)
-      .select($"doc_id".as("doc_a"), $"n".as("na"))
-    val pairs = (1 to 3).map { k =>
-        sizes.select(($"doc_id" - k).as("doc_a"), $"doc_id".as("doc_b"), $"n".as("nb"))
-      }.reduce(_ unionAll _)
-      .join(anchors, "doc_a")
     val sigs = signatures(s, dir)
     def side(tag: String) = sigs.select(
       ($"doc_id".as(s"doc_$tag") +: (0 until NumHashes).map(i => col(s"m$i").as(s"$tag$i"))): _*)
     val nMatch = (0 until NumHashes)
       .map(i => when(col(s"a$i") === col(s"b$i"), 1).otherwise(0))
       .reduce(_ + _)
-    val inter = sh.filter($"doc_id" % 100 === 0).select($"doc_id".as("doc_a"), $"shingle")
-      .join(sh.select($"doc_id".as("doc_b"), $"shingle"), "shingle")
-      .filter($"doc_b" > $"doc_a" && $"doc_b" <= $"doc_a" + 3)
-      .groupBy($"doc_a", $"doc_b").agg(count(lit(1)).as("n_inter0"))
-    pairs
+    anchorOverlap(s, dir)
       .join(side("a"), "doc_a").join(side("b"), "doc_b")
-      .join(inter, Seq("doc_a", "doc_b"), "left")
-      .select($"doc_a", $"doc_b", nMatch.as("n_match"),
-        coalesce($"n_inter0", lit(0L)).as("n_inter"),
-        ($"na" + $"nb" - coalesce($"n_inter0", lit(0L))).as("n_union"))
+      .select($"doc_a", $"doc_b", nMatch.as("n_match"), $"n_inter",
+        ($"na" + $"nb" - $"n_inter").as("n_union"))
       .orderBy($"doc_a", $"doc_b")
   }
 
@@ -948,29 +916,20 @@ object Dedup {
     * production dedup makes before dropping a document, since any
     * single signal has failure modes (Jaccard misses paraphrase,
     * cosine misses verbatim-with-noise, simhash saturates on tiny
-    * docs). All joins are candidate-restricted; no new all-pairs work
-    * anywhere. */
+    * docs). The Jaccard counts come from the memoized LSH pair overlap
+    * ([[lshOverlap]], candidate docs only); the simhash fingerprint is
+    * a per-doc projection of the corpus scan and the embeddings are
+    * read whole, each joined onto the candidate pairs — no all-pairs
+    * work anywhere. */
   def d14DedupVerdict(s: SparkSession, dir: String): DataFrame = {
     graft.functions.NativeFunctions.register(s)
-    val pairs = lshPairsCached(s, dir)
-    val sh = shingles(s, dir)
-    val sizes = sh.groupBy($"doc_id").agg(count(lit(1)).as("n"))
-    val inter = pairs
-      .join(sh.select($"doc_id".as("doc_a"), $"shingle"), "doc_a")
-      .join(sh.select($"doc_id".as("doc_b"), $"shingle"), Seq("doc_b", "shingle"))
-      .groupBy($"doc_a", $"doc_b").agg(count(lit(1)).as("n_inter"))
     val sim = simhashFingerprint(s, dir, bits = 16)
     val emb = Tables.embeddings(s, dir)
       .select($"vec_id", $"embedding".cast("array<double>").as("v"))
       .withColumn("nrm", sqrt(call_function("dot_f64", $"v", $"v")))
-    val jac = coalesce($"n_inter", lit(0L)) /
-      ($"na" + $"nb" - coalesce($"n_inter", lit(0L)))
     val ham = expr("cast(bit_count(sha ^ shb) AS int)")
     val cos = call_function("dot_f64", $"va", $"vb") / ($"nrma" * $"nrmb")
-    pairs
-      .join(sizes.select($"doc_id".as("doc_a"), $"n".as("na")), "doc_a")
-      .join(sizes.select($"doc_id".as("doc_b"), $"n".as("nb")), "doc_b")
-      .join(inter, Seq("doc_a", "doc_b"), "left")
+    lshOverlap(s, dir)
       .join(sim.select($"doc_id".as("doc_a"), $"simhash".as("sha")), "doc_a")
       .join(sim.select($"doc_id".as("doc_b"), $"simhash".as("shb")), "doc_b")
       .join(emb.select($"vec_id".as("doc_a"), $"v".as("va"), $"nrm".as("nrma")),
@@ -978,8 +937,8 @@ object Dedup {
       .join(emb.select($"vec_id".as("doc_b"), $"v".as("vb"), $"nrm".as("nrmb")),
         Seq("doc_b"), "left")
       .select($"doc_a", $"doc_b",
-        round(jac, 4).as("jaccard"), ham.as("hamming"), round(cos, 4).as("cosine"),
-        (when(jac >= 0.5, 1).otherwise(0) +
+        round(jaccard, 4).as("jaccard"), ham.as("hamming"), round(cos, 4).as("cosine"),
+        (when(jaccard >= 0.5, 1).otherwise(0) +
           when(ham <= 3, 1).otherwise(0) +
           when(cos >= 0.95, 1).otherwise(0)).as("n_signals"))
       .orderBy($"doc_a", $"doc_b")

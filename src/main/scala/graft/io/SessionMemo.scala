@@ -7,8 +7,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.storage.StorageLevel
 
 /** The one in-session memo: table plans, footer probes, the dedup
-  * signature / pair / cluster tables, the bucketed layout and the bloom
-  * sizing count all live here.
+  * signature / pair / pair-overlap / cluster tables, the bucketed
+  * layout and the bloom sizing count all live here.
   *
   * An entry is keyed on the session, a kind, a fingerprint of its input
   * paths and any extra value the result depends on (e.g. the split-

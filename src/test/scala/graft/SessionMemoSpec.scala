@@ -49,10 +49,10 @@ class SessionMemoSpec extends AnyFunSuite {
 
   test("session memo: curation builds sig, pairs, cluster once") {
     // four concurrent clients run the curation chain on ONE fresh
-    // session: the builds nest (cluster -> pairs -> signatures ->
-    // tables) and must neither deadlock nor run twice
+    // session: the builds nest (cluster or overlap -> pairs ->
+    // signatures -> tables) and must neither deadlock nor run twice
     val s = spark.newSession()
-    val kinds = Seq("signatures", "pairs", "clusters")
+    val kinds = Seq("signatures", "pairs", "clusters", "overlap")
     val before = kinds.map(SessionMemo.buildCount)
     val chain = Seq("d2_minhash_sig", "d3_lsh_pairs", "d8_lsh_jaccard",
       "d14_dedup_verdict", "d19_cluster_split", "p4_curation_pipeline")
@@ -65,7 +65,7 @@ class SessionMemoSpec extends AnyFunSuite {
       assert(counts.distinct.size == 1, s"clients disagree: $counts")
     } finally pool.shutdownNow()
     val built = kinds.map(SessionMemo.buildCount).zip(before).map { case (a, b) => a - b }
-    assert(built == Seq(1L, 1L, 1L), s"builds of ${kinds.mkString("/")}: $built")
+    assert(built == Seq(1L, 1L, 1L, 1L), s"builds of ${kinds.mkString("/")}: $built")
   }
 }
 
