@@ -163,6 +163,7 @@ object Bench {
   def session(cpus: String): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
+      .config(graft.io.LocalFs.conf)
       .config("spark.sql.shuffle.partitions", cpus)
       // initialPartitionNum is AQE's post-shuffle width CEILING —
       // coalescing only merges downward from it; nothing splits a

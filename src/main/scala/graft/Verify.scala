@@ -14,6 +14,7 @@ object Verify {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
+      .config(graft.io.LocalFs.conf)
       .config("spark.sql.shuffle.partitions", cpus)
       // same scale-proof AQE sizing as Bench (see Bench.scala): start
       // shuffles wide, let coalescing right-size them per data volume

@@ -56,7 +56,7 @@ object Pipeline {
     * scan's tasks already hold fewer rows than the cap, so there the
     * option changes nothing. Unknown rows: no cap, one file per scan
     * task. */
-  private def writeRawObject(df: DataFrame, format: String, path: String,
+  private[graft] def writeRawObject(df: DataFrame, format: String, path: String,
       rows: Option[Long] = None): Unit = {
     val cores = df.sparkSession.sparkContext.defaultParallelism
     val w = df.write.mode(SaveMode.Overwrite).format(format).option("header", "true")

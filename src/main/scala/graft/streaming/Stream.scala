@@ -56,8 +56,11 @@ object Stream {
     * operator (a stream-stream join keeps FOUR stores per partition:
     * left/right × keyToNumValues/keyWithIndexToValue), so this knob,
     * not data volume, dominates micro-batch cost on small drains —
-    * measured in SCALING.md §streaming-constant-costs. Env-overridable
-    * for profiling; the default 8 balances drain overhead against
+    * measured in SCALING.md §streaming-constant-costs. Each store
+    * commit costs ~9 ms on graft's `file:` filesystem
+    * ([[graft.io.LocalFs]]); the ~90 ms measured before it was mostly
+    * Hadoop's `chmod`/`readlink` processes. Env-overridable for
+    * profiling; the default 8 balances drain overhead against
     * parallelism at gate SFs. */
   private[graft] val DrainPartitions =
     sys.env.getOrElse("SPARK_GRAFT_DRAIN_PARTITIONS", "8")

@@ -163,6 +163,7 @@ object CodegenAudit {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val spark = SparkSession.builder()
       .appName("graft-codegen-audit").master("local[8]")
+      .config(graft.io.LocalFs.conf)
       .config("spark.sql.shuffle.partitions", 32)
       .config("spark.ui.enabled", false)
       .getOrCreate()

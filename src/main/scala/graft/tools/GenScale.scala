@@ -151,6 +151,7 @@ object GenScale {
       args(4).split(",").map(_.trim).filter(_.nonEmpty).toSeq else Nil
     val spark = SparkSession.builder()
       .master("local[32]")
+      .config(graft.io.LocalFs.conf)
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

@@ -57,6 +57,7 @@ import org.apache.spark.sql.functions._
 object SkewStress {
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder().master("local[32]")
+      .config(graft.io.LocalFs.conf)
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")

@@ -14,6 +14,7 @@ object SqlTwinProbe {
     val dir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
     val only = if (args.length > 1) Some(args(1).split(",").toSet) else None
     val spark = SparkSession.builder().master("local[8]")
+      .config(graft.io.LocalFs.conf)
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false").getOrCreate()

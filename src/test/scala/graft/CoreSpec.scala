@@ -11,10 +11,36 @@ import graft.prescriptive.Scoring
 object SparkTestSession {
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
+    .config(graft.io.LocalFs.conf)
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
+}
+
+/** Runs a main of this classpath in a child JVM with this JVM's flags
+  * and `-Xmx1g`, for specs that must stop a context or change the
+  * process environment. Returns the child's output; fails the calling
+  * test if it runs over five minutes or exits non-zero. */
+object ChildJvm extends org.scalatest.Assertions {
+  def run(main: String, args: Seq[String], env: Map[String, String] = Map.empty): String = {
+    val cmd = new java.util.ArrayList[String]()
+    cmd.add(System.getProperty("java.home") + "/bin/java")
+    java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments
+      .forEach(a => if (!a.startsWith("-Xmx")) cmd.add(a))
+    cmd.add("-Xmx1g")
+    cmd.add("-cp"); cmd.add(System.getProperty("java.class.path"))
+    cmd.add(main); args.foreach(cmd.add)
+    val out = java.nio.file.Files.createTempFile("child_jvm_", ".out")
+    val pb = new ProcessBuilder(cmd).redirectErrorStream(true).redirectOutput(out.toFile)
+    env.foreach { case (k, v) => pb.environment().put(k, v) }
+    val p = pb.start()
+    assert(p.waitFor(300, java.util.concurrent.TimeUnit.SECONDS), "child JVM timed out")
+    val log = new String(java.nio.file.Files.readAllBytes(out), "UTF-8")
+    java.nio.file.Files.delete(out)
+    assert(p.exitValue() == 0, log.takeRight(3000))
+    log
+  }
 }
 
 class CoreSpec extends AnyFunSuite {

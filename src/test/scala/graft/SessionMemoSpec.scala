@@ -27,20 +27,7 @@ class SessionMemoSpec extends AnyFunSuite {
   test("session memo: a stopped context leaves no entry") {
     // SparkContext.stop() on the shared test context would end every
     // other suite, so the stop runs in a child JVM of its own
-    val cmd = new java.util.ArrayList[String]()
-    cmd.add(System.getProperty("java.home") + "/bin/java")
-    java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments
-      .forEach(a => if (!a.startsWith("-Xmx")) cmd.add(a))
-    cmd.add("-Xmx1g")
-    cmd.add("-cp"); cmd.add(System.getProperty("java.class.path"))
-    cmd.add("graft.SessionMemoStopCheck"); cmd.add(sf)
-    val out = java.nio.file.Files.createTempFile("memo_stop_", ".out")
-    val p = new ProcessBuilder(cmd).redirectErrorStream(true)
-      .redirectOutput(out.toFile).start()
-    assert(p.waitFor(300, java.util.concurrent.TimeUnit.SECONDS), "child JVM timed out")
-    val log = new String(java.nio.file.Files.readAllBytes(out), "UTF-8")
-    java.nio.file.Files.delete(out)
-    assert(p.exitValue() == 0, log.takeRight(3000))
+    val log = ChildJvm.run("graft.SessionMemoStopCheck", Seq(sf))
     val counts = "MEMO before=(\\d+) after=(\\d+)".r.findFirstMatchIn(log)
       .getOrElse(fail("no MEMO line:\n" + log.takeRight(3000)))
     assert(counts.group(1).toInt > 0, "the child read nothing through the memo")
