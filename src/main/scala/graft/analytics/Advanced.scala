@@ -3,7 +3,6 @@ package graft.analytics
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 import graft.syntax._
@@ -341,20 +340,14 @@ object Advanced {
     * the same aggregation — watermark + append + file sink with bounded
     * state — is [[graft.streaming.Stream.st5SlidingWatermark]]. */
   def st2StreamSliding(s: SparkSession, dir: String): DataFrame = {
-    val name = "st2_out_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    graft.streaming.Stream.withDrainPartitions(s,
-        graft.streaming.Stream.drainPartitionsFor(s, graft.streaming.Stream.tableBytes(dir, "events"))) {
-      val q = Tables.eventsStream(s, dir)
-        .select($"ts", $"event_type")
-        .groupBy(window($"ts", "2 hours", "1 hour").as("w"), $"event_type")
-        .agg(count(lit(1)).as("n"))
-        .writeStream.outputMode("complete").format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow()).start()
-      graft.streaming.Stream.awaitDrained(q)
-    }
-    s.table(name)
+    import graft.streaming.Stream
+    val plan = Tables.eventsStream(s, dir)
+      .select($"ts", $"event_type")
+      .groupBy(window($"ts", "2 hours", "1 hour").as("w"), $"event_type")
+      .agg(count(lit(1)).as("n"))
       .select($"w.start".as("wstart"), $"event_type", $"n")
-      .orderBy($"wstart", $"event_type")
+    Stream.drain(s, Stream.workDir("graft_st2_"), plan, Stream.Sink.Memory("complete"),
+      Stream.tableBytes(dir, "events")).orderBy($"wstart", $"event_type")
   }
 
   val oracles: Map[String, String] = Map(

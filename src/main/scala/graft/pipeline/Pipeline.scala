@@ -448,8 +448,7 @@ object Pipeline {
   }
 
   def p5StreamingCuration(s: SparkSession, dir: String): DataFrame = {
-    sweepOldWorkDirs()
-    val work = Files.createTempDirectory("graft_p5_").toString
+    val work = graft.streaming.Stream.workDir("graft_p5_")
     Tables.documents(s, dir)
       .select($"doc_id", $"text", $"source", $"n_chars", ($"doc_id" % 8).as("pb"))
       .repartition($"pb").write.partitionBy("pb")
@@ -463,71 +462,65 @@ object Pipeline {
       f.setLastModified(1700000000000L + i * 60000L) }
     val admitted = s"$work/admitted"
     val seen = s"$work/seen"
-    graft.streaming.Stream.withDrainPartitions(s) {
-      val q = s.readStream
-        .schema("doc_id BIGINT, text STRING, source STRING, n_chars BIGINT, pb BIGINT")
-        .option("maxFilesPerTrigger", "2")
-        .parquet(s"$work/in")
-        .writeStream
-        .option("checkpointLocation", s"$work/chk")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val keep = graft.text.TextOps.qualityVerdict(batch)
-            .filter(col("keep") === 1).select(col("doc_id"))
-          val gated = batch.join(keep, Seq("doc_id"), "left_semi")
-            .withColumn("h", md5(col("text")))
-          val firstInBatch = gated.withColumn("rk",
-              org.apache.spark.sql.functions.row_number().over(
-                org.apache.spark.sql.expressions.Window
-                  .partitionBy(col("h")).orderBy(col("doc_id"))))
-            .filter(col("rk") === 1).drop("rk")
-          // Replay safety (the st15 crash-replay contract): a crash
-          // between the seen-hash write and the checkpoint commit makes
-          // the engine re-run this batchId, and a naive `b=*` glob would
-          // then anti-join the batch against its OWN failed-attempt
-          // hashes, emptying the replay. Only dirs with i < batchId are
-          // prior batches; the current id's dir (if present) is the
-          // failed attempt and must be ignored so overwrite repairs it.
-          val priorDirs = priorSeenDirs(seen, batchId)
-          val fresh =
-            if (priorDirs.nonEmpty)
-              firstInBatch.join(
-                s.read.schema("h STRING").parquet(priorDirs: _*),
-                Seq("h"), "left_anti")
-            else firstInBatch
-          // Two sinks (admitted zone + seen-hash index) from ONE
-          // computation (r16 optimization): previously each write
-          // action re-ran the whole gate → window-dedup → anti-join
-          // chain — the batch paid its curation cost twice. The
-          // admitted zone already carries `h` (only `pb` is dropped),
-          // so the seen index is a PROJECTION of the files just
-          // written: read them back instead of recomputing the chain.
-          // (An in-memory persist of `fresh` was measured FAR slower
-          // here — caching a micro-batch-derived plan re-materialized
-          // at ~4 s per sink action — so the zone read-back, which is
-          // also the crash-replay-faithful source, is the fix.)
-          fresh.drop("pb").write.mode("overwrite")
-            .format(graft.ops.Snapshot.ZoneFormat).save(s"$admitted/b=$batchId")
-          // explicit schema: a batch whose every doc was rejected or
-          // deduped writes an empty dir, and a schema-INFERRING read
-          // of it would throw instead of yielding the empty seen set.
-          // The schema is DERIVED from the writer plan (r16 ADVICE: a
-          // string literal duplicating the stream-source schema + `h`
-          // would silently null-fill — and so disable the anti join —
-          // if `h` were ever renamed/retyped upstream). NOTE: this
-          // read-side schema is a parquet-ism; a Delta ZoneFormat swap
-          // must drop it (Delta rejects user-specified read schemas) —
-          // see the note at Snapshot.ZoneFormat.
-          s.read.schema(fresh.drop("pb").schema)
-            .format(graft.ops.Snapshot.ZoneFormat)
-            .load(s"$admitted/b=$batchId").select(col("h"))
-            .write.mode("overwrite")
-            .format(graft.ops.Snapshot.ZoneFormat).save(s"$seen/b=$batchId")
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      graft.streaming.Stream.awaitDrained(q)
-    }
-    graft.ops.Snapshot.readZone(s, admitted)
+    val src = s.readStream
+      .schema("doc_id BIGINT, text STRING, source STRING, n_chars BIGINT, pb BIGINT")
+      .option("maxFilesPerTrigger", "2")
+      .parquet(s"$work/in")
+    graft.streaming.Stream.drain(s, work, src,
+      graft.streaming.Stream.Sink.Batches(admitted) { (batch, batchId) =>
+        val keep = graft.text.TextOps.qualityVerdict(batch)
+          .filter(col("keep") === 1).select(col("doc_id"))
+        val gated = batch.join(keep, Seq("doc_id"), "left_semi")
+          .withColumn("h", md5(col("text")))
+        val firstInBatch = gated.withColumn("rk",
+            org.apache.spark.sql.functions.row_number().over(
+              org.apache.spark.sql.expressions.Window
+                .partitionBy(col("h")).orderBy(col("doc_id"))))
+          .filter(col("rk") === 1).drop("rk")
+        // Replay safety (the st15 crash-replay contract): a crash
+        // between the seen-hash write and the checkpoint commit makes
+        // the engine re-run this batchId, and a naive `b=*` glob would
+        // then anti-join the batch against its OWN failed-attempt
+        // hashes, emptying the replay. Only dirs with i < batchId are
+        // prior batches; the current id's dir (if present) is the
+        // failed attempt and must be ignored so overwrite repairs it.
+        val priorDirs = priorSeenDirs(seen, batchId)
+        val fresh =
+          if (priorDirs.nonEmpty)
+            firstInBatch.join(
+              s.read.schema("h STRING").parquet(priorDirs: _*),
+              Seq("h"), "left_anti")
+          else firstInBatch
+        // Two sinks (admitted zone + seen-hash index) from ONE
+        // computation (r16 optimization): previously each write
+        // action re-ran the whole gate → window-dedup → anti-join
+        // chain — the batch paid its curation cost twice. The
+        // admitted zone already carries `h` (only `pb` is dropped),
+        // so the seen index is a PROJECTION of the files just
+        // written: read them back instead of recomputing the chain.
+        // (An in-memory persist of `fresh` was measured FAR slower
+        // here — caching a micro-batch-derived plan re-materialized
+        // at ~4 s per sink action — so the zone read-back, which is
+        // also the crash-replay-faithful source, is the fix.)
+        fresh.drop("pb").write.mode("overwrite")
+          .format(graft.ops.Snapshot.ZoneFormat).save(s"$admitted/b=$batchId")
+        // explicit schema: a batch whose every doc was rejected or
+        // deduped writes an empty dir, and a schema-INFERRING read
+        // of it would throw instead of yielding the empty seen set.
+        // The schema is DERIVED from the writer plan (r16 ADVICE: a
+        // string literal duplicating the stream-source schema + `h`
+        // would silently null-fill — and so disable the anti join —
+        // if `h` were ever renamed/retyped upstream). NOTE: this
+        // read-side schema is a parquet-ism; a Delta ZoneFormat swap
+        // must drop it (Delta rejects user-specified read schemas) —
+        // see the note at Snapshot.ZoneFormat.
+        s.read.schema(fresh.drop("pb").schema)
+          .format(graft.ops.Snapshot.ZoneFormat)
+          .load(s"$admitted/b=$batchId").select(col("h"))
+          .write.mode("overwrite")
+          .format(graft.ops.Snapshot.ZoneFormat).save(s"$seen/b=$batchId")
+        ()
+      }, graft.streaming.Stream.tableBytes(dir, "documents"))
       .groupBy($"source")
       .agg(count(lit(1)).as("n_docs"), sum($"n_chars").as("sum_chars"),
         expr("bit_xor(doc_id)").as("id_checksum"))

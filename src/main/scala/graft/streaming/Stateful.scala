@@ -4,7 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 import org.apache.spark.sql.types._
 
 
@@ -64,19 +64,20 @@ object Stateful {
 
   def st3StatefulSessions(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val name = "st3_out_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    graft.streaming.Stream.withDrainPartitions(s,
-        graft.streaming.Stream.drainPartitionsFor(s, graft.streaming.Stream.tableBytes(dir, "events"))) {
-      val q = graft.io.Tables.eventsStream(s, dir)
-        .select(col("user_id"), col("ts"), col("event_id"), col("value"))
-        .as[Ev]
-        .groupByKey(_.user_id)
-        .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(sessionize)
-        .writeStream.outputMode("append").format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow()).start()
-      graft.streaming.Stream.awaitDrained(q)
-    }
-    s.table(name).orderBy(col("user_id"), col("session_seq"))
+    val plan = eventsByUser(s, dir)
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(sessionize)
+      .toDF()
+    Stream.drain(s, Stream.workDir("graft_st3_"), plan, Stream.Sink.Memory("append"),
+      Stream.tableBytes(dir, "events")).orderBy(col("user_id"), col("session_seq"))
+  }
+
+  /** The event stream as typed [[Ev]] rows, grouped by user. */
+  private def eventsByUser(s: SparkSession, dir: String) = {
+    import s.implicits._
+    graft.io.Tables.eventsStream(s, dir)
+      .select(col("user_id"), col("ts"), col("event_id"), col("value"))
+      .as[Ev]
+      .groupByKey(_.user_id)
   }
 
   /** Running per-user totals carried in a [[ValueState]] between
@@ -117,21 +118,12 @@ object Stateful {
     * the replay into batches. Oracle = the batch per-user aggregation. */
   def st10TransformWithState(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val name = "st10_out_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    graft.streaming.Stream.withRocksDBStateStore(s) {
-      graft.streaming.Stream.withDrainPartitions(s,
-        graft.streaming.Stream.drainPartitionsFor(s, graft.streaming.Stream.tableBytes(dir, "events"), storeWeight = 4)) {
-        val q = graft.io.Tables.eventsStream(s, dir)
-          .select(col("user_id"), col("ts"), col("event_id"), col("value"))
-          .as[Ev]
-          .groupByKey(_.user_id)
-          .transformWithState(new RunningTotals, TimeMode.None(), OutputMode.Update())
-          .writeStream.outputMode("update").format("memory").queryName(name)
-          .trigger(Trigger.AvailableNow()).start()
-        graft.streaming.Stream.awaitDrained(q)
-      }
-    }
-    s.table(name).groupBy(col("user_id"))
+    val plan = eventsByUser(s, dir)
+      .transformWithState(new RunningTotals, TimeMode.None(), OutputMode.Update())
+      .toDF()
+    Stream.drain(s, Stream.workDir("graft_st10_"), plan, Stream.Sink.Memory("update"),
+      Stream.tableBytes(dir, "events"), Stream.StateKind.RocksDB)
+      .groupBy(col("user_id"))
       .agg(max(col("n_events")).as("n_events"),
         expr("max_by(sum_value_c, n_events)").as("sum_value_c"))
       .orderBy(col("user_id"))

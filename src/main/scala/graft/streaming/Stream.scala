@@ -12,7 +12,8 @@ import graft.ops.Snapshot
   * (SURVEY.md §7.2 item 7): the reference's cron micro-batches
   * (`dags/hygiene_dag.py:18,53`) become a file-source stream with
   * `Trigger.AvailableNow` — same code path a live stream would use,
-  * drained synchronously over the existing parquet.
+  * drained synchronously over the existing parquet. Every entry (and
+  * st2, st3, st10, p5 outside this object) drains through [[drain]].
   *
   * Two shapes of the same hourly aggregation:
   *   - st1: complete mode into a memory sink — a drain-everything gate
@@ -30,66 +31,65 @@ import graft.ops.Snapshot
   */
 object Stream {
 
-  /** Stateful streaming cost is per-PARTITION, not per-row: every
-    * micro-batch opens, commits, and snapshots one state store per
-    * shuffle partition per stateful operator, so the session default
-    * (32, sized for batch scans) pays 32 store lifecycles per batch
-    * where the drained data needs a handful. Scope the drains to 8 —
-    * at production stream volumes the right number is high again, and
-    * it is a per-QUERY knob precisely because the checkpoint pins it
-    * at first start (a restarted query keeps its original state
-    * partitioning regardless of the session conf). Results are
-    * partitioning-invariant; only store overhead changes.
-    *
-    * The conf key is SESSION-global, so the set/restore is guarded by a
-    * lock: two concurrent drains serialize instead of racing the
-    * restore (second drain observing 8, or the restore clobbering the
-    * other's restore). A concurrent BATCH query on the same session
-    * could still plan its shuffles at 8 while a drain holds the lock —
-    * the gate and bench run entries sequentially, so that interleaving
-    * does not occur here; a truly concurrent deployment should use
-    * `SparkSession.newSession()` per worker (per-session conf view)
-    * rather than share one session across threads. */
-  private val drainLock = new Object
-  /** State partition count for drained streams. A stateful streaming
-    * operator instantiates one state store per partition per stateful
-    * operator (a stream-stream join keeps FOUR stores per partition:
-    * left/right × keyToNumValues/keyWithIndexToValue), so this knob,
-    * not data volume, dominates micro-batch cost on small drains —
-    * measured in SCALING.md §streaming-constant-costs. Each store
-    * commit costs ~9 ms on graft's `file:` filesystem
-    * ([[graft.io.LocalFs]]); the ~90 ms measured before it was mostly
-    * Hadoop's `chmod`/`readlink` processes. Env-overridable for
-    * profiling; the default 8 balances drain overhead against
-    * parallelism at gate SFs. */
-  private[graft] val DrainPartitions =
-    sys.env.getOrElse("SPARK_GRAFT_DRAIN_PARTITIONS", "8")
+  /** What a drained query keeps in state. It sets the store weight
+    * [[drainPartitionsFor]] widens by and, for RocksDB, the provider. */
+  private[graft] sealed abstract class StateKind(val storeWeight: Int)
+  private[graft] object StateKind {
+    /** No state, or one store per stateful operator and partition on
+      * the session's provider. */
+    case object Plain extends StateKind(1)
+    /** A stream-stream join: four stores per partition (left/right ×
+      * keyToNumValues/keyWithIndexToValue). */
+    case object JoinStores extends StateKind(4)
+    /** The RocksDB provider, pinned for the drain over any session
+      * setting: a native instance open per store. For state that must
+      * NOT live on executor heap: the default HDFSBackedStateStoreProvider
+      * keeps every retained store version as on-heap object maps whose
+      * UnsafeRows pin their shared backing pages — measured on st12's
+      * session store at ~103 KB of reported residency PER SESSION
+      * (329 MB for 3,200 sessions at sf10; 44.2 GB for 320 k at sf100,
+      * where it killed a 48 g heap). RocksDB holds the same state native
+      * + on-disk: st10's store on the same panel was 2.3 MB for 1.5 M
+      * keys. It is also the provider a production cluster runs, so
+      * executor sizing follows throughput, not the open-state set. */
+    case object RocksDB extends StateKind(4)
+  }
+
+  /** Where a drained query writes, and what [[drain]] returns. */
+  private[graft] sealed trait Sink
+  private[graft] object Sink {
+    /** Append into the parquet zone `$work/out`, returned read back. */
+    case object Zone extends Sink
+    /** An in-memory table in output `mode`. The drain returns the table
+      * and drops its temp view, so the rows live as long as the
+      * returned frame and no longer. */
+    final case class Memory(mode: String) extends Sink
+    /** `f` on every micro-batch, in output `mode`; `f` writes the zone
+      * at `out`, returned read back. */
+    final case class Batches(out: String, mode: String = "append")(
+        val f: (DataFrame, Long) => Unit) extends Sink
+  }
 
   /** Input-size-aware state partition count (round-9 scale-stress
-    * finding): the pinned 8 is right while per-partition state stays
-    * small — the state-store instance floor dominates micro-batch cost
-    * at gate SFs — but at 10× the largest gate SF the flagged streaming
-    * entries went super-linear (st4 exp 1.21, st14 1.24 over the
-    * sf1→sf10 decade) because 8 partitions were carrying 10× the rows
-    * each: the sort/state work per partition outgrew the cores left
-    * idle. Production rule, now encoded instead of prose: partitions =
-    * clamp(8, cores, inputBytes / (24 MB · storeWeight)). Every driver
-    * SF stays at 8 (≤ 16 MB inputs — bit-identical gate), sf10's
-    * 1.1 GB events file gets the full core count for aggregations.
-    * `storeWeight` is the per-partition state-store instance factor:
-    * stream-stream joins keep FOUR stores per partition (the measured
-    * cliff above — at 32 partitions st11 regressed 8.6→11.7 s median
-    * at sf10 while the 1-store aggregations sped up 5×), and RocksDB
-    * providers pay a native instance open per store, so those drains
-    * pass 4 and widen four times more conservatively. Env override
-    * still wins (profiling). */
+    * finding): 8 is right while per-partition state stays small — the
+    * state-store instance floor dominates micro-batch cost at gate SFs
+    * (each store commit costs ~9 ms on graft's `file:` filesystem,
+    * [[graft.io.LocalFs]]) — but at 10× the largest gate SF the flagged
+    * streaming entries went super-linear (st4 exp 1.21, st14 1.24 over
+    * the sf1→sf10 decade) because 8 partitions were carrying 10× the
+    * rows each. Rule: partitions = clamp(8, cores, inputBytes /
+    * (24 MB · storeWeight)). Every driver SF stays at 8 (≤ 16 MB
+    * inputs — bit-identical gate). `storeWeight` is the per-partition
+    * state-store instance factor of the drain's [[StateKind]]:
+    * stream-stream joins keep FOUR stores per partition (at 32
+    * partitions st11 regressed 8.6→11.7 s median at sf10 while the
+    * 1-store aggregations sped up 5×), and RocksDB opens a native
+    * instance per store, so both widen four times more conservatively. */
   private[graft] def drainPartitionsFor(s: SparkSession, bytes: Long,
-      storeWeight: Int = 1): String =
-    sys.env.getOrElse("SPARK_GRAFT_DRAIN_PARTITIONS", {
-      val cores = math.max(8, s.sparkContext.defaultParallelism)
-      math.min(math.max(8L, bytes / ((24L << 20) * storeWeight)), cores.toLong)
-        .toString
-    })
+      storeWeight: Int): Int = {
+    val cores = math.max(8, s.sparkContext.defaultParallelism)
+    math.min(math.max(8L, bytes / ((24L << 20) * storeWeight)), cores.toLong).toInt
+  }
   /** st13's broadcast-vs-shuffle crossover, in EVENTS-TABLE bytes (the
     * proxy [[st13StreamAntiJoin]] sizes its seen side by: seen = the
     * event_id column of 1/3 of the rows). Measured r15 A/B at sf100
@@ -134,93 +134,128 @@ object Stream {
     * finding 2: the PlanSpec CodegenFallback sweep skipped every
     * entry whose work happens inside a micro-batch, so a lambda HOF
     * landing in a streaming projection would go unnoticed — exactly
-    * the blind spot the rule exists to close). Every drain site in
-    * Stream/Stateful/Pipeline funnels through [[awaitDrained]], which
-    * hands the still-warm query handle to this observer BEFORE
-    * stopping it — synchronous, so unlike a StreamingQueryListener
-    * there is no race against AvailableNow termination. Null (the
-    * default) in production: one volatile read per DRAIN, not per
-    * row. */
+    * the blind spot the rule exists to close). Every streaming query
+    * graft starts runs through [[drain]], which hands the still-warm
+    * query handle to this observer BEFORE stopping it — synchronous,
+    * so unlike a StreamingQueryListener there is no race against
+    * AvailableNow termination. Observer errors never fail the drain.
+    * Null (the default) in production: one volatile read per DRAIN,
+    * not per row. */
   private[graft] val drainObserver =
     new java.util.concurrent.atomic.AtomicReference[
       org.apache.spark.sql.streaming.StreamingQuery => Unit]()
 
-  /** The one drain protocol: await AvailableNow termination, expose
-    * the handle to [[drainObserver]] (observer errors never fail the
-    * drain), stop. */
-  private[graft] def awaitDrained(
-      q: org.apache.spark.sql.streaming.StreamingQuery): Unit =
-    try q.awaitTermination() finally {
-      val cb = drainObserver.get()
-      if (cb != null) scala.util.Try(cb(q))
-      q.stop()
-    }
-
-  private[graft] def withDrainPartitions[A](s: SparkSession,
-      partitions: String = DrainPartitions)(body: => A): A =
-    drainLock.synchronized {
-      val key = "spark.sql.shuffle.partitions"
-      val prev = s.conf.get(key)
-      s.conf.set(key, partitions)
-      try body finally s.conf.set(key, prev)
-    }
-
-  /** Drain an append-mode streaming plan into a fresh parquet file sink
-    * with `Trigger.AvailableNow` and read the result back — the shared
-    * protocol of every production-shape entry (st4/5/6/8/9/11/12). The
-    * final no-data micro-batch advances the watermark past the drained
-    * data, flushing everything state can release before termination. */
-  /** `finalFlush = false` skips the trailing no-data micro-batch. Only
-    * legal for plans whose OUTPUT is complete after the data batches —
-    * eager-emitting joins (inner/semi): their matches ship as they
-    * arrive and the flush batch would only evict state that query
-    * teardown discards anyway. Windowed aggregations and outer joins
-    * MUST keep the flush (it is what finalizes closed windows /
-    * null-extends unmatched rows past the watermark) — measured ~0.7 s
-    * per drain at gate scale, ~30% of a join drain's wall clock
-    * (SCALING.md §streaming-constant-costs). */
-  private def drainAppend(s: SparkSession, plan: DataFrame, prefix: String,
-      finalFlush: Boolean = true, inputBytes: Long = 0L,
-      joinStores: Boolean = false): DataFrame = {
+  /** A fresh `graft_*` work dir for one entry's drains (checkpoint,
+    * sink, staged input), after sweeping the stale ones. */
+  private[graft] def workDir(prefix: String): String = {
     graft.pipeline.Pipeline.sweepOldWorkDirs()
-    val work = java.nio.file.Files.createTempDirectory(prefix).toString
-    withDrainPartitions(s,
-        drainPartitionsFor(s, inputBytes, if (joinStores) 4 else 1)) {
-      val key = "spark.sql.streaming.noDataMicroBatches.enabled"
-      val prev = s.conf.get(key)
-      s.conf.set(key, finalFlush.toString)
-      try {
-        val q = plan.writeStream
-          .outputMode("append").format(Snapshot.ZoneFormat)
-          .option("path", s"$work/out")
-          .option("checkpointLocation", s"$work/chk")
-          .trigger(Trigger.AvailableNow()).start()
-        awaitDrained(q)
-      } finally s.conf.set(key, prev)
-    }
-    Snapshot.readZone(s, s"$work/out")
+    java.nio.file.Files.createTempDirectory(prefix).toString
   }
 
-  def st1StreamHourly(s: SparkSession, dir: String): DataFrame = {
-    val name = "st1_out_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val stream = graft.io.Tables.eventsStream(s, dir)
+  /** Drains serialize on this lock: the confs [[drain]] sets are
+    * SESSION-global, so two concurrent drains would otherwise race
+    * each other's restore. A concurrent BATCH query on the same session
+    * could still plan its shuffles at a drain's width while the lock
+    * is held — the gate and bench run entries sequentially, so that
+    * interleaving does not occur here; a truly concurrent deployment
+    * should use `SparkSession.newSession()` per worker. */
+  private val drainLock = new Object
+
+  /** The one drain protocol: every streaming entry (st1–st21, p5)
+    * supplies a plan and a sink, and this starts the query on
+    * checkpoint `$work/chk` with `Trigger.AvailableNow`, awaits it,
+    * hands it to [[drainObserver]] and stops it. For the query only,
+    * under [[drainLock]], it sets:
+    *  - the state partition count (`spark.sql.shuffle.partitions`):
+    *    `width`, by default [[drainPartitionsFor]] of `inputBytes` and
+    *    `state`'s store weight. Stateful cost is per PARTITION, not per
+    *    row: every micro-batch opens, commits and snapshots one store
+    *    per partition per stateful operator, so the batch default (32)
+    *    would pay 32 store lifecycles where a gate drain needs 8. The
+    *    checkpoint pins it at first start (a restarted query keeps its
+    *    original partitioning). Results are partitioning-invariant.
+    *  - `spark.sql.streaming.noDataMicroBatches.enabled` = `flush`. The
+    *    final no-data micro-batch advances the watermark past the
+    *    drained data, flushing everything state can release before
+    *    termination. `flush = false` skips it — only legal for plans
+    *    whose OUTPUT is complete after the data batches: eager-emitting
+    *    joins (inner/semi) ship matches as they arrive, and the flush
+    *    would only evict state that teardown discards anyway. Windowed
+    *    aggregations and outer joins MUST keep it (it finalizes closed
+    *    windows / null-extends unmatched rows past the watermark) —
+    *    measured ~0.7 s per drain at gate scale, ~30% of a join drain's
+    *    wall clock (SCALING.md §streaming-constant-costs).
+    *  - the RocksDB provider for [[StateKind.RocksDB]]. */
+  private[graft] def drain(s: SparkSession, work: String, plan: DataFrame,
+      sink: Sink, inputBytes: Long, state: StateKind = StateKind.Plain,
+      flush: Boolean = true, width: Option[Int] = None): DataFrame = {
+    val name = java.nio.file.Paths.get(work).getFileName.toString
+    val confs = Seq(
+      "spark.sql.shuffle.partitions" ->
+        width.getOrElse(drainPartitionsFor(s, inputBytes, state.storeWeight)).toString,
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> flush.toString) ++
+      (if (state == StateKind.RocksDB) Seq(
+        "spark.sql.streaming.stateStore.providerClass" ->
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      else Nil)
+    val writer = sink match {
+      case Sink.Zone => plan.writeStream.outputMode("append")
+        .format(Snapshot.ZoneFormat).option("path", s"$work/out")
+      case Sink.Memory(mode) =>
+        plan.writeStream.outputMode(mode).format("memory").queryName(name)
+      case b: Sink.Batches => plan.writeStream.outputMode(b.mode).foreachBatch(b.f)
+    }
+    drainLock.synchronized {
+      val prev = confs.map { case (k, v) =>
+        val p = s.conf.getOption(k); s.conf.set(k, v); k -> p }
+      try {
+        val q = writer.option("checkpointLocation", s"$work/chk")
+          .trigger(Trigger.AvailableNow()).start()
+        try q.awaitTermination() finally {
+          val cb = drainObserver.get()
+          if (cb != null) scala.util.Try(cb(q))
+          q.stop()
+        }
+      } finally prev.foreach {
+        case (k, Some(v)) => s.conf.set(k, v)
+        case (k, None) => s.conf.unset(k)
+      }
+    }
+    sink match {
+      case Sink.Zone => Snapshot.readZone(s, s"$work/out")
+      case Sink.Memory(_) =>
+        // analyzed here, so the frame holds the sink after the view goes
+        val table = s.table(name)
+        s.catalog.dropTempView(name)
+        table
+      case b: Sink.Batches =>
+        // a source with no matching files drains zero batches: say so,
+        // not PATH_NOT_FOUND on the work dir
+        require(java.nio.file.Files.exists(java.nio.file.Paths.get(b.out)),
+          s"$name: no micro-batch wrote ${b.out}")
+        Snapshot.readZone(s, b.out)
+    }
+  }
+
+  /** The events stream's `event_id`, `ts`, `event_type` and `value`. */
+  private def eventFeed(s: SparkSession, dir: String): DataFrame =
+    graft.io.Tables.eventsStream(s, dir)
       .select($"event_id", $"ts", $"event_type", $"value")
-      .groupBy(window($"ts", "1 hour").as("w"), $"event_type")
-      // cents policy: exact integer sum, immune to partition-order
-      // reassociation (same rule as every batch money sum)
+
+  /** Hourly event count and cents sum per event type, keyed by window
+    * start. Cents policy: an exact integer sum, immune to
+    * partition-order reassociation (same rule as every batch money
+    * sum). A watermark on `ts`, if any, is the caller's. */
+  private def hourlyCents(events: DataFrame): DataFrame =
+    events.groupBy(window($"ts", "1 hour").as("w"), $"event_type")
       .agg(count(lit(1)).as("n"),
         sum(round($"value" * 100).cast("bigint")).as("sum_value_c"))
-    withDrainPartitions(s,
-        drainPartitionsFor(s, tableBytes(dir, "events"))) {
-      val q = stream.writeStream
-        .outputMode("complete").format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow()).start()
-      awaitDrained(q)
-    }
-    s.table(name)
       .select($"w.start".as("wstart"), $"event_type", $"n", $"sum_value_c")
+
+  def st1StreamHourly(s: SparkSession, dir: String): DataFrame =
+    drain(s, workDir("graft_st1_"), hourlyCents(eventFeed(s, dir)),
+      Sink.Memory("complete"), tableBytes(dir, "events"))
       .orderBy($"wstart", $"event_type")
-  }
 
   /** ST-14 — streaming top-k: the lambda-free production pattern for a
     * ranking no append-mode stream can maintain incrementally. The
@@ -246,13 +281,7 @@ object Stream {
   /** The unstarted st4 streaming plan — exposed so StreamingSpec can
     * assert the event-time watermark is present in the analyzed plan. */
   def st4Plan(s: SparkSession, dir: String): DataFrame =
-    graft.io.Tables.eventsStream(s, dir)
-      .select($"event_id", $"ts", $"event_type", $"value")
-      .withWatermark("ts", "2 hours")
-      .groupBy(window($"ts", "1 hour").as("w"), $"event_type")
-      .agg(count(lit(1)).as("n"),
-        sum(round($"value" * 100).cast("bigint")).as("sum_value_c"))
-      .select($"w.start".as("wstart"), $"event_type", $"n", $"sum_value_c")
+    hourlyCents(eventFeed(s, dir).withWatermark("ts", "2 hours"))
 
   /** ST-4 — watermarked append-mode hourly aggregation into a file sink,
     * drained with `Trigger.AvailableNow` (the production streaming shape;
@@ -261,8 +290,8 @@ object Stream {
     * watermark past the drained data and flushes every closed window to
     * the sink before the query terminates. */
   def st4WatermarkAppend(s: SparkSession, dir: String): DataFrame =
-    drainAppend(s, st4Plan(s, dir), "graft_st4_",
-      inputBytes = tableBytes(dir, "events")).orderBy($"wstart", $"event_type")
+    drain(s, workDir("graft_st4_"), st4Plan(s, dir), Sink.Zone,
+      tableBytes(dir, "events")).orderBy($"wstart", $"event_type")
 
   /** ST-5 — the SLIDING-window production shape (st2's 2h/1h windows,
     * but watermarked + append + file sink instead of complete-mode into
@@ -277,7 +306,8 @@ object Stream {
       .agg(count(lit(1)).as("n"),
         sum(round($"value" * 100).cast("bigint")).as("sum_value_c"))
       .select($"w.start".as("wstart"), $"event_type", $"n", $"sum_value_c")
-    drainAppend(s, plan, "graft_st5_", inputBytes = tableBytes(dir, "events")).orderBy($"wstart", $"event_type")
+    drain(s, workDir("graft_st5_"), plan, Sink.Zone, tableBytes(dir, "events"))
+      .orderBy($"wstart", $"event_type")
   }
 
   /** ST-6 — at-least-once ingest dedup: the source is unioned with
@@ -288,18 +318,15 @@ object Stream {
     * the dedup store), and a watermarked windowed aggregation runs
     * downstream — two chained stateful operators in one append-mode
     * query. The result must equal st4's single-delivery aggregation. */
-  def st6StreamDedup(s: SparkSession, dir: String): DataFrame = {
-    def src = graft.io.Tables.eventsStream(s, dir)
-      .select($"event_id", $"ts", $"event_type", $"value")
-    val plan = src.union(src)
+  def st6StreamDedup(s: SparkSession, dir: String): DataFrame =
+    drain(s, workDir("graft_st6_"), st6Plan(s, dir), Sink.Zone,
+      tableBytes(dir, "events")).orderBy($"wstart", $"event_type")
+
+  /** The unstarted st6 plan: two chained stateful operators. */
+  private[graft] def st6Plan(s: SparkSession, dir: String): DataFrame =
+    hourlyCents(eventFeed(s, dir).union(eventFeed(s, dir))
       .withWatermark("ts", "2 hours")
-      .dropDuplicatesWithinWatermark("event_id")
-      .groupBy(window($"ts", "1 hour").as("w"), $"event_type")
-      .agg(count(lit(1)).as("n"),
-        sum(round($"value" * 100).cast("bigint")).as("sum_value_c"))
-      .select($"w.start".as("wstart"), $"event_type", $"n", $"sum_value_c")
-    drainAppend(s, plan, "graft_st6_", inputBytes = tableBytes(dir, "events")).orderBy($"wstart", $"event_type")
-  }
+      .dropDuplicatesWithinWatermark("event_id"))
 
   /** ST-7 — `foreachBatch` idempotent-upsert sink: the production
     * serving pattern (Delta MERGE per micro-batch, emulated on parquet
@@ -312,41 +339,28 @@ object Stream {
     * (update mode re-emits every window that ever changed; state
     * itself stays watermark-bounded). */
   def st7ForeachBatchUpsert(s: SparkSession, dir: String): DataFrame = {
-    graft.pipeline.Pipeline.sweepOldWorkDirs()
-    val work = java.nio.file.Files.createTempDirectory("graft_st7_").toString
+    val work = workDir("graft_st7_")
     val target = s"$work/serving"
-    withDrainPartitions(s,
-        drainPartitionsFor(s, tableBytes(dir, "events"))) {
-    val q = graft.io.Tables.eventsStream(s, dir)
+    val plan = hourlyCents(graft.io.Tables.eventsStream(s, dir)
       .select($"ts", $"event_type", $"value")
-      .withWatermark("ts", "2 hours")
-      .groupBy(window($"ts", "1 hour").as("w"), $"event_type")
-      .agg(count(lit(1)).as("n"),
-        sum(round($"value" * 100).cast("bigint")).as("sum_value_c"))
-      .select($"w.start".as("wstart"), $"event_type", $"n", $"sum_value_c")
-      .writeStream.outputMode("update")
-      .option("checkpointLocation", s"$work/chk")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val keyed = batch.withColumn("k", concat_ws("|", $"wstart", $"event_type"))
-        val tPath = java.nio.file.Paths.get(target)
-        val next =
-          if (java.nio.file.Files.exists(tPath)) {
-            val cur = Snapshot.readZone(s, target)
-              .withColumn("k", concat_ws("|", $"wstart", $"event_type"))
-            graft.maintenance.Maintenance.mergeUpsert(cur, keyed, "k")
-          } else keyed
-        val staging = java.nio.file.Paths.get(s"$work/staging_$batchId")
-        next.drop("k").write.mode("overwrite").format(Snapshot.ZoneFormat).save(staging.toString)
-        // write-aside then swap: never overwrite the dir being read
-        val old = java.nio.file.Paths.get(s"$work/old_$batchId")
-        if (java.nio.file.Files.exists(tPath)) java.nio.file.Files.move(tPath, old)
-        java.nio.file.Files.move(staging, tPath)
-        ()
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    awaitDrained(q)
-    }
-    Snapshot.readZone(s, target).orderBy($"wstart", $"event_type")
+      .withWatermark("ts", "2 hours"))
+    drain(s, work, plan, Sink.Batches(target, "update") { (batch, batchId) =>
+      val keyed = batch.withColumn("k", concat_ws("|", $"wstart", $"event_type"))
+      val tPath = java.nio.file.Paths.get(target)
+      val next =
+        if (java.nio.file.Files.exists(tPath)) {
+          val cur = Snapshot.readZone(s, target)
+            .withColumn("k", concat_ws("|", $"wstart", $"event_type"))
+          graft.maintenance.Maintenance.mergeUpsert(cur, keyed, "k")
+        } else keyed
+      val staging = java.nio.file.Paths.get(s"$work/staging_$batchId")
+      next.drop("k").write.mode("overwrite").format(Snapshot.ZoneFormat).save(staging.toString)
+      // write-aside then swap: never overwrite the dir being read
+      val old = java.nio.file.Paths.get(s"$work/old_$batchId")
+      if (java.nio.file.Files.exists(tPath)) java.nio.file.Files.move(tPath, old)
+      java.nio.file.Files.move(staging, tPath)
+      ()
+    }, tableBytes(dir, "events")).orderBy($"wstart", $"event_type")
   }
 
   /** ST-8 — stream-static join: the streaming event feed enriched
@@ -368,7 +382,8 @@ object Stream {
       .agg(count(lit(1)).as("n"),
         sum(round($"value" * 100).cast("bigint")).as("sum_value_c"))
       .select($"w.start".as("wstart"), $"c_mktsegment", $"n", $"sum_value_c")
-    drainAppend(s, plan, "graft_st8_", inputBytes = tableBytes(dir, "events")).orderBy($"wstart", $"c_mktsegment")
+    drain(s, workDir("graft_st8_"), plan, Sink.Zone, tableBytes(dir, "events"))
+      .orderBy($"wstart", $"c_mktsegment")
   }
 
   /** ST-13 — stream-static ANTI join: the streaming incremental-ingest
@@ -414,32 +429,25 @@ object Stream {
     val seen = graft.io.Tables.events(s, dir)
       .filter($"event_id" % 3 === 0).select($"event_id")
     val seenJoinSide = if (broadcastSeen) broadcast(seen) else seen
-    val plan = graft.io.Tables.eventsStream(s, dir)
+    val plan = hourlyCents(graft.io.Tables.eventsStream(s, dir)
       .select($"ts", $"event_id", $"event_type", $"value")
       .withWatermark("ts", "2 hours")
-      .join(seenJoinSide, Seq("event_id"), "left_anti")
-      .groupBy(window($"ts", "1 hour").as("w"), $"event_type")
-      .agg(count(lit(1)).as("n"),
-        sum(round($"value" * 100).cast("bigint")).as("sum_value_c"))
-      .select($"w.start".as("wstart"), $"event_type", $"n", $"sum_value_c")
-    drainAppend(s, plan, "graft_st13_", inputBytes = tableBytes(dir, "events")).orderBy($"wstart", $"event_type")
+      .join(seenJoinSide, Seq("event_id"), "left_anti"))
+    drain(s, workDir("graft_st13_"), plan, Sink.Zone, tableBytes(dir, "events"))
+      .orderBy($"wstart", $"event_type")
   }
 
-  /** ST-9 — stream-STREAM join: per-user attribution pairing each
-    * `view` with the `purchase`s that follow it within 1 hour — two
-    * live feeds joined on (user, time range). Both sides carry
-    * watermarks and the join condition bounds event-time distance, so
-    * each side's buffered state is evicted once the other side's
-    * watermark passes the reachable range — bounded state, the ONLY
-    * safe stream-stream join shape at scale (an unconstrained join
-    * buffers both streams forever). Inner join emits matches as they
-    * arrive (the watermark gates eviction, not emission), so the
-    * drained output equals the batch join; the gate aggregates pairs
-    * per user. */
-  /** The unstarted st9 join plan — exposed so StreamingSpec can assert
-    * BOTH sides carry event-time watermarks (the state-boundedness
-    * precondition for a stream-stream join). */
-  def st9Plan(s: SparkSession, dir: String): DataFrame = {
+  /** Each `view` joined (`how`) with the `purchase`s of the same user
+    * that follow it within 1 hour — two live feeds joined on (user,
+    * time range), the sides of the streaming join matrix (st9 inner,
+    * st11 left-outer, st19 right-outer, st20 semi, st21 full-outer).
+    * Both sides carry watermarks and the join condition bounds
+    * event-time distance, so each side's buffered state is evicted
+    * once the other side's watermark passes the reachable range —
+    * bounded state, the ONLY safe stream-stream join shape at scale
+    * (an unconstrained join buffers both streams forever). */
+  private[graft] def viewPurchaseJoin(s: SparkSession, dir: String,
+      how: String): DataFrame = {
     def side(tpe: String, tag: String) =
       graft.io.Tables.eventsStream(s, dir)
         .filter($"event_type" === tpe)
@@ -448,12 +456,24 @@ object Stream {
         .withWatermark(s"${tag}_ts", "2 hours")
     side("view", "v").join(side("purchase", "p"),
       $"v_user" === $"p_user" &&
-        $"p_ts" >= $"v_ts" && $"p_ts" <= $"v_ts" + expr("INTERVAL 1 HOUR"))
+        $"p_ts" >= $"v_ts" && $"p_ts" <= $"v_ts" + expr("INTERVAL 1 HOUR"), how)
   }
 
+  /** The unstarted st9 join plan — exposed so StreamingSpec can assert
+    * BOTH sides carry event-time watermarks (the state-boundedness
+    * precondition for a stream-stream join). */
+  def st9Plan(s: SparkSession, dir: String): DataFrame =
+    viewPurchaseJoin(s, dir, "inner")
+
+  /** ST-9 — stream-STREAM join: per-user attribution pairing each
+    * `view` with the `purchase`s that follow it within 1 hour
+    * ([[viewPurchaseJoin]]). Inner join emits matches as they arrive
+    * (the watermark gates eviction, not emission), so the drained
+    * output equals the batch join; the gate aggregates pairs per
+    * user. */
   def st9StreamStreamJoin(s: SparkSession, dir: String): DataFrame = {
-    drainAppend(s, st9Plan(s, dir), "graft_st9_", finalFlush = false,
-      inputBytes = tableBytes(dir, "events"), joinStores = true)
+    drain(s, workDir("graft_st9_"), st9Plan(s, dir), Sink.Zone,
+      tableBytes(dir, "events"), StateKind.JoinStores, flush = false)
       .groupBy($"v_user".as("user_id"))
       .agg(count(lit(1)).as("n_pairs"),
         countDistinct($"v_id").as("n_views_converted"),
@@ -472,18 +492,8 @@ object Stream {
     * watermarked → both buffers bounded; matched views emit eagerly
     * (like inner), so the oracle is the plain batch EXISTS. */
   def st20StreamSemiJoin(s: SparkSession, dir: String): DataFrame = {
-    def side(tpe: String, tag: String) =
-      graft.io.Tables.eventsStream(s, dir)
-        .filter($"event_type" === tpe)
-        .select($"user_id".as(s"${tag}_user"), $"ts".as(s"${tag}_ts"),
-          $"event_id".as(s"${tag}_id"))
-        .withWatermark(s"${tag}_ts", "2 hours")
-    val joined = side("view", "v").join(side("purchase", "p"),
-      $"v_user" === $"p_user" &&
-        $"p_ts" >= $"v_ts" && $"p_ts" <= $"v_ts" + expr("INTERVAL 1 HOUR"),
-      "left_semi")
-    drainAppend(s, joined, "graft_st20_", finalFlush = false,
-      inputBytes = tableBytes(dir, "events"), joinStores = true)
+    drain(s, workDir("graft_st20_"), viewPurchaseJoin(s, dir, "left_semi"),
+      Sink.Zone, tableBytes(dir, "events"), StateKind.JoinStores, flush = false)
       .groupBy($"v_user".as("user_id"))
       .agg(count(lit(1)).as("n_converted_views"),
         expr("bit_xor(v_id)").as("view_id_checksum"))
@@ -501,17 +511,8 @@ object Stream {
     * views still inside the watermark stay in state and do not appear —
     * exactly what a live pipeline sees. */
   def st11StreamOuterJoin(s: SparkSession, dir: String): DataFrame = {
-    def side(tpe: String, tag: String) =
-      graft.io.Tables.eventsStream(s, dir)
-        .filter($"event_type" === tpe)
-        .select($"user_id".as(s"${tag}_user"), $"ts".as(s"${tag}_ts"),
-          $"event_id".as(s"${tag}_id"))
-        .withWatermark(s"${tag}_ts", "2 hours")
-    val joined = side("view", "v").join(side("purchase", "p"),
-      $"v_user" === $"p_user" &&
-        $"p_ts" >= $"v_ts" && $"p_ts" <= $"v_ts" + expr("INTERVAL 1 HOUR"),
-      "left_outer")
-    drainAppend(s, joined, "graft_st11_", inputBytes = tableBytes(dir, "events"), joinStores = true)
+    drain(s, workDir("graft_st11_"), viewPurchaseJoin(s, dir, "left_outer"),
+      Sink.Zone, tableBytes(dir, "events"), StateKind.JoinStores)
       .groupBy($"v_user".as("user_id"))
       .agg(sum(when($"p_id".isNotNull, 1L).otherwise(0L)).as("n_pairs"),
         sum(when($"p_id".isNull, 1L).otherwise(0L)).as("n_unmatched_closed"))
@@ -529,17 +530,8 @@ object Stream {
     * st21's combined form. Oracle: batch right join, unmatched rows
     * gated by the min-across-sides final watermark. */
   def st19StreamRightOuter(s: SparkSession, dir: String): DataFrame = {
-    def side(tpe: String, tag: String) =
-      graft.io.Tables.eventsStream(s, dir)
-        .filter($"event_type" === tpe)
-        .select($"user_id".as(s"${tag}_user"), $"ts".as(s"${tag}_ts"),
-          $"event_id".as(s"${tag}_id"))
-        .withWatermark(s"${tag}_ts", "2 hours")
-    val joined = side("view", "v").join(side("purchase", "p"),
-      $"v_user" === $"p_user" &&
-        $"p_ts" >= $"v_ts" && $"p_ts" <= $"v_ts" + expr("INTERVAL 1 HOUR"),
-      "right_outer")
-    drainAppend(s, joined, "graft_st19_", inputBytes = tableBytes(dir, "events"), joinStores = true)
+    drain(s, workDir("graft_st19_"), viewPurchaseJoin(s, dir, "right_outer"),
+      Sink.Zone, tableBytes(dir, "events"), StateKind.JoinStores)
       .groupBy($"p_user".as("user_id"))
       .agg(sum(when($"v_id".isNotNull, 1L).otherwise(0L)).as("n_pairs"),
         sum(when($"v_id".isNull, 1L).otherwise(0L)).as("n_purchases_unmatched"))
@@ -560,17 +552,8 @@ object Stream {
     * watermarks on BOTH sides plus the interval condition are what
     * make full-outer stream state evictable at all. */
   def st21StreamFullOuterJoin(s: SparkSession, dir: String): DataFrame = {
-    def side(tpe: String, tag: String) =
-      graft.io.Tables.eventsStream(s, dir)
-        .filter($"event_type" === tpe)
-        .select($"user_id".as(s"${tag}_user"), $"ts".as(s"${tag}_ts"),
-          $"event_id".as(s"${tag}_id"))
-        .withWatermark(s"${tag}_ts", "2 hours")
-    val joined = side("view", "v").join(side("purchase", "p"),
-      $"v_user" === $"p_user" &&
-        $"p_ts" >= $"v_ts" && $"p_ts" <= $"v_ts" + expr("INTERVAL 1 HOUR"),
-      "full_outer")
-    drainAppend(s, joined, "graft_st21_", inputBytes = tableBytes(dir, "events"), joinStores = true)
+    drain(s, workDir("graft_st21_"), viewPurchaseJoin(s, dir, "full_outer"),
+      Sink.Zone, tableBytes(dir, "events"), StateKind.JoinStores)
       .groupBy(coalesce($"v_user", $"p_user").as("user_id"))
       .agg(
         sum(when($"v_id".isNotNull && $"p_id".isNotNull, 1L).otherwise(0L))
@@ -582,30 +565,6 @@ object Stream {
       .orderBy($"user_id")
   }
 
-  /** Run `body` with the RocksDB state store provider pinned on the
-    * session, previous value restored after. Shared by the entries
-    * whose per-partition state must NOT live on executor heap: the
-    * default HDFSBackedStateStoreProvider keeps every retained store
-    * version as on-heap object maps whose UnsafeRows pin their shared
-    * backing pages — measured on st12's session store at ~103 KB of
-    * reported residency PER SESSION (329 MB for 3,200 sessions at
-    * sf10; 44.2 GB for 320 k at sf100, where it killed a 48 g heap —
-    * the r14 verdict's one `weak`). RocksDB holds the same state
-    * native + on-disk: st10's store on the same panel was 2.3 MB for
-    * 1.5 M keys. This IS the provider a production cluster runs;
-    * pinning it here makes executor sizing follow throughput, not the
-    * open-state set. */
-  private[graft] def withRocksDBStateStore[A](s: SparkSession)(body: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
-  }
-
   /** ST-12 — STREAMING `session_window` (30-min gap) with watermark +
     * append + file sink: Spark's dedicated session-merge state (late
     * events extend/merge sessions while inside the watermark) — the
@@ -613,7 +572,7 @@ object Stream {
     * when plain gap sessions are all that's needed. A session emits
     * once the watermark passes its end (last event + gap); trailing
     * open sessions stay in state, exactly like st4's open windows.
-    * State lives in RocksDB ([[withRocksDBStateStore]]): session
+    * State lives in RocksDB ([[StateKind.RocksDB]]): session
     * stores hold the WHOLE open-session set, the one streaming state
     * class that grows with corpus instead of window count — on the
     * default on-heap provider that set was the r14 panel's 44 GB
@@ -627,9 +586,8 @@ object Stream {
         sum(round($"value" * 100).cast("bigint")).as("sum_value_c"))
       .select($"user_id", $"w.start".as("session_start"),
         $"w.end".as("session_end"), $"n_events", $"sum_value_c")
-    withRocksDBStateStore(s) {
-      drainAppend(s, plan, "graft_st12_", inputBytes = tableBytes(dir, "events"))
-    }.orderBy($"user_id", $"session_start")
+    drain(s, workDir("graft_st12_"), plan, Sink.Zone, tableBytes(dir, "events"),
+      StateKind.RocksDB).orderBy($"user_id", $"session_start")
   }
 
   /** ST-15 — streaming curation admission: the documents feed drained
@@ -643,34 +601,21 @@ object Stream {
     * not. At 100 TB this is the admission loop at the ingest edge —
     * each arrival interval pays gate cost ∝ batch, never corpus. */
   def st15StreamCuration(s: SparkSession, dir: String): DataFrame = {
-    graft.pipeline.Pipeline.sweepOldWorkDirs()
-    val work = java.nio.file.Files.createTempDirectory("graft_st15_").toString
+    val work = workDir("graft_st15_")
     val admitted = s"$work/admitted"
-    withDrainPartitions(s,
-        drainPartitionsFor(s, tableBytes(dir, "documents"), storeWeight = 4)) {
-      val q = graft.io.Tables.documentsStream(s, dir)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", s"$work/chk")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val keep = graft.text.TextOps.qualityVerdict(batch)
-            .filter(col("keep") === 1).select(col("doc_id"))
-          // one OVERWRITTEN partition-style dir per batch id: a batch
-          // replayed after a crash-before-checkpoint lands on the same
-          // path instead of appending twice — the write is idempotent
-          // per batch, which is what makes the blind zone append safe
-          batch.join(keep, Seq("doc_id"), "left_semi")
-            .write.mode("overwrite").format(Snapshot.ZoneFormat)
-            .save(s"$admitted/b=$batchId")
-          ()
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      awaitDrained(q)
-    }
-    // loud guard: a source dir with no documents.parquet drains zero
-    // batches — surface THAT, not a PATH_NOT_FOUND on the temp dir
-    require(java.nio.file.Files.exists(java.nio.file.Paths.get(admitted)),
-      s"st15: no documents micro-batch arrived from $dir (pathGlobFilter=documents.parquet)")
-    Snapshot.readZone(s, admitted)
+    drain(s, work, graft.io.Tables.documentsStream(s, dir),
+      Sink.Batches(admitted) { (batch, batchId) =>
+        val keep = graft.text.TextOps.qualityVerdict(batch)
+          .filter(col("keep") === 1).select(col("doc_id"))
+        // one OVERWRITTEN partition-style dir per batch id: a batch
+        // replayed after a crash-before-checkpoint lands on the same
+        // path instead of appending twice — the write is idempotent
+        // per batch, which is what makes the blind zone append safe
+        batch.join(keep, Seq("doc_id"), "left_semi")
+          .write.mode("overwrite").format(Snapshot.ZoneFormat)
+          .save(s"$admitted/b=$batchId")
+        ()
+      }, tableBytes(dir, "documents"))
       .groupBy($"source")
       .agg(count(lit(1)).as("n_docs"), sum($"n_chars").as("sum_chars"),
         expr("bit_xor(doc_id)").as("id_checksum"))
@@ -691,17 +636,8 @@ object Stream {
     * columns (count/sum), so the same oracle discipline applies as for
     * any batch entry. */
   def st16StateStoreRead(s: SparkSession, dir: String): DataFrame = {
-    graft.pipeline.Pipeline.sweepOldWorkDirs()
-    val work = java.nio.file.Files.createTempDirectory("graft_st16_").toString
-    withDrainPartitions(s,
-        drainPartitionsFor(s, tableBytes(dir, "events"))) {
-      val q = st4Plan(s, dir).writeStream
-        .outputMode("append").format(Snapshot.ZoneFormat)
-        .option("path", s"$work/out")
-        .option("checkpointLocation", s"$work/chk")
-        .trigger(Trigger.AvailableNow()).start()
-      awaitDrained(q)
-    }
+    val work = workDir("graft_st16_")
+    drain(s, work, st4Plan(s, dir), Sink.Zone, tableBytes(dir, "events"))
     s.read.format("statestore").load(s"$work/chk")
       .select($"key.window.start".as("wstart"),
         $"key.event_type".as("event_type"),
@@ -725,31 +661,22 @@ object Stream {
     * same two lines bound every recovery drain to cluster-sized
     * batches. */
   def st17RateLimitedDrain(s: SparkSession, dir: String): DataFrame = {
-    graft.pipeline.Pipeline.sweepOldWorkDirs()
-    val work = java.nio.file.Files.createTempDirectory("graft_st17_").toString
+    val work = workDir("graft_st17_")
     graft.io.Tables.documents(s, dir)
       .select($"doc_id", $"n_chars", ($"doc_id" % 8).as("pb"))
       .repartition($"pb").write.partitionBy("pb")
       .mode("overwrite").parquet(s"$work/in")
-    withDrainPartitions(s,
-        drainPartitionsFor(s, tableBytes(dir, "documents"), storeWeight = 4)) {
-      val src = s.readStream
-        .schema("doc_id BIGINT, n_chars BIGINT, pb BIGINT")
-        .option("maxFilesPerTrigger", "2")
-        .parquet(s"$work/in")
-      val q = src.writeStream
-        .option("checkpointLocation", s"$work/chk")
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          b.agg(count(lit(1)).as("n_rows"), sum($"n_chars").as("sum_chars"),
-              countDistinct($"pb").as("n_buckets"))
-            .withColumn("batch_id", lit(id))
-            .write.mode("append").parquet(s"$work/agg")
-          ()
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      awaitDrained(q)
-    }
-    s.read.parquet(s"$work/agg").agg(
+    val src = s.readStream
+      .schema("doc_id BIGINT, n_chars BIGINT, pb BIGINT")
+      .option("maxFilesPerTrigger", "2")
+      .parquet(s"$work/in")
+    drain(s, work, src, Sink.Batches(s"$work/agg") { (b, id) =>
+      b.agg(count(lit(1)).as("n_rows"), sum($"n_chars").as("sum_chars"),
+          countDistinct($"pb").as("n_buckets"))
+        .withColumn("batch_id", lit(id))
+        .write.mode("append").format(Snapshot.ZoneFormat).save(s"$work/agg")
+      ()
+    }, tableBytes(dir, "documents")).agg(
       count(lit(1)).as("n_batches"),
       sum($"n_rows").as("n_rows"),
       sum($"sum_chars").as("sum_chars"),
@@ -775,8 +702,7 @@ object Stream {
     * property a 100 TB pipeline actually banks on: any drain can die
     * and restart without reprocessing or double-counting. */
   def st18CheckpointRecovery(s: SparkSession, dir: String): DataFrame = {
-    graft.pipeline.Pipeline.sweepOldWorkDirs()
-    val work = java.nio.file.Files.createTempDirectory("graft_st18_").toString
+    val work = workDir("graft_st18_")
     val ev = graft.io.Tables.events(s, dir)
       .select($"event_id", $"ts", $"event_type", $"value")
     ev.repartitionByRange(4, $"ts").write.parquet(s"$work/stage")
@@ -791,29 +717,16 @@ object Stream {
       }
     // Capture the schema BEFORE the publishes empty the stage dir.
     val srcSchema = s.read.parquet(s"$work/stage").schema
-    def drainOnce(): Unit = withDrainPartitions(s) {
-      val plan = s.readStream
-        .schema(srcSchema)
-        .parquet(s"$work/src")
-        .withWatermark("ts", "2 hours")
-        .groupBy(window($"ts", "1 hour").as("w"), $"event_type")
-        .agg(count(lit(1)).as("n"),
-          sum(round($"value" * 100).cast("bigint")).as("sum_value_c"))
-        .select($"w.start".as("wstart"), $"event_type", $"n", $"sum_value_c")
-      val q = plan.writeStream
-        .outputMode("append").format(Snapshot.ZoneFormat)
-        .option("path", s"$work/out")
-        .option("checkpointLocation", s"$work/chk")
-        .trigger(Trigger.AvailableNow()).start()
-      awaitDrained(q)
-    }
+    def drainOnce(): DataFrame = drain(s, work,
+      hourlyCents(s.readStream.schema(srcSchema).parquet(s"$work/src")
+        .withWatermark("ts", "2 hours")),
+      Sink.Zone, tableBytes(dir, "events"))
     // The outage script: half the backlog, drain, the rest, drain
     // again on the same checkpoint.
     publish(parts.take(2), 1700000000000L)
     drainOnce()
     publish(parts.drop(2), 1700003600000L)
-    drainOnce()
-    Snapshot.readZone(s, s"$work/out").orderBy($"wstart", $"event_type")
+    drainOnce().orderBy($"wstart", $"event_type")
   }
 
   val oracles: Map[String, String] = Map(

@@ -395,8 +395,8 @@ class PlanSpec extends AnyFunSuite {
     // projection executed inside a micro-batch was invisible to it.
     // This sweep runs each such entry once and audits every plan that
     // actually EXECUTED: micro-batch plans captured synchronously at
-    // the Stream.drainObserver seam (every drain site funnels through
-    // Stream.awaitDrained) and batch actions (zone writes, JDBC
+    // the Stream.drainObserver seam (every streaming query starts in
+    // Stream.drain) and batch actions (zone writes, JDBC
     // round-trip, memory-sink reads) via a QueryExecutionListener.
     // Anti-vacuity: a streaming entry that yields ZERO captured
     // micro-batch plans fails — a Spark-internals rename breaking the
