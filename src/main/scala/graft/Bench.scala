@@ -36,7 +36,7 @@ import org.apache.spark.sql.functions._
   * 1.97 s, a 6.7× overstatement from 200 entries of accumulated
   * shuffle files / page-cache / state-store maintenance threads): after
   * the in-suite pass, selected entries are re-timed in a FRESH JVM each
-  * (this JVM's own flags + classpath, running graft.tools.TimeOne with
+  * (this JVM's own flags + classpath, running graft.tools.Entry with
   * the mirrored session conf). Selection is by PROPERTY, not rank
   * (round-10 used top-10 by median; entries ranked 11+ in the
   * streaming family still shipped 1.9–2.5× overstated, and a rank
@@ -76,7 +76,7 @@ object Bench {
     * optimization round, commit 655d326 A/A pair: totals 142.11 vs
     * 147.86 s, max per-entry |Δ| 1.66 s — t14_tfidf 0.88→2.55 and
     * t17 2.37→3.66, both untouched between the runs and both stable in
-    * standalone 5–7-rep TimeOne series, i.e. the swing is suite-state /
+    * standalone 5–7-rep fresh-JVM series, i.e. the swing is suite-state /
     * page-cache noise, not plan variance). r17 (ADVICE): the bound is
     * the observed max × a 1.25 safety multiplier (1.66 × 1.25 ≈ 2.1) —
     * an n=2 A/A sample's max is a biased-low estimate of the true
@@ -90,8 +90,26 @@ object Bench {
     * rebuild. */
   private[graft] val NoiseBoundSec: Double = 2.1
 
+  /** Local-mode cores for every measurement and dump main:
+    * SPARK_GRAFT_CPUS, else this machine's processor count. */
+  val Cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors.toString)
+
+  /** The fresh child's `TIMED` record ([[graft.tools.Entry]] prints it
+    * and writes it to `--out`) and its parse, kept side by side: the
+    * per-rep seconds in brackets are the sample Bench ships. */
+  private[graft] def timedLine(name: String, rows: Long, times: Seq[Double]): String =
+    f"TIMED $name rows=$rows median=${times.sorted.apply(times.size / 2)}%.6f s " +
+      s"over ${times.size} reps " + times.map(t => f"$t%.3f").mkString("[", ",", "]")
+
+  private val TimedRe =
+    """TIMED \S+ rows=\d+ median=([0-9.]+) s over \d+ reps \[([0-9.,]+)\]""".r
+
+  private[graft] def parseTimed(text: String): Option[Seq[Double]] =
+    TimedRe.findFirstMatchIn(text).map(_.group(2).split(",").map(_.toDouble).toSeq)
+
   /** The measurement session conf — ONE definition shared by Bench
-    * (in-suite) and TimeOne (fresh-JVM re-measure), so the two numbers
+    * (in-suite) and `graft.tools.Entry` (fresh-JVM re-measure), so the two numbers
     * can differ only by suite state, never by conf drift.
     *
     * Scale-proof shuffle sizing (round-9 sf1→sf10 finding): a fixed
@@ -122,7 +140,7 @@ object Bench {
     * constant shared by all entries and both sides of any A/B. Columns
     * xxhash64 can't take (MapType, nested or not — none exist in the
     * current surface; defensive) go through to_json first. Returns
-    * (output hash, row count) from the same single pass so TimeOne can
+    * (output hash, row count) from the same single pass so Entry can
     * report rows without a second, differently-planned job.
     *
     * Known, deliberate contract edge: a TRAILING sort is not billed.
@@ -207,7 +225,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
     // Optional comma-separated name-prefix filter (scale-stress runs
     // measure one family at a time without paying for the whole suite).
@@ -230,7 +247,7 @@ object Bench {
     // MinDebrisAgeMs guard now also makes that ordering mistake
     // non-fatal — both the order here and the age floor are the fix.
     graft.tools.DiskPreflight.run()
-    val spark = session(cpus)
+    val spark = session(Cpus)
 
     // Session warmup: touch the scheduler, parquet reader, and codegen
     // paths once. Non-fatal: a bad sfDir must still produce the JSON
@@ -387,8 +404,8 @@ object Bench {
         cmd.add(javaBin)
         jvmArgs.forEach(a => cmd.add(a))
         cmd.add("-cp"); cmd.add(System.getProperty("java.class.path"))
-        cmd.add("graft.tools.TimeOne"); cmd.add(name); cmd.add(sfDir)
-        cmd.add(childReps.toString); cmd.add(timedFile.toString)
+        Seq("graft.tools.Entry", name, sfDir, "--reps", childReps.toString,
+          "--out", timedFile.toString).foreach(cmd.add)
         val pb = new ProcessBuilder(cmd)
         // stderr merges into the same file: on a failed child the tail
         // (the actual exception) is printed below instead of being
@@ -409,13 +426,10 @@ object Bench {
         }
         val timed = new String(java.nio.file.Files.readAllBytes(timedFile), "UTF-8")
         val out = new String(java.nio.file.Files.readAllBytes(outFile), "UTF-8")
-        val re =
-          """TIMED \S+ rows=\d+ median=([0-9.]+) s over \d+ reps \[([0-9.,]+)\]""".r
         // dedicated file first (log noise can't touch it), stdout as
         // the fallback so a child that died before the file write but
         // after the println still yields its sample
-        val m = re.findFirstMatchIn(timed).orElse(re.findFirstMatchIn(out))
-          .map(g => g.group(2).split(",").map(_.toDouble).toSeq)
+        val m = parseTimed(timed).orElse(parseTimed(out))
           .filter(_ => p.exitValue() == 0)
         if (m.isEmpty) {
           System.err.println(s"[bench] fresh re-measure of $name produced no " +
@@ -452,7 +466,7 @@ object Bench {
     // the r17 baseline pair measured d19_cluster_split at 6.34 s fresh
     // with the parent alive during a contended window vs 0.68 s
     // standalone minutes later on the same binaries. The children carry
-    // every measurement themselves (TimeOne builds its own session from
+    // every measurement themselves (Entry builds its own session from
     // the same Bench.session definition), so the parent has nothing
     // left to compute — only to wait, read the TIMED files, and emit
     // JSON, none of which needs the SparkSession.
@@ -530,7 +544,7 @@ object Bench {
     // two measurement populations — in-suite reps and fresh-JVM reps —
     // and a consumer comparing totals across rounds needs to see each
     // population's share, not one opaque sum. (Per-rep WORK is identical
-    // in both: TimeOne warms the session and times consumeAll reps
+    // in both: Entry warms the session and times consumeAll reps
     // exactly like the in-suite loop, so JVM/session startup is in
     // neither median — the populations differ by suite-state
     // contamination, which is the thing the fresh phase removes.)
@@ -548,7 +562,7 @@ object Bench {
       val joined = FreshManifest.toSeq.sorted.mkString(",")
       f"n=${FreshManifest.size};h=${joined.hashCode & 0xffffffffL}%08x"
     }
-    val confFp = s"""{"cpus":$cpus,""" +
+    val confFp = s"""{"cpus":$Cpus,""" +
       s""""shufflePartitions":$confShufflePartitions,""" +
       s""""aqeInitialPartitionNum":$confAqeInit,""" +
       s""""aqe":$confAqe,""" +

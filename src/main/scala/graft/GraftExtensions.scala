@@ -2,10 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-import graft.functions.{AffineFloorF64, DotF64, DotProductRewrite, PhashAscii, QuantI64, SumF64, SumI64}
-import graft.plans.Sketches
+import graft.functions.{DotProductRewrite, NativeFunctions}
 
 /** Library integration point: register graft's native Catalyst
   * functions through the standard extensions mechanism —
@@ -14,41 +13,17 @@ import graft.plans.Sketches
   *
   * — so every session (incl. SQL-only users and thrift/connect fronts)
   * resolves them without per-call registry code. The in-repo operators
-  * also self-register defensively ([[graft.functions.NativeFunctions]],
-  * Sketches' registerBottomK) so the library works when the user did
-  * not configure extensions; both paths install identical expressions.
+  * also self-register defensively ([[graft.functions.NativeFunctions]]
+  * `.register`) so the library works when the user did not configure
+  * extensions; both paths read the same table.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("dot_f64"),
-      new ExpressionInfo(classOf[DotF64].getName, "dot_f64"),
-      (exprs: Seq[Expression]) => DotF64(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("quant_i64"),
-      new ExpressionInfo(classOf[QuantI64].getName, "quant_i64"),
-      (exprs: Seq[Expression]) => QuantI64(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("affine_floor_f64"),
-      new ExpressionInfo(classOf[AffineFloorF64].getName, "affine_floor_f64"),
-      (exprs: Seq[Expression]) => AffineFloorF64(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("sum_i64"),
-      new ExpressionInfo(classOf[SumI64].getName, "sum_i64"),
-      (exprs: Seq[Expression]) => SumI64(exprs(0))))
-    ext.injectFunction((
-      FunctionIdentifier("sum_f64"),
-      new ExpressionInfo(classOf[SumF64].getName, "sum_f64"),
-      (exprs: Seq[Expression]) => SumF64(exprs(0))))
-    ext.injectFunction((
-      FunctionIdentifier("phash_ascii"),
-      new ExpressionInfo(classOf[PhashAscii].getName, "phash_ascii"),
-      (exprs: Seq[Expression]) => PhashAscii(exprs(0), PhashAscii.foldableBits(exprs(1)))))
-    ext.injectFunction((
-      FunctionIdentifier("bottom_k_sketch"),
-      new ExpressionInfo(Sketches.getClass.getName, "bottom_k_sketch"),
-      (exprs: Seq[Expression]) => Sketches.bottomK(exprs.head)))
+    NativeFunctions.table.foreach { case (name, cls, builder) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name), builder))
+    }
     // users keep the portable HOF spelling of a dot product; the
     // optimizer swaps in the codegen'd DotF64 (same bits, tight loop)
     ext.injectOptimizerRule(_ => DotProductRewrite)

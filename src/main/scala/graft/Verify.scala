@@ -11,7 +11,7 @@ object Verify {
       case Array(a, b)    => (a, b, Option.empty[Set[String]])
       case Array(a, b, f) => (a, b, Some(f.split(",").map(_.trim).toSet))
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Bench.Cpus
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config(graft.io.LocalFs.conf)

@@ -274,7 +274,7 @@ object Advanced {
     // Values are identical — the same rows reach every aggregate
     // function; the 1×1 crossJoin is the documented scalar-broadcast
     // pattern (PlanSpec allowlist).
-    // r17 negative result (ProbeAgg, recorded): widening these passes
+    // r17 negative result (measured, OPTIMIZATION_r17.md): widening these passes
     // behind a round-robin exchange made EVERY aggregate slower at gate
     // SF (exact percentile 1.78→1.97 s, approx_percentile 0.36→0.79,
     // HLL 0.32→0.90, countDistinct 0.23→1.04 — the exchange write costs

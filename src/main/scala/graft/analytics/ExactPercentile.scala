@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   *
   * The built-in `percentile(col, p)` is exact but merges a value→count
   * map of EVERY distinct value on one final task — profiled 1.78 s over
-  * 600 k near-distinct doubles at sf0.1 (ProbeAgg), and widening the
+  * 600 k near-distinct doubles at sf0.1 (one-JVM probe), and widening the
   * input does not help because the merge IS the cost. At 100 TB that
   * single-reducer O(n) buffer is the scale-killer; a t-digest fixes the
   * cost but changes the declared output. This kernel keeps the output

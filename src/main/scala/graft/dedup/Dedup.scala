@@ -169,8 +169,7 @@ object Dedup {
   val BucketCap = 1024
 
   /** The shared bucket subplan: capped, sorted member lists of every
-    * multi-doc (band, sig) bucket — exposed for D3Probe's expansion
-    * A/B and any future pair-expansion respell.
+    * multi-doc (band, sig) bucket — every pair expansion reads it.
     *
     * SORT-based bucket build (round-14; r13 verdict finding 3): the
     * old shape was one groupBy(band, sig).agg(collect_set) over the
@@ -989,7 +988,7 @@ object Dedup {
     * broadcast-legend matrix pass (|shingles| × C(S,2) codegen'd bit
     * tests) to the exploded set-index plan (Σ C(k,2) bucket-local
     * pair enumeration). MEASURED crossover, not derived
-    * (D17WideProbe at sf10, 5 M docs, doc_id%S source synthesis,
+    * (a one-JVM A/B at sf10, 5 M docs, doc_id%S source synthesis,
     * digest-identical outputs): matrix/exploded seconds were
     * S=8: 19.9/20.4, S=16: 21.4/19.9, S=32: 22.0/19.2,
     * S=64: 23.8/19.9, S=150: 31.8/22.4 — the exploded plan is FLAT in
@@ -1003,9 +1002,9 @@ object Dedup {
   def crossSourceOverlap(s: SparkSession, docs: DataFrame): DataFrame =
     crossSourceOverlap(s, docs, MatrixMaxSources)
 
-  /** `matrixMax` is exposed for the A/B measurement harness
-    * (D17WideProbe times both plans at the SAME source count); every
-    * production caller goes through the [[MatrixMaxSources]] default. */
+  /** `matrixMax` is exposed so a spec or an A/B can force either plan
+    * at the SAME source count; every production caller goes through
+    * the [[MatrixMaxSources]] default. */
   def crossSourceOverlap(s: SparkSession, docs: DataFrame,
       matrixMax: Int): DataFrame = {
     // Source-index legend. |sources| is metadata-sized by the entry's

@@ -1,8 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, BloomFilterMightContain, Expression}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
@@ -241,30 +243,42 @@ case class DotI64(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Session registration for the native functions (idempotent). */
+/** graft's native SQL functions: ONE table, read by both install
+  * paths — [[graft.GraftExtensions]] (`spark.sql.extensions`) injects
+  * every row into new sessions, and [[register]] adds the rows a
+  * session does not resolve yet, so an operator works without the
+  * extension configured. */
 object NativeFunctions {
+  /** (name, implementing class, builder). */
+  val table: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("dot_f64", classOf[DotF64], e => DotF64(e(0), e(1))),
+    ("l2sq_f64", classOf[L2SqF64], e => L2SqF64(e(0), e(1))),
+    ("dot_i64", classOf[DotI64], e => DotI64(e(0), e(1))),
+    ("quant_i64", classOf[QuantI64], e => QuantI64(e(0), e(1))),
+    ("affine_floor_f64", classOf[AffineFloorF64], e => AffineFloorF64(e(0), e(1))),
+    ("sum_i64", classOf[SumI64], e => SumI64(e(0))),
+    ("sum_f64", classOf[SumF64], e => SumF64(e(0))),
+    ("phash_ascii", classOf[PhashAscii],
+      e => PhashAscii(e(0), PhashAscii.foldableBits(e(1)))),
+    ("bitmask_indices", classOf[BitmaskIndices], e => BitmaskIndices(e(0))),
+    ("simhash_words", classOf[SimhashWords],
+      e => SimhashWords(e(0), Simhash.foldableBits(e(1)))),
+    ("bottom_k_sketch", classOf[graft.plans.BottomKSketch],
+      e => graft.plans.Sketches.bottomK(e.head)),
+    // Catalyst's own bloom-filter pair: Spark ships the expressions for
+    // its runtime row-level filtering but does not register them; the
+    // partial sketches merge map-side and the probe is codegen'd
+    ("bloom_agg", classOf[BloomFilterAggregate], e => new BloomFilterAggregate(e(0), e(1), e(2))),
+    ("bloom_might_contain", classOf[BloomFilterMightContain],
+      e => BloomFilterMightContain(e(0), e(1))))
+
+  /** Registers the rows `s` does not resolve yet: a session built with
+    * the extension, or already registered, is left untouched. */
   def register(s: SparkSession): Unit = {
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_f64", exprs => DotF64(exprs(0), exprs(1)), "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "l2sq_f64", exprs => L2SqF64(exprs(0), exprs(1)), "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_i64", exprs => DotI64(exprs(0), exprs(1)), "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "quant_i64", exprs => QuantI64(exprs(0), exprs(1)), "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "affine_floor_f64", exprs => AffineFloorF64(exprs(0), exprs(1)), "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sum_i64", exprs => SumI64(exprs(0)), "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sum_f64", exprs => SumF64(exprs(0)), "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "phash_ascii", exprs => PhashAscii(exprs(0), PhashAscii.foldableBits(exprs(1))),
-      "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bitmask_indices", exprs => BitmaskIndices(exprs(0)), "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash_words", exprs => SimhashWords(exprs(0), Simhash.foldableBits(exprs(1))),
-      "built-in")
+    val registry = s.sessionState.functionRegistry
+    table.foreach { case (name, _, builder) =>
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, builder, "built-in")
+    }
   }
 }

@@ -264,7 +264,7 @@ object Pipeline {
     *
     * `maxAgeS` is the concurrent-run guard: the production default
     * (1h) means two invocations on one host can't delete each other's
-    * live zones. The measurement mains (Bench, TimeOne) pre-sweep
+    * live zones. The measurement mains (Bench, Entry) pre-sweep
     * with maxAgeS = 0 BEFORE any timing starts — otherwise another
     * process's zone debris crossing the 1h boundary mid-run lands its
     * deletion I/O inside an arbitrary timed entry (r13: a test-suite

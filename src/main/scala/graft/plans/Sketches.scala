@@ -88,19 +88,15 @@ object Sketches {
 
   val K = 64
 
-  /** Expression builder shared by the per-session registry below and
-    * [[graft.GraftExtensions]] (spark.sql.extensions packaging). */
+  /** `bottom_k_sketch`'s builder, a row of
+    * [[graft.functions.NativeFunctions]]' table. */
   def bottomK(e: Expression): Expression = BottomKSketch(e, K)
-
-  private def registerBottomK(s: SparkSession): Unit =
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bottom_k_sketch", exprs => bottomK(exprs.head), "scala_udf")
 
   /** X-2 — KMV distinct estimate of l_partkey (vs the exact count).
     * The kth-smallest hash's leading 13 hex digits (52 bits — exact in
     * a double) give the fraction of hash space covered. */
   def x2KmvDistinct(s: SparkSession, dir: String): DataFrame = {
-    registerBottomK(s)
+    graft.functions.NativeFunctions.register(s)
     // try_element_at: under-k sketches (cardinality < K) have no kth
     // element — ANSI element_at would throw. KMV convention: a sketch
     // smaller than K IS the distinct set, so the estimate is its size.
@@ -175,23 +171,6 @@ object Sketches {
       .orderBy($"o_custkey")
   }
 
-  /** Catalyst's own bloom-filter pair, surfaced as SQL functions.
-    * Spark ships `BloomFilterAggregate`/`BloomFilterMightContain` for
-    * its runtime row-level filtering (InjectRuntimeFilter) but does not
-    * register them publicly; the expressions themselves are the right
-    * tool — partial sketches merge map-side, and the membership probe
-    * is codegen'd — so we register them, same seam as `dot_f64`. */
-  private def registerBloom(s: SparkSession): Unit = {
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_agg", exprs =>
-        new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-          exprs(0), exprs(1), exprs(2)), "scala_udf")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_might_contain", exprs =>
-        org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-          exprs(0), exprs(1)), "scala_udf")
-  }
-
   /** X-8 — bloom-filter semi-join pre-reduction: the manual form of the
     * runtime filter a 100 TB shuffle join lives or dies by. The
     * selective dim side (urgent orders) folds into a ~100 KB bloom
@@ -203,7 +182,7 @@ object Sketches {
     * positives, so the RESULT is exactly the plain semi-join (= the
     * oracle); the bloom only changes how many rows reach the shuffle. */
   def x8BloomSemiJoin(s: SparkSession, dir: String): DataFrame = {
-    registerBloom(s)
+    graft.functions.NativeFunctions.register(s)
     Tables.registerViews(s, dir)
     // Size the sketch from the ACTUAL dim-side cardinality (a pushed-
     // filter count over the small side — the same stats-driven sizing

@@ -206,8 +206,8 @@ object TopK {
 
   // ----------------------------------------------------------- installation
 
-  /** Defensive in-session registration (mirrors NativeFunctions /
-    * Sketches.registerBottomK): the library works without
+  /** Defensive in-session registration (mirrors
+    * NativeFunctions.register): the library works without
     * `spark.sql.extensions=graft.GraftExtensions`, through the public
     * `spark.experimental` seams. Idempotent. */
   def install(s: SparkSession): Unit = synchronized {

@@ -93,7 +93,7 @@ object Stream {
   /** st13's broadcast-vs-shuffle crossover, in EVENTS-TABLE bytes (the
     * proxy [[st13StreamAntiJoin]] sizes its seen side by: seen = the
     * event_id column of 1/3 of the rows). Measured r15 A/B at sf100
-    * (events 2.1 GB, 33 M seen ids, StMetrics fresh JVMs): broadcast
+    * (events 2.1 GB, 33 M seen ids, fresh JVMs with state metrics): broadcast
     * regime 114.1 s vs shuffled regime 28.7 s — the driver-side build
     * and per-thread probe of a 33 M-key hashmap cost 4× the whole
     * distributed exchange, on a drain st16 proves is ~10 s without the

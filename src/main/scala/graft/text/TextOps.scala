@@ -138,8 +138,9 @@ object TextOps {
     // slice THROWS on negative length. Unguarded, the projection only
     // survived because CollapseProject inlined the single-use alias
     // into the lazy CaseWhen branch above — an optimizer artifact, not
-    // a structural guarantee (D3Probe itself demonstrates excluding
-    // optimizer rules). Shingles.kgram uses the same pattern.
+    // a structural guarantee (excluding an optimizer rule through
+    // spark.sql.optimizer.excludedRules undoes it). Shingles.kgram
+    // uses the same pattern.
     d.withColumn("__zip", when(n >= 3, arrays_zip(slices: _*)))
       .select($"doc_id", md5($"__norm").as("fingerprint"),
         shingleMin.as("min_shingle_fp"))

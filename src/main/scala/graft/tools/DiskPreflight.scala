@@ -1,6 +1,6 @@
 package graft.tools
 
-/** Disk-headroom preflight for the decade-panel tools (r14 verdict
+/** Disk-headroom preflight for Bench, `Entry` and perfbench (r14 verdict
   * task 4). Two measured failure modes from the round-14 panels:
   *
   *  1. a KILLED Spark JVM leaves its `/tmp/blockmgr-*` / `spark-*`
@@ -15,13 +15,13 @@ package graft.tools
   * The preflight (a) sweeps stale shuffle debris BEFORE the session
   * exists, but only when no OTHER live java process could own it
   * (a parent Bench JVM's blockmgr dirs are live while its fresh
-  * children run — those children must never sweep; standalone decade
-  * tools on the protocol's idle box may); (b) compares free disk
+  * `Entry` children run — those children must never sweep; standalone
+  * decade runs on the protocol's idle box may); (b) compares free disk
   * against the operator's projected shuffle (rows × observed bytes
   * from the previous decade, passed as SPARK_GRAFT_EXPECT_SHUFFLE_GB)
   * and refuses to start a run that arithmetic says will ENOSPC;
-  * (c) exposes [[freeGb]] so per-rep disk levels land in the TIMEDS
-  * artifact — a rep that ran against a draining disk is then a
+  * (c) exposes [[freeGb]] so per-rep disk levels land in Entry's PASS
+  * lines — a rep that ran against a draining disk is then a
   * recorded fact, not a mystery spread. */
 object DiskPreflight {
   private def tmpDir = new java.io.File(
@@ -29,19 +29,18 @@ object DiskPreflight {
 
   def freeGb: Double = tmpDir.getUsableSpace / 1e9
 
-  /** True if a java process OTHER than this JVM and its ancestors is
-    * alive — then shuffle debris in tmp may be live and must not be
-    * swept. */
-  private def otherJavaAlive: Boolean = {
-    val self = ProcessHandle.current()
-    val ancestors = Iterator.iterate(Option(self))(
-      _.flatMap(p => Option(p.parent().orElse(null))))
-      .takeWhile(_.isDefined).flatten.map(_.pid()).toSet
+  /** True if a java process other than this JVM is alive — then
+    * shuffle debris in tmp may be live and must not be swept. A java
+    * ANCESTOR counts: a fresh child of a live Bench (or of sbt) must
+    * never sweep its parent's blockmgr dirs. `procs` is (pid, command)
+    * of every process, injectable for the spec. */
+  private[graft] def otherJavaAlive(procs: Iterator[(Long, String)], self: Long): Boolean =
+    procs.exists { case (pid, cmd) => pid != self && cmd.endsWith("java") }
+
+  private def allProcesses: Iterator[(Long, String)] = {
     import scala.jdk.CollectionConverters._
-    ProcessHandle.allProcesses().iterator().asScala.exists { p =>
-      !ancestors.contains(p.pid()) &&
-        p.info().command().map[Boolean](_.endsWith("java")).orElse(false)
-    }
+    ProcessHandle.allProcesses().iterator().asScala
+      .map(p => (p.pid(), p.info().command().orElse("")))
   }
 
   private def rmTree(f: java.io.File): Long = {
@@ -91,7 +90,7 @@ object DiskPreflight {
     * own spark-* dirs. */
   private[graft] def sweepShuffleDebris(force: Boolean,
       root: java.io.File = tmpDir): Long = {
-    if (!force && otherJavaAlive) {
+    if (!force && otherJavaAlive(allProcesses, ProcessHandle.current().pid())) {
       println("PREFLIGHT sweep=skipped reason=other-java-alive " +
         "(set SPARK_GRAFT_SWEEP_SHUFFLE=1 to force)")
       return 0L
@@ -136,6 +135,6 @@ object DiskPreflight {
     }
   }
 
-  /** The standard panel-tool prelude: sweep, then gate. */
+  /** The prelude of every measuring main: sweep, then gate. */
   def run(): Unit = { sweepShuffleDebris(); gate() }
 }

@@ -70,7 +70,7 @@ object DumpPlans {
     // the 1024 initialPartitionNum width ceiling, adaptive enabled,
     // UTC. Dumping plans under any other conf documents a
     // configuration nothing certifies.
-    val spark = graft.Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
+    val spark = graft.Bench.session(graft.Bench.Cpus)
     spark.sparkContext.setLogLevel("ERROR")
     val sf = "/root/testdata/sf0.001"
     val sb = new StringBuilder

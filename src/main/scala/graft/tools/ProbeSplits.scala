@@ -7,7 +7,7 @@ package graft.tools
   * width says nothing about effective scan-stage parallelism. */
 object ProbeSplits {
   def main(args: Array[String]): Unit = {
-    val spark = graft.Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = graft.Bench.session(graft.Bench.Cpus)
     args.foreach { d =>
       val rdd = spark.read.parquet(d).rdd
       val per = rdd.mapPartitions(it => Iterator(it.size), preservesPartitioning = true).collect()

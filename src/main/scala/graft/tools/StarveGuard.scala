@@ -2,12 +2,12 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-/** Scan-starvation preflight for the decade-panel tools (r15 verdict
+/** Scan-starvation preflight for timed `Entry` runs (r15 verdict
   * task 4). t14 shipped 4.7× slow for TWO rounds because its sf100
   * documents file had 5 row groups — parquet assigns each row group to
   * the byte-split containing its start, so the scan stage ran 5-wide
   * on a 32-core box and nobody noticed until ProbeSplits was pointed
-  * at it by hand. The panel tools (TimeSpill/StMetrics) now refuse to
+  * at it by hand. A timed `Entry` run now refuses to
   * PIN a number for an entry whose input table's effective scan width
   * is a small fraction of the cores: a starved run must be a loud
   * refusal with a widen-eligible message, never a silently recorded
@@ -76,7 +76,7 @@ object StarveGuard {
     }
   }
 
-  /** Panel-tool prelude: print one STARVED line per starved input
+  /** Entry's prelude: print one STARVED line per starved input
     * table and refuse (exit 3) unless SPARK_GRAFT_STARVE_FORCE=1. A
     * clean check prints nothing. */
   def check(s: SparkSession, entry: String, dir: String): Unit = {

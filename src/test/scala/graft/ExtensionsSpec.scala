@@ -341,15 +341,38 @@ class ExtensionsSpec extends AnyFunSuite {
   }
 
   test("GraftExtensions installs the native functions via the spark.sql.extensions contract") {
-    // the loader instantiates the class reflectively and applies it to a
-    // SparkSessionExtensions; exercise exactly that contract
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
-    new graft.GraftExtensions().apply(ext)
-    // and the same builders resolve through a live session's registry
-    graft.functions.NativeFunctions.register(spark)
-    val r = spark.sql("SELECT dot_f64(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d")
+    // A session built with the extension (what spark.sql.extensions
+    // does: instantiate the class and hand it the session's
+    // extensions) resolves every native function before any graft
+    // operator has self-registered one. The builder only creates a
+    // new session on the shared context when no default or active one
+    // exists, so both are set aside for the build and restored.
+    import org.apache.spark.sql.SparkSession
+    val shared = spark
+    SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
+    val withExt = try SparkSession.builder().withExtensions(new graft.GraftExtensions()).getOrCreate()
+      finally { SparkSession.setDefaultSession(shared); SparkSession.setActiveSession(shared) }
+    assert(withExt ne shared, "the builder returned the shared session")
+    val names = graft.functions.NativeFunctions.table.map(_._1)
+    assert(names.size == 13)
+    val missing = names.filterNot(n => withExt.catalog.functionExists(n))
+    assert(missing.isEmpty, s"not resolved with the extension: ${missing.mkString(", ")}")
+    val r = withExt.sql("SELECT dot_f64(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d")
       .collect().head.getDouble(0)
     assert(r == 11.0)
+  }
+
+  test("NativeFunctions.register leaves names the session already resolves alone") {
+    val registry = spark.sessionState.functionRegistry
+    graft.functions.NativeFunctions.register(spark)
+    // a replace installs a fresh ExpressionInfo; a skip keeps the old one
+    def infos() = graft.functions.NativeFunctions.table.map { case (n, _, _) =>
+      registry.lookupFunction(org.apache.spark.sql.catalyst.FunctionIdentifier(n)).get }
+    val before = infos()
+    graft.functions.NativeFunctions.register(spark)
+    val after = infos()
+    assert(before.zip(after).forall { case (a, b) => a eq b },
+      "a second register replaced already-registered functions")
   }
 
   private def withSQLConf(pairs: (String, String)*)(f: => Unit): Unit = {

@@ -345,4 +345,25 @@ class PropertySpec extends AnyFunSuite {
       rm(root)
     }
   }
+
+  test("a java ancestor counts as alive: a fresh child of a live Spark JVM never sweeps") {
+    import graft.tools.DiskPreflight.otherJavaAlive
+    val self = 100L
+    def procs(ps: (Long, String)*) = ps.iterator
+    assert(!otherJavaAlive(procs(self -> "/usr/bin/java", 1L -> "/sbin/init",
+      7L -> "/bin/bash"), self), "this JVM alone is not another java")
+    // the parent Bench (or sbt) JVM that spawned this one
+    assert(otherJavaAlive(procs(self -> "/usr/bin/java", 99L -> "/usr/lib/jvm/bin/java",
+      1L -> "/sbin/init"), self), "a java parent must count as alive")
+    assert(!otherJavaAlive(procs(self -> "/usr/bin/java", 5L -> "/usr/bin/javac",
+      6L -> ""), self), "only java commands count")
+    // the real case: this JVM and its ancestors only, one of them the
+    // java that forked this suite
+    val chain = Iterator.iterate(Option(ProcessHandle.current()))(
+      _.flatMap(p => Option(p.parent().orElse(null)))).takeWhile(_.isDefined).flatten
+      .map(p => (p.pid(), p.info().command().orElse(""))).toSeq
+    assume(chain.tail.exists(_._2.endsWith("java")), "suite not forked by a JVM")
+    assert(otherJavaAlive(chain.iterator, chain.head._1),
+      "the JVM that forked this one must count as alive")
+  }
 }

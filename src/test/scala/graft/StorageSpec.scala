@@ -454,7 +454,7 @@ class StorageSpec extends AnyFunSuite {
   test("work-dir sweep cutoff: 1h default spares fresh dirs, the measurement pre-sweep (0) clears them") {
     // The sweep's two regimes are a contract (SCALING.md §round-13
     // sweep debt): production entries must NEVER delete a concurrent
-    // invocation's fresh zones (1h guard), while Bench/TimeOne's
+    // invocation's fresh zones (1h guard), while Bench/Entry's
     // pre-sweep must clear EVERYTHING so stale debris can't age past
     // the cutoff mid-run and bill its deletion to a timed entry.
     val root = Files.createTempDirectory("sweep_root_")
