@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,23 +10,8 @@ object Verify {
       case Array(a, b)    => (a, b, Option.empty[Set[String]])
       case Array(a, b, f) => (a, b, Some(f.split(",").map(_.trim).toSet))
     }
-    val cpus = Bench.Cpus
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config(graft.io.LocalFs.conf)
-      .config("spark.sql.shuffle.partitions", cpus)
-      // same scale-proof AQE sizing as Bench (see Bench.scala): start
-      // shuffles wide, let coalescing right-size them per data volume
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        math.max(256, cpus.toInt * 8).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // allow AQE to right-size cached plans (see Bench.session) — the
-      // dedup memos otherwise materialize at initialPartitionNum
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the timed runs' session, so the gate checks outputs under their conf
+    val spark = Bench.session(Bench.Cpus)
     new java.io.File(outDir).mkdirs()
     def keep(name: String): Boolean = only.forall(_.contains(name))
     SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>

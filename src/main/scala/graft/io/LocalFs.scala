@@ -28,10 +28,21 @@ import org.apache.hadoop.fs.permission.FsPermission
   * the conf, `file:` resolves to Hive's `ProxyLocalFileSystem`, whose only
   * addition is an MD5 `getFileChecksum` that graft never calls. */
 object LocalFs {
-  /** Session conf for every graft `SparkSession` builder. */
+  /** Session conf for every graft `SparkSession` builder: the local-disk
+    * write policy. Besides the filesystem above, it sends every shuffle
+    * to the serialized sort-shuffle writer. Spark's default sends a
+    * shuffle with at most 200 reduce partitions and no map-side combine
+    * (every streaming drain, the round-robin widens, every
+    * `SinglePartition` exchange) to `BypassMergeSortShuffleWriter`,
+    * which writes one temp file per partition and then copies them all
+    * into the `.data` file, so each byte is written twice.
+    * `UnsafeShuffleWriter` renames its single spill into place instead.
+    * Rows keep their order inside a partition: its partition-id sort is
+    * stable. ShuffleWriteSpec pins the bytes and the equal output. */
   val conf: Map[String, String] = Map(
     "spark.hadoop.fs.file.impl" -> classOf[NioLocalFileSystem].getName,
-    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[NioLocalFs].getName)
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[NioLocalFs].getName,
+    "spark.shuffle.sort.bypassMergeThreshold" -> "0")
 }
 
 /** `RawLocalFileSystem` with its two process-starting calls done in-JVM. */

@@ -31,8 +31,11 @@ import graft.streaming.Stream
   *    output hash for A/B value identity; the warm pass, i.e. the cold
   *    memo build);
   *  - `SPILL` (task spill and shuffle over the timed reps), `PASS`
-  *    (each pass's eager `fn` / consume split, shuffle write, free
-  *    disk), `JOB` (≥ 20 ms) and `STAGE` (≥ 50 ms) with call sites;
+  *    (each pass's eager `fn` / consume split, shuffle write, the bytes
+  *    the JVM wrote, free disk), `JOB` (≥ 20 ms) and `STAGE` (≥ 50 ms)
+  *    with call sites; a job or stage whose only call site is a thread
+  *    pool's (AQE's query stages) is named by its job description, which
+  *    each pass sets to `<name> <pass> eager|consume`;
   *  - per drain, from the `Stream.drainObserver` seam: `BATCH` (every
   *    micro-batch's durations) and `STATE` (every stateful operator's
   *    rows, memory and RocksDB spill/memory metrics).
@@ -66,17 +69,24 @@ object Entry {
     val spillMem, spillDisk, shuffleWrite, shuffleRead = new AtomicLong
     val lines = new ConcurrentLinkedQueue[String]
     private val jobs = new ConcurrentHashMap[Int, (Long, String)]
+    private val jobDescs = new ConcurrentHashMap[Int, String]
     private val markers = ConcurrentHashMap.newKeySet[Int]
     private val markerEnded = new Semaphore(0)
 
-    override def onJobStart(e: SparkListenerJobStart): Unit =
-      if (Option(e.properties).exists(_.getProperty(Marker) != null)) markers.add(e.jobId)
+    override def onJobStart(e: SparkListenerJobStart): Unit = {
+      val props = Option(e.properties)
+      if (props.exists(_.getProperty(Marker) != null)) markers.add(e.jobId)
       else {
         val names = e.stageInfos.map(_.name.takeWhile(_ != '\n')).distinct
-        val site = Some(names.filterNot(_.startsWith("$anonfun")))
-          .filter(_.nonEmpty).getOrElse(names.take(1)).take(3).mkString(" | ")
+        // what `setJobDescription` set; a streaming batch's spans lines
+        val desc = props.flatMap(p => Option(p.getProperty("spark.job.description")))
+          .map(_.split('\n').map(_.trim).filter(_.nonEmpty).mkString(" ")).filter(_.nonEmpty)
+        val site = Some(names.filterNot(_.startsWith("$anonfun"))).filter(_.nonEmpty)
+          .orElse(desc.map(Seq(_))).getOrElse(names.take(1)).take(3).mkString(" | ")
         jobs.put(e.jobId, (System.nanoTime(), site))
+        desc.foreach(d => e.stageIds.foreach(jobDescs.put(_, d)))
       }
+    }
 
     override def onJobEnd(e: SparkListenerJobEnd): Unit =
       if (markers.remove(e.jobId)) markerEnded.release()
@@ -88,9 +98,10 @@ object Entry {
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
       val si = e.stageInfo
       val wall = (for (s <- si.submissionTime; c <- si.completionTime) yield c - s).getOrElse(-1L)
+      val site = Some(si.name.takeWhile(_ != '\n')).filterNot(_.startsWith("$anonfun"))
+        .orElse(Option(jobDescs.remove(si.stageId))).getOrElse(si.name.takeWhile(_ != '\n'))
       if (wall >= 50) lines.add(s"STAGE $name $pass id=${si.stageId} ms=$wall " +
-        s"taskMs=${si.taskMetrics.executorRunTime} tasks=${si.numTasks} " +
-        si.name.takeWhile(_ != '\n').take(60))
+        s"taskMs=${si.taskMetrics.executorRunTime} tasks=${si.numTasks} " + site.take(60))
     }
 
     override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
@@ -144,17 +155,21 @@ object Entry {
       def pass(tag: String): (Long, Long, Double) = {
         rec.pass = tag
         val wrote0 = rec.shuffleWrite.get
+        val wchar0 = jvmWrittenBytes()
         val t0 = System.nanoTime()
+        sc.setJobDescription(s"$name $tag eager")
         val df = fn(spark, dir)
         val t1 = System.nanoTime()
+        sc.setJobDescription(s"$name $tag consume")
         val (hash, rows) = Bench.consumeAll(df)
         val t2 = System.nanoTime()
         rec.caughtUp(sc)
         val wrote = rec.shuffleWrite.get - wrote0
+        val wchar = if (wchar0 < 0) -1L else jvmWrittenBytes() - wchar0
         if (wrote / 1e9 * 20 >= DiskPreflight.freeGb) { System.gc(); Thread.sleep(3000) }
         rec.lines.add(f"PASS $name $tag eager=${(t1 - t0) / 1e9}%.3f " +
           f"consume=${(t2 - t1) / 1e9}%.3f shuffleWriteBytes=$wrote " +
-          f"freeGB=${DiskPreflight.freeGb}%.1f")
+          f"wcharBytes=$wchar freeGB=${DiskPreflight.freeGb}%.1f")
         (hash, rows, (t2 - t0) / 1e9)
       }
       val (hash, rows, warm) = pass("warm")
@@ -163,11 +178,21 @@ object Entry {
       Report(name, rows, hash, warm, times, rec.spillMem.get, rec.spillDisk.get,
         rec.shuffleWrite.get, rec.shuffleRead.get, rec.lines.asScala.toSeq)
     } finally {
+      sc.setJobDescription(null)
       Stream.drainObserver.set(prevObserver)
       sc.removeSparkListener(rec)
       stopStreams(spark)
     }
   }
+
+  /** Bytes this JVM has passed to `write` and its kin so far (the
+    * `wchar` of `/proc/self/io`: files, pipes and sockets alike, page
+    * cache or not); -1 where the kernel does not report it. Two reads
+    * bracket a pass: its shuffle, spill, state-store and zone writes. */
+  def jvmWrittenBytes(): Long = scala.util.Try {
+    val io = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get("/proc/self/io")), "UTF-8")
+    "(?m)^wchar: (\\d+)$".r.findFirstMatchIn(io).get.group(1).toLong
+  }.getOrElse(-1L)
 
   private def stopStreams(spark: SparkSession): Unit =
     spark.streams.active.foreach { q =>

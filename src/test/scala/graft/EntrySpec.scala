@@ -34,6 +34,9 @@ class EntrySpec extends AnyFunSuite {
     assert(r.lines.head == r.timed && r.lines.exists(_.startsWith(s"HASH $name hash=$hash")))
     assert(r.lines.exists(_.startsWith(s"SPILL $name ")))
     assert(r.detail.count(_.startsWith(s"PASS $name ")) == 2, "one PASS line per pass")
+    // an AQE stage job is named by its pass, not by AQE's thread pool
+    assert(!r.detail.exists(l => l.startsWith("JOB ") && l.contains("withThreadLocalCaptured")),
+      r.detail.filter(_.startsWith("JOB ")).mkString("\n"))
     r
   }
 
@@ -48,6 +51,11 @@ class EntrySpec extends AnyFunSuite {
       assert(r.detail.exists(_.startsWith(s"$kind st6_stream_dedup $pass drain=")),
         s"no $kind line for $pass:\n${r.detail.mkString("\n")}")
     assert(r.detail.exists(l => l.startsWith("STATE") && l.contains("rowsTotal=")))
+    // every shuffle byte passes through write(2): the JVM wrote at least as much
+    val written = "PASS st6_stream_dedup rep1 .* shuffleWriteBytes=(\\d+) wcharBytes=(-?\\d+) ".r
+      .findFirstMatchIn(r.detail.mkString("\n")).getOrElse(fail(r.detail.mkString("\n")))
+    assert(written.group(1).toLong > 0 && written.group(2).toLong >= written.group(1).toLong,
+      written.matched)
   }
 
   test("every def main under src/main is a row of the README's tool table") {

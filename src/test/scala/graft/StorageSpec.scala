@@ -612,4 +612,35 @@ class StorageSpec extends AnyFunSuite {
     assert(effNoExt >= 1,
       s"suffix-less leaves must read as unknown (planned-split bound), got $effNoExt")
   }
+
+  test("documentsWide both sides: widen and no-widen give equal d2/d3 output") {
+    // the sf0.001 corpus as one row group (starved: widened) and as
+    // many (under 4 KB split pins: not widened); d2 and d3 must agree
+    val docs = graft.io.Tables.documents(spark, sf)
+    def layout(blockBytes: Int): String = {
+      val dir = Files.createTempDirectory("graft_widen_").toString
+      docs.coalesce(1).write.option("parquet.block.size", blockBytes)
+        .option("parquet.page.size.row.check.min", 10).parquet(s"$dir/_gen")
+      val part = new java.io.File(s"$dir/_gen").listFiles.find(_.getName.endsWith(".parquet")).get
+      Files.move(part.toPath, java.nio.file.Paths.get(dir, "documents.parquet"))
+      dir
+    }
+    val (starved, split) = (layout(512 * 1024 * 1024), layout(4096))
+    def outputs(dir: String): Seq[Seq[String]] = Seq("d2_minhash_sig", "d3_lsh_pairs").map(e =>
+      SparkEntry.queries(e)(spark, dir).collect().map(_.toString).toSeq.sorted)
+    assert(graft.io.Tables.scanStarved(spark, starved, "documents"))
+    val widened = outputs(starved)
+    val pins = Seq("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes")
+    val prev = pins.map(k => k -> spark.conf.getOption(k))
+    pins.foreach(spark.conf.set(_, "4096"))
+    val narrow = try {
+      assert(!graft.io.Tables.scanStarved(spark, split, "documents"),
+        s"effective splits ${graft.io.Tables.effectiveScanSplits(spark, split, "documents")}")
+      assert(!graft.io.Tables.documentsWide(spark, split, Seq("doc_id", "text"))
+        .queryExecution.executedPlan.toString.contains("Exchange"))
+      outputs(split)
+    } finally prev.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    assert(widened.forall(_.nonEmpty), "d2 or d3 came out empty")
+    assert(widened == narrow, "the widen changed d2 or d3 output")
+  }
 }
