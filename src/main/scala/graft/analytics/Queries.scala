@@ -1,6 +1,6 @@
 package graft.analytics
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.syntax._
@@ -90,40 +90,35 @@ object Queries {
       .limit(1048575)
 
   /** The gate entry for Q-9: an ORDER-INDEPENDENT digest of the limited
-    * scan (row count + sum of a 32-bit md5 window over cents-normalized
-    * columns), so the driver's hash compare is deterministic WITHOUT a
-    * global sort. Round-2 verdict flagged the old `orderBy(4 cols)
-    * .limit(1048575)` as a full-table shuffle sort at scale; this plan
-    * is LocalLimit → single-partition GlobalLimit → agg: bounded by the
-    * limit constant, not the table. (Sum of 2^32-max terms over ≤2^20
-    * rows ≤ 2^52 — no bigint overflow under ANSI.)
+    * scan — `n` = row count, `digest` = the sum over rows of
+    * `md5_prefix(row_key, 8)` (the top 32 bits of md5 over
+    * `l_orderkey|l_partkey|quantity cents|price cents`) — so the
+    * oracle gate's hash compare is deterministic WITHOUT a global sort
+    * (sum of 2^32-max terms over ≤ 2^20 rows ≤ 2^52: no bigint
+    * overflow under ANSI).
     *
-    * r16 optimization: the md5 digest TERM is projected BELOW the
-    * limit, inside the scan stage. Catalyst pushed the concat_ws
-    * projection under the LocalLimit on its own but left the
-    * md5+conv above the single-partition GlobalLimit, so ~10^6 md5
-    * evaluations ran on ONE task (measured the whole 1.27 s entry);
-    * the explicit pre-limit projection runs them scan-wide and the
-    * exchange ships an 8-byte bigint per row instead of a ~40-byte
-    * row_key string. Row selection is untouched — LocalLimit passes
-    * the same first-N rows per partition whatever the projection
-    * computes — and the digest is the same exact integer sum over
-    * the same rows. */
+    * The parquet footer's record count (metadata only, memoized — the
+    * statistic ANALYZE persists for CBO) decides at plan time whether
+    * the guard limit BINDS:
+    *
+    *   - rows ≤ limit (every gate SF): the limit is an identity, so it
+    *     is elided and the digest is an exact sum over ALL rows. The
+    *     term is computed inside the scan stage and partially
+    *     aggregated there; the only exchange is the final aggregate's
+    *     single-row gather. There is no widen: with the digest read
+    *     off the md5 bytes by the `md5_prefix` kernel, a round-robin
+    *     exchange's one map task (decode + serialize the whole table)
+    *     costs about what the digest it would fan out costs (SCALING.md
+    *     §"q9 without the widen").
+    *   - rows > limit, or the footer probe fails: LocalLimit →
+    *     single-partition GlobalLimit over 8-byte terms — cost
+    *     O(limit), never O(table), the 100 TB contract for a guard
+    *     limit. Its contract when the limit binds: `n` = 1048575 and
+    *     `digest` is over SOME 1048575-row subset of lineitem. Neither
+    *     engine orders the limit, so which subset (and so `digest`) is
+    *     not pinned; when it does not bind both regimes return the same
+    *     `(n, digest)` (Q9RegimeSpec). */
   def q9LimitScan(s: SparkSession, dir: String): DataFrame =
-    // r17 optimization: the parquet footer's record count (metadata
-    // only, memoized — the same statistic ANALYZE persists for CBO)
-    // proves at plan time whether the guard limit BINDS. At every
-    // driver SF lineitem holds fewer than 2^20 rows, so the limit is an
-    // identity and the digest is an order-independent exact sum over
-    // ALL rows — the Limit node (and its single-partition gather of
-    // ~10^6 rows) can be elided, and a starved scan (the driver's
-    // single-row-group file plans ONE task, so the md5 ran
-    // single-threaded — measured the whole ~1.1 s entry) may widen
-    // with one narrow round-robin exchange, exactly the documentsWide
-    // seam's rule. When the footer says rows > limit (or the probe
-    // fails), the r16 bounded plan runs unchanged: LocalLimit →
-    // single-partition GlobalLimit over 8-byte terms — cost O(limit),
-    // never O(table), which is the 100 TB contract for a guard limit.
     q9Digest(s, dir,
       noopLimit = Tables.tableRowCount(s, dir, "lineitem").exists(_ <= Q9GuardLimit))
 
@@ -131,38 +126,20 @@ object Queries {
 
   /** q9's digest plan with the limit-elision decision explicit, so
     * PlanSpec can assert BOTH regimes (the bounded plan keeps its Limit
-    * and never sorts; the metadata-elided plan never sorts either). */
+    * and never sorts; the elided plan has no exchange below its partial
+    * aggregate). */
   private[graft] def q9Digest(s: SparkSession, dir: String,
       noopLimit: Boolean): DataFrame = {
-    // cents are cast to bigint BEFORE any string building; the
-    // concat_ws of their string forms is byte-identical wherever it
-    // runs, so both branches compute the same row_key text
-    def rowKey = concat_ws("|", $"l_orderkey", $"l_partkey", $"q_c", $"e_c")
-    def term(key: Column) =
-      conv(substring(md5(key), 1, 8), 16, 10).cast("bigint").as("term")
-    val narrow = Tables.lineitem(s, dir)
-      .select($"l_orderkey", $"l_partkey",
-        round($"l_quantity" * 100).cast("bigint").as("q_c"),
-        round($"l_extendedprice" * 100).cast("bigint").as("e_c"))
-    val limited =
-      if (noopLimit) {
-        // rows ≤ limit: widen only when the scan layout would starve
-        // the digest projection (dead branch at cluster scale —
-        // thousands of row groups). The exchange carries the four
-        // NARROW numeric columns (profiled: with row_key built inside
-        // the scan stage, the 4-casts+concat string build WAS the
-        // single-task 0.98 s stage; post-exchange it runs 32-wide and
-        // the scan stage is left with pure parquet decode). Order-safe:
-        // the digest is an exact integer sum, the count a count; both
-        // are exchange-order-invariant.
-        val base = if (Tables.scanStarved(s, dir, "lineitem"))
-          narrow.repartition(s.sparkContext.defaultParallelism) else narrow
-        base.select(term(rowKey))
-      } else
-        // bounded regime (r16 shape): digest term built below the
-        // LocalLimit, single-partition GlobalLimit gathers 8-byte
-        // bigints — cost O(limit), never O(table)
-        narrow.select(term(rowKey)).limit(Q9GuardLimit.toInt)
+    // cents are cast to bigint BEFORE any string building, so the
+    // row_key text is the oracle's concat_ws byte for byte
+    val term = graft.functions.Md5Prefix.column(s,
+      concat_ws("|", $"l_orderkey", $"l_partkey",
+        round($"l_quantity" * 100).cast("bigint"),
+        round($"l_extendedprice" * 100).cast("bigint")), 8).as("term")
+    val terms = Tables.lineitem(s, dir).select(term)
+    // bounded regime: the term is built below the LocalLimit, so the
+    // single-partition GlobalLimit gathers 8-byte bigints
+    val limited = if (noopLimit) terms else terms.limit(Q9GuardLimit.toInt)
     limited.agg(count(lit(1)).as("n"), sum($"term").as("digest"))
   }
 

@@ -528,7 +528,7 @@ object Dedup {
     * dedup pipeline already maintains. */
   def d19ClusterSplit(s: SparkSession, dir: String): DataFrame = {
     val splits = clusterTable(s, dir)
-      .select($"doc_id", graft.text.TextOps.splitAssign($"cluster_id").as("split"))
+      .select($"doc_id", graft.text.TextOps.splitAssign(s, $"cluster_id").as("split"))
     val tagged = lshPairsCached(s, dir)
       .join(splits.select($"doc_id".as("doc_a"), $"split".as("split_a")), "doc_a")
       .join(splits.select($"doc_id".as("doc_b"), $"split".as("split_b")), "doc_b")

@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, BloomFilterM
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType}
 
 /** Shared shape of the three native array-fold kernels: typed
   * array-pair input check plus the NULL contract that makes each
@@ -259,10 +259,12 @@ object NativeFunctions {
     ("sum_i64", classOf[SumI64], e => SumI64(e(0))),
     ("sum_f64", classOf[SumF64], e => SumF64(e(0))),
     ("phash_ascii", classOf[PhashAscii],
-      e => PhashAscii(e(0), PhashAscii.foldableBits(e(1)))),
+      e => PhashAscii(e(0), foldableInt("phash_ascii", e(1)))),
     ("bitmask_indices", classOf[BitmaskIndices], e => BitmaskIndices(e(0))),
     ("simhash_words", classOf[SimhashWords],
-      e => SimhashWords(e(0), Simhash.foldableBits(e(1)))),
+      e => SimhashWords(e(0), foldableInt("simhash_words", e(1)))),
+    ("md5_prefix", classOf[Md5Prefix],
+      e => Md5Prefix(e(0), foldableInt("md5_prefix", e(1)))),
     ("bottom_k_sketch", classOf[graft.plans.BottomKSketch],
       e => graft.plans.Sketches.bottomK(e.head)),
     // Catalyst's own bloom-filter pair: Spark ships the expressions for
@@ -271,6 +273,16 @@ object NativeFunctions {
     ("bloom_agg", classOf[BloomFilterAggregate], e => new BloomFilterAggregate(e(0), e(1), e(2))),
     ("bloom_might_contain", classOf[BloomFilterMightContain],
       e => BloomFilterMightContain(e(0), e(1))))
+
+  /** Registry seam for a width argument the kernel needs at plan
+    * time: the SQL form must pass a foldable int. */
+  private def foldableInt(fn: String, e: Expression): Int = e match {
+    case other if other.foldable && other.dataType == IntegerType =>
+      other.eval(null).asInstanceOf[Int]
+    case other =>
+      throw new IllegalArgumentException(
+        s"$fn width must be a foldable int literal, got $other")
+  }
 
   /** Registers the rows `s` does not resolve yet: a session built with
     * the extension, or already registered, is left untouched. */

@@ -273,19 +273,6 @@ case class SumF64(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-object PhashAscii {
-  /** Registry seam: the SQL form `phash_ascii(text, 16)` requires a
-    * plan-time-constant bit width. */
-  def foldableBits(e: Expression): Int = e match {
-    case org.apache.spark.sql.catalyst.expressions.Literal(i: Int, IntegerType) => i
-    case other if other.foldable && other.dataType == IntegerType =>
-      other.eval(null).asInstanceOf[Int]
-    case other =>
-      throw new IllegalArgumentException(
-        s"phash_ascii bits must be a foldable int literal, got $other")
-  }
-}
-
 /** `phash_ascii(text, bits)` — see [[Quant.phashAscii]]. `bits` must
   * be a foldable positive int ≤ 64 (plan-time constant). */
 case class PhashAscii(child: Expression, bits: Int) extends UnaryExpression {

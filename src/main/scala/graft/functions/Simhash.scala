@@ -4,7 +4,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** `simhash_words(text, bits)` → `array<bigint>` of ⌈bits/64⌉ words —
@@ -36,25 +36,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * replaced by direct digest-byte bit tests.
   */
 object Simhash {
-  private val tl = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-
-  /** Registry seam: the SQL form requires a plan-time-constant width. */
-  def foldableBits(e: Expression): Int = e match {
-    case org.apache.spark.sql.catalyst.expressions.Literal(i: Int, IntegerType) => i
-    case other if other.foldable && other.dataType == IntegerType =>
-      other.eval(null).asInstanceOf[Int]
-    case other =>
-      throw new IllegalArgumentException(
-        s"simhash_words bits must be a foldable int literal, got $other")
-  }
-
-  private val tlBuf = new ThreadLocal[Array[Byte]] {
-    override def initialValue(): Array[Byte] = new Array[Byte](16)
-  }
-
   /** Null iff the text has no non-empty tokens. */
   def words(text: UTF8String, bits: Int): ArrayData = {
     val groups = (bits + 31) / 32
@@ -62,8 +43,8 @@ object Simhash {
     val n = bytes.length
     val votes = new Array[Int](bits)
     val seen = new java.util.HashSet[java.nio.ByteBuffer]()
-    val md = tl.get()
-    val d = tlBuf.get() // reused 16-byte digest sink — ~1 G md.digest() allocations per B tokens otherwise
+    val md = Md5Prefix.md.get()
+    val d = Md5Prefix.sink.get() // ~1 G md.digest() allocations per B tokens otherwise
     var any = false
     var start = 0
     var i = 0

@@ -25,9 +25,14 @@ object Tables {
     * task holds 4 × 128 MB row groups and runs its scan-stage
     * projection 4-wide on a 32-core box no matter how many byte
     * splits planning reports (probed: `graft.tools.ProbeSplits`).
-    * Consumers that run corpus-sized per-row compute INSIDE the scan
-    * projection (simhash/shingle digests, ANN dot products) widen
-    * with one narrow round-robin exchange when this predicate holds.
+    * Consumers that run corpus-heavy per-row compute INSIDE the scan
+    * projection widen with one narrow round-robin exchange when this
+    * predicate holds: the documents seams ([[documentsWide]] —
+    * simhash and shingle digests, d17, t4, t14, t15, t17) and
+    * `Ann.corpus`'s dot products over embeddings. A cheap projection
+    * does not widen: the exchange's one map task still decodes and
+    * serializes the whole table single-threaded, which for q9's
+    * md5-prefix digest costs about what the digest does.
     * At cluster scale a corpus is thousands of files/row groups and
     * the branch is dead; it exists so single-box runs over
     * coarse-row-group files (bench dirs, vendor dumps) measure the

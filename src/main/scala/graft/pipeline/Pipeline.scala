@@ -341,8 +341,8 @@ object Pipeline {
     * gate pins the exact surviving document SET, not just counts. */
   def p2TrainingCorpus(s: SparkSession, dir: String): DataFrame =
     graft.dedup.Dedup.purgeSurvivors(s, dir)
-      .filter(graft.text.TextOps.sampleKeep($"doc_id", $"source"))
-      .withColumn("split", graft.text.TextOps.splitAssign($"doc_id"))
+      .filter(graft.text.TextOps.sampleKeep(s, $"doc_id", $"source"))
+      .withColumn("split", graft.text.TextOps.splitAssign(s, $"doc_id"))
       .groupBy($"source", $"split")
       .agg(count(lit(1)).as("n_docs"), sum($"n_chars").as("sum_chars"),
         expr("bit_xor(doc_id)").as("id_checksum"))
@@ -404,7 +404,7 @@ object Pipeline {
       .join(admitted, Seq("doc_id"), "left_semi")
       .withColumn("keep_id", min($"doc_id").over(Window.partitionBy(md5($"text"))))
       .filter($"doc_id" === $"keep_id")
-      .withColumn("split", graft.text.TextOps.splitAssign($"doc_id"))
+      .withColumn("split", graft.text.TextOps.splitAssign(s, $"doc_id"))
       .groupBy($"source", $"split")
       .agg(count(lit(1)).as("n_docs"), sum($"n_chars").as("sum_chars"),
         expr("bit_xor(doc_id)").as("id_checksum"))

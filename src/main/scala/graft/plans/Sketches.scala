@@ -150,7 +150,7 @@ object Sketches {
     * upper bound; est >= truth always, equality when no collision). */
   def x6CountMin(s: SparkSession, dir: String): DataFrame = {
     def bucket(d: Int, key: Column): Column =
-      conv(substring(md5(concat(lit(s"cm$d:"), key.cast("string"))), 1, 4), 16, 10)
+      graft.functions.Md5Prefix.column(s, concat(lit(s"cm$d:"), key.cast("string")), 4)
         .cast("int") % CmWidth
     val o = Tables.orders(s, dir)
     val rows = explode(array((0 until CmDepth).map(d =>

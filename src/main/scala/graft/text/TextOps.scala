@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.syntax._
+import graft.functions.Md5Prefix
 import graft.io.Tables
 
 /** Text-analysis operators for training-data pipelines, over `documents`.
@@ -151,9 +152,8 @@ object TextOps {
     * first two hex digits of a seeded md5 over the key — the portable
     * hash family — so the same document lands in the same split on any
     * engine, any cluster size, any run. Narrow map; no shuffle. */
-  def splitAssign(docId: Column): Column = {
-    val bucket = conv(substring(md5(concat(lit("split:"), docId)), 1, 2), 16, 10)
-      .cast("int")
+  def splitAssign(s: SparkSession, docId: Column): Column = {
+    val bucket = hashBucket(s, "split:", docId)
     when(bucket < 230, "train").when(bucket < 243, "val").otherwise("test")
   }
 
@@ -163,7 +163,7 @@ object TextOps {
     * pipeline materializes to verify split balance before training). */
   def t7TrainSplit(s: SparkSession, dir: String): DataFrame =
     Tables.documents(s, dir)
-      .select($"doc_id", $"n_chars", splitAssign($"doc_id").as("split"))
+      .select($"doc_id", $"n_chars", splitAssign(s, $"doc_id").as("split"))
       .groupBy($"split")
       .agg(count(lit(1)).as("n_docs"), sum($"n_chars").as("sum_chars"))
       .orderBy($"split")
@@ -244,21 +244,22 @@ object TextOps {
     * is the audit summary: per source, the rate, totals, and realized
     * keep share in ppm (integer division — bit-exact). */
   /** Two-hex-digit md5 bucket 0..255 over a seeded key — the portable
-    * uniform draw (t11's core, reused by the p2 training pipeline). */
-  def hashBucket(seed: String, k: Column): Column =
-    conv(substring(md5(concat(lit(seed), k)), 1, 2), 16, 10).cast("int")
+    * uniform draw (t11's core; t7's split and t12's feature bucket are
+    * the same family, and the p2/p4 pipelines reuse it). Read off the
+    * digest by the native `md5_prefix` kernel. */
+  def hashBucket(s: SparkSession, seed: String, k: Column): Column =
+    Md5Prefix.column(s, concat(lit(seed), k), 2).cast("int")
 
   /** t11's keep predicate: per-doc uniform draw under the per-source
     * hash-derived rate (16..79 of 256). */
-  def sampleKeep(docId: Column, source: Column): Column =
-    hashBucket("samp:", docId) < lit(16) + hashBucket("rate:", source) % 64
+  def sampleKeep(s: SparkSession, docId: Column, source: Column): Column =
+    hashBucket(s, "samp:", docId) < lit(16) + hashBucket(s, "rate:", source) % 64
 
   def t11StratifiedSample(s: SparkSession, dir: String): DataFrame = {
-    def bucket(seed: String, k: Column) = hashBucket(seed, k)
     Tables.documents(s, dir)
       .select($"doc_id", $"source",
-        bucket("samp:", $"doc_id").as("u"),
-        (lit(16) + bucket("rate:", $"source") % 64).as("rb"))
+        hashBucket(s, "samp:", $"doc_id").as("u"),
+        (lit(16) + hashBucket(s, "rate:", $"source") % 64).as("rb"))
       .groupBy($"source")
       .agg(max($"rb").as("rate_b"), count(lit(1)).as("n_total"),
         sum(when($"u" < $"rb", 1L).otherwise(0L)).as("n_kept"))
@@ -311,7 +312,7 @@ object TextOps {
   def t20SplitLeakage(s: SparkSession, dir: String): DataFrame = {
     val pairs = graft.dedup.Dedup.lshPairsCached(s, dir)
     val splits = Tables.documents(s, dir)
-      .select($"doc_id", splitAssign($"doc_id").as("split"))
+      .select($"doc_id", splitAssign(s, $"doc_id").as("split"))
     pairs
       .join(splits.select($"doc_id".as("doc_a"), $"split".as("split_a")), "doc_a")
       .join(splits.select($"doc_id".as("doc_b"), $"split".as("split_b")), "doc_b")
@@ -339,8 +340,7 @@ object TextOps {
     val tok = Tables.documents(s, dir)
       .select($"doc_id", explode(split($"text", " ")).as("tok"))
       .filter($"tok" =!= "")
-      .withColumn("b",
-        conv(substring(md5(concat(lit("feat:"), $"tok")), 1, 2), 16, 10).cast("int") % 16)
+      .withColumn("b", hashBucket(s, "feat:", $"tok") % 16)
     val bucketCounts = (0 until 16).map(i =>
       sum(when($"b" === i, 1L).otherwise(0L)).as(s"f$i"))
     tok.groupBy($"doc_id").agg(bucketCounts.head, bucketCounts.tail: _*)

@@ -367,7 +367,8 @@ class CodegenKernelsSpec extends AnyFunSuite {
       "sum_f64" -> SumF64(aD),
       "phash_ascii" -> PhashAscii(txt, 64),
       "bitmask_indices" -> BitmaskIndices(aL),
-      "simhash_words" -> SimhashWords(txt, 128))
+      "simhash_words" -> SimhashWords(txt, 128),
+      "md5_prefix" -> Md5Prefix(txt, 15))
     kernels.foreach { case (name, e) =>
       val proj = GenerateUnsafeProjection.generate(Seq(e)) // throws if codegen is broken
       assert(proj != null, name)
@@ -438,6 +439,55 @@ class CodegenKernelsSpec extends AnyFunSuite {
       .collect().sortBy(_.getLong(0))
     assert(empt(0).isNullAt(1) && empt(1).isNullAt(1) && !empt(2).isNullAt(1))
     docs.unpersist()
+  }
+
+  test("md5_prefix ≡ conv(substring(md5(x), 1, n), 16, 10) for n = 1..15, codegen and interpreted") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.types.StringType
+    import org.apache.spark.unsafe.types.UTF8String
+    graft.functions.NativeFunctions.register(spark)
+    val rand = samples(Gen.choose(0, 24).flatMap(n => Gen.listOfN(n,
+      Gen.oneOf(Gen.alphaNumChar.map(_.toString),
+        Gen.oneOf(" ", "|", "é", "ø", "ß", "中", "文", "😀", "\u0000")))
+      .map(_.mkString)), 500)
+    val texts: Seq[String] = Seq(null, "", "a", "split:17", "tøken 中文 😀") ++ rand
+    val digits = 1 to 15
+    val df = texts.zipWithIndex.map { case (t, i) => (i, t) }.toDF("id", "x")
+      .repartition(2) // a Project over a LocalRelation would be folded interpreted
+    val rows = df.select($"id" +: digits.flatMap(n => Seq(
+        conv(substring(md5($"x"), 1, n), 16, 10).cast("bigint").as(s"want$n"),
+        call_function("md5_prefix", $"x", lit(n)).as(s"got$n"))): _*)
+      .collect().sortBy(_.getInt(0))
+    assert(rows.length == texts.length)
+    val x = BoundReference(0, StringType, nullable = true)
+    val compiled = digits.map(n =>
+      GenerateUnsafeProjection.generate(Seq(graft.functions.Md5Prefix(x, n))))
+    rows.foreach { r =>
+      val t = texts(r.getInt(0))
+      val in = InternalRow(if (t == null) null else UTF8String.fromString(t))
+      digits.foreach { n =>
+        val want = if (r.isNullAt(2 * n - 1)) null else r.getLong(2 * n - 1)
+        val got = if (r.isNullAt(2 * n)) null else r.getLong(2 * n)
+        assert(got == want, s"whole-stage n=$n x=$t")
+        val out = compiled(n - 1)(in)
+        assert((if (out.isNullAt(0)) null else out.getLong(0)) == want, s"codegen n=$n x=$t")
+        assert(graft.functions.Md5Prefix(x, n).eval(in) == want, s"nullSafeEval n=$n x=$t")
+      }
+    }
+    assert(rows.head.isNullAt(1) && rows.head.isNullAt(2), "NULL in must be NULL out")
+  }
+
+  test("md5_prefix refuses a non-foldable or out-of-range width at analysis, naming itself") {
+    graft.functions.NativeFunctions.register(spark)
+    val df = Seq(("a", 2)).toDF("x", "n")
+    def messages(t: Throwable): String =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" / ")
+    for (n <- Seq($"n", lit(0), lit(16), lit(null).cast("int"))) {
+      val e = intercept[Exception](df.select(call_function("md5_prefix", $"x", n)))
+      assert(messages(e).contains("md5_prefix"), s"width $n: ${messages(e)}")
+    }
   }
 
   test("s10 zero-vector: the quantization chain yields NULL qq, never 0/NaN") {

@@ -240,6 +240,24 @@ class PlanSpec extends AnyFunSuite {
       "elided-limit digest must not sort:\n" + elided.take(2000))
     assert(!elided.contains("GlobalLimit"),
       "rows<=limit must elide the limit:\n" + elided.take(2000))
+    // and the digest runs inside the scan stage: no round-robin widen,
+    // no exchange of any kind below the partial aggregate
+    assert(!elided.contains("RoundRobinPartitioning"),
+      "elided-limit digest must not widen the scan:\n" + elided.take(2000))
+    val elidedPlan = Queries.q9Digest(spark, sf, noopLimit = true).queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.initialPlan
+      case p => p
+    }
+    val partials = elidedPlan.collect {
+      case h: org.apache.spark.sql.execution.aggregate.HashAggregateExec
+          if h.aggregateExpressions.forall(_.mode ==
+            org.apache.spark.sql.catalyst.expressions.aggregate.Partial) => h
+    }
+    assert(partials.nonEmpty, "no partial aggregate found:\n" + elided.take(2000))
+    partials.foreach { h =>
+      assert(h.collect { case e: org.apache.spark.sql.execution.exchange.Exchange => e }.isEmpty,
+        "exchange below q9's partial aggregate:\n" + elided.take(2000))
+    }
     // the dispatching entry picks the elided plan here: the test dir's
     // lineitem footer row count is far below the 2^20 guard
     val live = plan(Queries.q9LimitScan(spark, sf))
