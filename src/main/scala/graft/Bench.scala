@@ -108,23 +108,6 @@ object Bench {
   private[graft] def parseTimed(text: String): Option[Seq[Double]] =
     TimedRe.findFirstMatchIn(text).map(_.group(2).split(",").map(_.toDouble).toSeq)
 
-  /** The measurement session conf — ONE definition shared by Bench
-    * (in-suite) and `graft.tools.Entry` (fresh-JVM re-measure), so the two numbers
-    * can differ only by suite state, never by conf drift.
-    *
-    * Scale-proof shuffle sizing (round-9 sf1→sf10 finding): a fixed
-    * partition count means 10× data = 10× payload per sort/join task
-    * → spill → super-linear wall time (t15 exp 1.73, d5 1.42 at the
-    * pinned 32). Let AQE start wide and coalesce: big shuffles keep
-    * ~advisory-sized partitions at any SF, small ones still collapse
-    * to a handful. This is the production conf, not a bench trick.
-    *
-    * periodicGC: shuffle files are reference-tracked and only deleted
-    * when a GC runs (ContextCleaner): a 202-entry suite in ONE JVM
-    * accumulates them, and at 10× data the later entries measurably
-    * degrade from page-cache/disk pressure that isn't theirs (q31
-    * 4.4 s fresh vs 33 s late-suite at sf10). Harness hygiene so
-    * per-entry numbers stay per-entry. */
   /** Full-output consumption — ONE timing contract for every entry
     * (round-13 verdict finding 1): `.count()` lets Catalyst prune any
     * projection the count doesn't need, so two whole entry classes
@@ -178,46 +161,69 @@ object Bench {
     (r.getLong(0), r.getLong(1))
   }
 
+  /** The measurement session conf on `cpus` cores — ONE definition
+    * shared by Bench (in-suite), `graft.tools.Entry` (fresh-JVM
+    * re-measure), `Verify` and perfbench, so their numbers can differ
+    * only by suite state, never by conf drift.
+    *
+    * Scale-proof shuffle sizing (round-9 sf1→sf10 finding): a fixed
+    * partition count means 10× data = 10× payload per sort/join task
+    * → spill → super-linear wall time (t15 exp 1.73, d5 1.42 at the
+    * pinned 32). Each exchange's map side is sized from the bytes that
+    * enter it, under a ceiling, and AQE coalesces the reduce side: big
+    * shuffles keep ~advisory-sized partitions at any SF, small ones
+    * write and read a handful. This is the production conf, not a
+    * bench trick.
+    *
+    * periodicGC: shuffle files are reference-tracked and only deleted
+    * when a GC runs (ContextCleaner): a 202-entry suite in ONE JVM
+    * accumulates them, and at 10× data the later entries measurably
+    * degrade from page-cache/disk pressure that isn't theirs (q31
+    * 4.4 s fresh vs 33 s late-suite at sf10). Harness hygiene so
+    * per-entry numbers stay per-entry. */
+  def sessionConf(cpus: String): Map[String, String] = graft.io.LocalFs.conf ++ Map(
+    "spark.sql.extensions" -> classOf[GraftExtensions].getName,
+    "spark.sql.shuffle.partitions" -> cpus,
+    // initialPartitionNum is AQE's width CEILING: EnsureRequirements
+    // plans every exchange at it, and coalescing only merges reduce
+    // partitions downward from it; nothing splits a too-large
+    // partition in a plain (non-skew-join) shuffle. The map side is
+    // sized below it from the bytes that enter each exchange
+    // (graft.plans.ExchangeSizing, installed by the extension), so a
+    // KB shuffle writes `cpus` partitions, not the ceiling. The
+    // round-9 value of 256 carried two decades but capped the THIRD
+    // (sf100, measured round 10): t15's ~2 B-row token shuffle hit
+    // 256 spill-sized sort partitions and went exp 1.21 (230 s); at
+    // 1024 the same entry is 66 s (exp 0.67). 1024 ≈ two decades of
+    // headroom above the largest measured shuffle.
+    "spark.sql.adaptive.coalescePartitions.initialPartitionNum" ->
+      math.max(1024, cpus.toInt * 8).toString,
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.adaptive.enabled" -> "true",
+    // r16 optimization (guide §2.2 fewer-larger partitions): by
+    // default AQE may NOT change the output partitioning of a plan
+    // that feeds a .persist() (canChangeCachedPlanOutputPartitioning
+    // = false), so every cached table materialized at the FULL
+    // initialPartitionNum — the dedup memos (LSH pairs, cluster map)
+    // were 1024-partition RDDs of KB-sized blocks, and every
+    // consumer (d3/d6/d8/d14/d16/d19/t20/p2…) ran 1024-task stages
+    // over them: measured 0.5–0.7 s of pure scheduling per stage at
+    // sf0.1 (d19: 10 such stages). With coalescing allowed the cache
+    // materializes at AQE's advisory-sized width — partition count
+    // follows DATA SIZE at every SF, which is exactly the sizing
+    // rule the rest of the conf already encodes. Trade-off
+    // (documented on the conf): a consumer can no longer reuse the
+    // cached plan's exchange partitioning — irrelevant here, every
+    // consumer re-aggregates by a different key than the cache's
+    // output order.
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true",
+    "spark.cleaner.periodicGC.interval" -> "2min",
+    "spark.ui.enabled" -> "false")
+
   def session(cpus: String): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config(graft.io.LocalFs.conf)
-      .config("spark.sql.shuffle.partitions", cpus)
-      // initialPartitionNum is AQE's post-shuffle width CEILING —
-      // coalescing only merges downward from it; nothing splits a
-      // too-large partition in a plain (non-skew-join) shuffle. The
-      // round-9 value of 256 carried two decades but capped the THIRD
-      // (sf100, measured round 10): t15's ~2 B-row token shuffle hit
-      // 256 spill-sized sort partitions and went exp 1.21
-      // (230 s); at 1024 the same entry is 66 s (exp 0.67) while toy
-      // SFs measure no cost (q6 0.40→0.42 s — coalescing collapses
-      // unused width). 1024 ≈ two decades of headroom above the
-      // largest measured shuffle; SPARK_GRAFT_AQE_INIT overrides for
-      // scale stress beyond that.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_INIT",
-          math.max(1024, cpus.toInt * 8).toString))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // r16 optimization (guide §2.2 fewer-larger partitions): by
-      // default AQE may NOT change the output partitioning of a plan
-      // that feeds a .persist() (canChangeCachedPlanOutputPartitioning
-      // = false), so every cached table materialized at the FULL
-      // initialPartitionNum — the dedup memos (LSH pairs, cluster map)
-      // were 1024-partition RDDs of KB-sized blocks, and every
-      // consumer (d3/d6/d8/d14/d16/d19/t20/p2…) ran 1024-task stages
-      // over them: measured 0.5–0.7 s of pure scheduling per stage at
-      // sf0.1 (d19: 10 such stages). With coalescing allowed the cache
-      // materializes at AQE's advisory-sized width — partition count
-      // follows DATA SIZE at every SF, which is exactly the sizing
-      // rule the rest of the conf already encodes. Trade-off
-      // (documented on the conf): a consumer can no longer reuse the
-      // cached plan's exchange partitioning — irrelevant here, every
-      // consumer re-aggregates by a different key than the cache's
-      // output order.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.cleaner.periodicGC.interval", "2min")
-      .config("spark.ui.enabled", "false")
+      .config(sessionConf(cpus))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
@@ -565,6 +571,10 @@ object Bench {
     val confFp = s"""{"cpus":$Cpus,""" +
       s""""shufflePartitions":$confShufflePartitions,""" +
       s""""aqeInitialPartitionNum":$confAqeInit,""" +
+      // the ceiling now bounds a map side sized from its input bytes
+      // (graft.plans.ExchangeSizing); r16/r17 artifacts, which lack the
+      // field, ran every exchange at the ceiling
+      s""""exchangeSizing":"inputBytes*${graft.plans.ExchangeSizing.Growth}",""" +
       s""""aqe":$confAqe,""" +
       s""""freshEnabled":$freshOn,"freshFloor":$freshFloor,""" +
       s""""freshFamilies":"${FreshFamilies.mkString(",")}",""" +

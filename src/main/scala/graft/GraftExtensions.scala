@@ -7,7 +7,8 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 import graft.functions.{DotProductRewrite, NativeFunctions}
 
 /** Library integration point: register graft's native Catalyst
-  * functions through the standard extensions mechanism —
+  * functions, its optimizer and planner rules and its exchange sizing
+  * through the standard extensions mechanism —
   *
   *   spark.sql.extensions=graft.GraftExtensions
   *
@@ -31,5 +32,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // bounded-heap TopKPerGroupExec (logical node + strategy + exec)
     ext.injectOptimizerRule(_ => graft.plans.TopK.TopKRewrite)
     ext.injectPlannerStrategy(_ => graft.plans.TopK.TopKStrategy)
+    // each exchange's map side sized from the bytes that enter it
+    ext.injectQueryStagePrepRule(graft.plans.ExchangeSizing(_))
   }
 }

@@ -84,7 +84,13 @@ object Stream {
     * stream-stream joins keep FOUR stores per partition (at 32
     * partitions st11 regressed 8.6→11.7 s median at sf10 while the
     * 1-store aggregations sped up 5×), and RocksDB opens a native
-    * instance per store, so both widen four times more conservatively. */
+    * instance per store, so both widen four times more conservatively.
+    * Batch exchanges are sized by [[graft.plans.ExchangeSizing]], but
+    * that rule cannot size this width: a streaming query runs its
+    * micro-batches with AQE off, so no micro-batch plan reaches AQE's
+    * query-stage rules (ExchangeSizingSpec pins st6's exchanges at
+    * this width), and a stateful operator's partition count is fixed
+    * by its checkpoint at the first batch. */
   private[graft] def drainPartitionsFor(s: SparkSession, bytes: Long,
       storeWeight: Int): Int = {
     val cores = math.max(8, s.sparkContext.defaultParallelism)

@@ -8,8 +8,11 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.execution.{FormattedMode, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec, ShuffleQueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.Bench
 import graft.streaming.Stream
@@ -36,6 +39,12 @@ import graft.streaming.Stream
   *    with call sites; a job or stage whose only call site is a thread
   *    pool's (AQE's query stages) is named by its job description, which
   *    each pass sets to `<name> <pass> eager|consume`;
+  *  - `EXCHANGE`, once per shuffle stage, in the pass that first
+  *    shows it (read from the executed AQE plans and the plans of the
+  *    caches they read): its map-side partition count, the input bytes
+  *    [[graft.plans.ExchangeSizing]] sized it from (`unknown` when it
+  *    kept the ceiling unmeasured) and the bytes its map statuses
+  *    report written;
   *  - per drain, from the `Stream.drainObserver` seam: `BATCH` (every
   *    micro-batch's durations) and `STATE` (every stateful operator's
   *    rows, memory and RocksDB spill/memory metrics).
@@ -64,7 +73,7 @@ object Entry {
   /** One listener for everything a pass reports. The bus delivers
     * events asynchronously but in order, so once the marker job's end
     * arrives every earlier task, stage and job event has too. */
-  private final class Recorder(name: String) extends SparkListener {
+  private final class Recorder(name: String) extends SparkListener with QueryExecutionListener {
     @volatile var pass = "warm"
     val spillMem, spillDisk, shuffleWrite, shuffleRead = new AtomicLong
     val lines = new ConcurrentLinkedQueue[String]
@@ -72,6 +81,22 @@ object Entry {
     private val jobDescs = new ConcurrentHashMap[Int, String]
     private val markers = ConcurrentHashMap.newKeySet[Int]
     private val markerEnded = new Semaphore(0)
+    private val plans = new ConcurrentLinkedQueue[SparkPlan]
+    private val shuffles = ConcurrentHashMap.newKeySet[Int]
+
+    override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+      plans.add(qe.executedPlan)
+    override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+
+    /** One `EXCHANGE` line per shuffle stage first seen since the last call. */
+    def exchanges(): Unit = while (!plans.isEmpty) shuffleStages(plans.poll()).foreach { st =>
+      if (shuffles.add(st.shuffle.shuffleId)) {
+        val in = st.shuffle.asInstanceOf[SparkPlan].getTagValue(graft.plans.ExchangeSizing.InputBytes)
+        lines.add(s"EXCHANGE $name $pass shuffle=${st.shuffle.shuffleId} " +
+          s"partitions=${st.shuffle.outputPartitioning.numPartitions} inputBytes=${in.getOrElse("unknown")} " +
+          s"writeBytes=${st.mapStats.map(_.bytesByPartitionId.sum).getOrElse(-1L)}")
+      }
+    }
 
     override def onJobStart(e: SparkListenerJobStart): Unit = {
       val props = Option(e.properties)
@@ -150,6 +175,7 @@ object Entry {
     val rec = new Recorder(name)
     val sc = spark.sparkContext
     sc.addSparkListener(rec)
+    spark.listenerManager.register(rec)
     val prevObserver = Stream.drainObserver.getAndSet(rec.drained)
     try {
       def pass(tag: String): (Long, Long, Double) = {
@@ -164,6 +190,7 @@ object Entry {
         val (hash, rows) = Bench.consumeAll(df)
         val t2 = System.nanoTime()
         rec.caughtUp(sc)
+        rec.exchanges()
         val wrote = rec.shuffleWrite.get - wrote0
         val wchar = if (wchar0 < 0) -1L else jvmWrittenBytes() - wchar0
         if (wrote / 1e9 * 20 >= DiskPreflight.freeGb) { System.gc(); Thread.sleep(3000) }
@@ -181,8 +208,19 @@ object Entry {
       sc.setJobDescription(null)
       Stream.drainObserver.set(prevObserver)
       sc.removeSparkListener(rec)
+      spark.listenerManager.unregister(rec)
       stopStreams(spark)
     }
+  }
+
+  /** Every shuffle stage in an executed plan: through AQE plans, query
+    * stages, subqueries and the plans of the caches it reads. */
+  def shuffleStages(p: SparkPlan): Seq[ShuffleQueryStageExec] = p match {
+    case a: AdaptiveSparkPlanExec => shuffleStages(a.executedPlan)
+    case st: ShuffleQueryStageExec => st +: shuffleStages(st.plan)
+    case st: QueryStageExec => shuffleStages(st.plan)
+    case i: InMemoryTableScanExec => shuffleStages(i.relation.cachedPlan)
+    case _ => (p.children ++ p.subqueries).flatMap(shuffleStages)
   }
 
   /** Bytes this JVM has passed to `write` and its kin so far (the

@@ -45,6 +45,22 @@ class EntrySpec extends AnyFunSuite {
     assert(!r.detail.exists(l => l.startsWith("BATCH") || l.startsWith("STATE")))
   }
 
+  test("Entry.run q6_trend: EXCHANGE lines read the sized session's core count") {
+    val sized = SizingSessions.sized
+    val cores = sized.sparkContext.defaultParallelism
+    val r = Entry.run(sized, "q6_trend", sf, 1)
+    val lines = r.detail.filter(_.startsWith("EXCHANGE q6_trend rep1 "))
+    // the aggregate's exchange, sized from events' bytes; the gather is SinglePartition
+    assert(lines.exists(l => l.contains(s" partitions=$cores inputBytes=") &&
+      "inputBytes=(\\d+) writeBytes=(\\d+)".r.findFirstMatchIn(l).exists(_.group(2).toLong > 0)),
+      r.detail.mkString("\n"))
+    assert(lines.forall(l => l.contains(s" partitions=$cores ") || l.contains(" partitions=1 ")),
+      lines.mkString("\n"))
+    // one line per shuffle: no shuffle id twice
+    val ids = r.detail.filter(_.startsWith("EXCHANGE ")).map(" shuffle=(\\d+) ".r.findFirstMatchIn(_).get.group(1))
+    assert(ids.distinct.size == ids.size)
+  }
+
   test("Entry.run st6_stream_dedup: drain batch and state lines, no stream or view left") {
     val r = runClean("st6_stream_dedup")
     for (pass <- Seq("warm", "rep1"); kind <- Seq("BATCH", "STATE"))

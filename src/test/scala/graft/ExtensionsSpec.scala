@@ -362,6 +362,12 @@ class ExtensionsSpec extends AnyFunSuite {
     assert(r == 11.0)
   }
 
+  test("Bench.session installs GraftExtensions: the sizing rule, and md5_prefix with no register call") {
+    val log = ChildJvm.run("graft.BenchSessionCheck", Nil)
+    assert(log.contains("PREP-RULE graft.plans.ExchangeSizing"), log.takeRight(3000))
+    assert(log.contains("MD5-PREFIX resolved=true value=1657"), log.takeRight(3000))
+  }
+
   test("NativeFunctions.register leaves names the session already resolves alone") {
     val registry = spark.sessionState.functionRegistry
     graft.functions.NativeFunctions.register(spark)
@@ -382,5 +388,22 @@ class ExtensionsSpec extends AnyFunSuite {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None)    => spark.conf.unset(k)
     }
+  }
+}
+
+/** Child-JVM half of the ExtensionsSpec `Bench.session` test: a fresh
+  * `Bench.session` lists its query-stage preparation rules, then, before
+  * anything could call `NativeFunctions.register`, resolves `md5_prefix`
+  * and evaluates it (md5("graft") starts with hex 679c, so
+  * `md5_prefix('graft', 3)` = 0x679 = 1657). */
+object BenchSessionCheck {
+  def main(args: Array[String]): Unit = {
+    val spark = Bench.session("2")
+    spark.sessionState.adaptiveRulesHolder.queryStagePrepRules
+      .foreach(r => println(s"PREP-RULE ${r.getClass.getName}"))
+    val resolved = spark.catalog.functionExists("md5_prefix")
+    val v = spark.sql("SELECT md5_prefix('graft', 3)").head().getLong(0)
+    println(s"MD5-PREFIX resolved=$resolved value=$v")
+    spark.stop()
   }
 }
