@@ -37,7 +37,7 @@ object Dedup {
     * Set-cardinality consumers (Jaccard, containment) shingle only
     * their pair docs, through [[pairOverlap]]. */
   private def shingles(s: SparkSession, dir: String): DataFrame =
-    // Widened-when-starved (Tables.documentsWide): the shingle
+    // Widened by bytes (Tables.documentsWide): the shingle
     // enumeration + the signature's map-side partial mins fuse into
     // the SCAN stage, whose width is row-group-bound. min() is
     // order-independent.
@@ -359,15 +359,12 @@ object Dedup {
     graft.functions.NativeFunctions.register(s)
     // The digest work lives in the scan projection, so its
     // parallelism is the scan's EFFECTIVE split count — row-group-
-    // bound, not planned-split-bound (Tables.scanStarved; the r13
-    // first cut compared planned splits and only fired by luck on
-    // files whose byte count ALSO planned narrow — sf100's 16 GB
+    // bound, not planned-split-bound (Tables.widened; sf100's 16 GB
     // docs planned 32 splits but carried 5 row groups, so the md5
-    // kernel ran 5-wide on 32 cores with the predicate dark). At
-    // corpus scale row groups are abundant and this branch is dead;
-    // when starved, widen with one (doc_id, text) round-robin
-    // exchange — corpus bytes, one pass, still ~token-stream-size/30
-    // cheaper than what the retired explode spelling shuffled.
+    // kernel ran 5-wide on 32 cores). A file big enough to pay for it
+    // widens with one (doc_id, text) round-robin exchange — corpus
+    // bytes, one pass, still ~token-stream-size/30 cheaper than what
+    // the retired explode spelling shuffled.
     Tables.documentsWide(s, dir, Seq("doc_id", "text"))
       .select($"doc_id",
         call_function("simhash_words", $"text", lit(bits)).as("words"))
@@ -956,7 +953,7 @@ object Dedup {
     * ubiquitous boilerplate shingles are exactly what t17 strips
     * upstream of this audit at scale. */
   def d17CrossSourceOverlap(s: SparkSession, dir: String): DataFrame =
-    // widened-when-starved: the shingle explode + map-side bit_or
+    // widened by bytes: the shingle explode + map-side bit_or
     // partials fuse into the scan stage (bit math — order-safe)
     crossSourceOverlap(s, Tables.documentsWide(s, dir, Seq("source", "text")))
 

@@ -265,6 +265,7 @@ object NativeFunctions {
       e => SimhashWords(e(0), foldableInt("simhash_words", e(1)))),
     ("md5_prefix", classOf[Md5Prefix],
       e => Md5Prefix(e(0), foldableInt("md5_prefix", e(1)))),
+    ("token_profile", classOf[TokenProfile], e => TokenProfile(e(0))),
     ("bottom_k_sketch", classOf[graft.plans.BottomKSketch],
       e => graft.plans.Sketches.bottomK(e.head)),
     // Catalyst's own bloom-filter pair: Spark ships the expressions for

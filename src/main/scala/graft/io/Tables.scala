@@ -2,6 +2,7 @@ package graft.io
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.LongType
 
 /** Parquet readers for the driver testdata star schema (TESTDATA.md).
@@ -17,30 +18,40 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Effective scan parallelism of `dir/name.parquet`, and the widen
-    * predicate built on it (round-13 finding, measured): parquet
-    * assigns each ROW GROUP to the byte-split containing its start
-    * offset, so a file's non-empty scan tasks are
-    * min(planned splits, row groups) — a 520 MB file written by one
-    * task holds 4 × 128 MB row groups and runs its scan-stage
-    * projection 4-wide on a 32-core box no matter how many byte
-    * splits planning reports (probed: `graft.tools.ProbeSplits`).
-    * Consumers that run corpus-heavy per-row compute INSIDE the scan
-    * projection widen with one narrow round-robin exchange when this
-    * predicate holds: the documents seams ([[documentsWide]] —
-    * simhash and shingle digests, d17, t4, t14, t15, t17) and
-    * `Ann.corpus`'s dot products over embeddings. A cheap projection
-    * does not widen: the exchange's one map task still decodes and
-    * serializes the whole table single-threaded, which for q9's
-    * md5-prefix digest costs about what the digest does.
-    * At cluster scale a corpus is thousands of files/row groups and
-    * the branch is dead; it exists so single-box runs over
-    * coarse-row-group files (bench dirs, vendor dumps) measure the
-    * plan, not the writer's layout. Only order-independent consumers
-    * (digest/count/min/bit math) may widen — a round-robin exchange
-    * reorders rows, which would move float-sum bits. */
-  def scanStarved(s: SparkSession, dir: String, name: String): Boolean =
-    effectiveScanSplits(s, dir, name) < s.sparkContext.defaultParallelism
+  /** `df`, a projection of `dir/name.parquet`, round-robin widened to
+    * n = [[graft.plans.ExchangeSizing.width]](file bytes, advisory, 1,
+    * cores) partitions when n exceeds the file's
+    * [[effectiveScanSplits]] — the byte rule every other exchange is
+    * sized by, applied to the scan a compute-heavy projection runs in.
+    *
+    * Why a widen at all (round-13 finding, measured): parquet assigns
+    * each ROW GROUP to the byte-split containing its start offset, so
+    * a file's non-empty scan tasks are min(planned splits, row groups)
+    * — a single-writer file of one row group runs its scan-stage
+    * projection 1-wide however many cores the box has. Consumers whose
+    * per-row compute dominates (the documents seams of
+    * [[documentsWide]], `Ann.corpus`'s dot products) pay one exchange
+    * of the raw rows to run that compute n-wide.
+    *
+    * Why sized by bytes: the exchange's one map task still decodes and
+    * serializes the whole table single-threaded, so on a small file
+    * the widen costs more than it buys. Measured on 4 cores
+    * (SCALING.md §"The corpus widen, sized from its bytes"): a 0.12 MB
+    * or 0.59 MB documents file (n = 1) is faster narrow, a 5.7 MB or
+    * 57 MB one (n = 4) 1.6–3.2× faster widened, and 1.8 MB gives
+    * n = 2. At cluster scale a corpus is thousands of row groups and
+    * the branch is dead. Only order-independent consumers may widen
+    * (digest/count/min/bit math, or per-row outputs under a
+    * total-order final sort): the exchange reorders rows, which would
+    * move the bits of a float sum. */
+  def widened(s: SparkSession, dir: String, name: String, df: DataFrame): DataFrame = {
+    val bytes = SessionMemo.leaves(s, s"$dir/$name.parquet")
+      .filter(_.getPath.getName.endsWith(".parquet")).map(f => BigInt(f.getLen)).sum
+    val n = graft.plans.ExchangeSizing.width(bytes,
+      s.sessionState.conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES),
+      1, s.sparkContext.defaultParallelism)
+    if (n > 1 && n > effectiveScanSplits(s, dir, name)) df.repartition(n) else df
+  }
 
   /** Sum of `probe` over the footers of every `.parquet` leaf under
     * `path` — the driver's single FILE named `<name>.parquet` or a
@@ -80,9 +91,8 @@ object Tables {
     * If the footer probe fails or finds NO parquet leaves, the row-group
     * bound falls back to "unknown = not limiting" (MaxValue) — the
     * conservative direction: no widen, plan exactly as before the
-    * predicate existed. (A literal 0 would be the opposite failure:
-    * scanStarved pinned true, the widen exchange taxed onto every
-    * consumer of that dir forever.) */
+    * probe existed. (A literal 0 would be the opposite failure: the
+    * widen exchange taxed onto every consumer of that dir forever.) */
   def effectiveScanSplits(s: SparkSession, dir: String, name: String): Int = {
     val path = s"$dir/$name.parquet"
     val sql = s.sessionState.conf
@@ -129,22 +139,17 @@ object Tables {
       }
     }
 
-  /** The documents table (optionally narrowed to `cols` first, so the
-    * exchange ships only what the consumer reads), round-robin-widened
-    * when [[scanStarved]] says the file's row-group layout would
-    * starve a compute-heavy scan projection. ONLY for consumers whose
-    * downstream math is order-independent (digest/count/min/bit
-    * aggregation, or per-row outputs under a total-order final sort) —
-    * the exchange reorders rows, which would move the bits of a float
-    * sum. Consumers with order-sensitive float accumulation stay on
-    * [[documents]]. */
+  /** The documents table, narrowed to `cols` first (so the exchange
+    * ships only what the consumer reads) and [[widened]] by its file
+    * bytes. ONLY for consumers whose downstream math is
+    * order-independent (digest/count/min/bit aggregation, or per-row
+    * outputs under a total-order final sort); consumers with
+    * order-sensitive float accumulation stay on [[documents]]. */
   def documentsWide(s: SparkSession, dir: String,
       cols: Seq[String] = Nil): DataFrame = {
     val base = documents(s, dir)
-    val docs = if (cols.isEmpty) base else base.select(cols.map(col): _*)
-    if (scanStarved(s, dir, "documents"))
-      docs.repartition(s.sparkContext.defaultParallelism)
-    else docs
+    widened(s, dir, "documents",
+      if (cols.isEmpty) base else base.select(cols.map(col): _*))
   }
 
   def region(s: SparkSession, d: String): DataFrame     = table(s, d, "region")

@@ -391,17 +391,15 @@ object Pipeline {
     * min doc_id per content hash) → deterministic train/val/test split
     * → per-(source, split) audit with an id checksum pinning the exact
     * surviving set. Same composition point as p2: the stages are plan
-    * fragments fused by Catalyst into one job — the token-frequency
-    * aggregate (gate), the hash window (dedup), and the md5 split
-    * predicate never materialize between stages. At 100 TB the gate's
-    * two token shuffles dominate and are map-side combined; everything
-    * downstream rides the already-shrunk survivor set. */
+    * fragments fused by Catalyst into one job — the row-local gate
+    * (`token_profile` in the scan stage, so its filter needs no join
+    * back: doc_id keys the table), the hash window (dedup), and the
+    * md5 split predicate never materialize between stages. The first
+    * exchange is the dedup window's, over the already-shrunk survivor
+    * set. */
   def p4CurationPipeline(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val admitted = graft.text.TextOps.t18QualityGate(s, dir)
-      .filter($"keep" === 1).select($"doc_id")
-    Tables.documents(s, dir)
-      .join(admitted, Seq("doc_id"), "left_semi")
+    graft.text.TextOps.qualityAdmitted(Tables.documents(s, dir))
       .withColumn("keep_id", min($"doc_id").over(Window.partitionBy(md5($"text"))))
       .filter($"doc_id" === $"keep_id")
       .withColumn("split", graft.text.TextOps.splitAssign(s, $"doc_id"))
@@ -468,9 +466,7 @@ object Pipeline {
       .parquet(s"$work/in")
     graft.streaming.Stream.drain(s, work, src,
       graft.streaming.Stream.Sink.Batches(admitted) { (batch, batchId) =>
-        val keep = graft.text.TextOps.qualityVerdict(batch)
-          .filter(col("keep") === 1).select(col("doc_id"))
-        val gated = batch.join(keep, Seq("doc_id"), "left_semi")
+        val gated = graft.text.TextOps.qualityAdmitted(batch)
           .withColumn("h", md5(col("text")))
         val firstInBatch = gated.withColumn("rk",
             org.apache.spark.sql.functions.row_number().over(

@@ -107,39 +107,30 @@ object Ann {
                  for i in range(1, ${Dim + 1})]) >= 0 THEN ${1L << b} ELSE 0 END)"""
     }.mkString(" + ")
 
-  /** `heavy = false` (r13 ADVICE, measured): the starved-scan widen
-    * below pays one round-robin exchange of the raw corpus to buy scan
-    * parallelism — a clear win for consumers whose per-row compute
-    * dominates (brute dots, quantization, Lloyd's assignment, rerank),
-    * but a measured REGRESSION for the light bucket-hash tiers (s2
-    * 1.5 → 2.3 s at sf100: 8 plane dots per row is cheaper than
-    * exchanging the row). Light consumers opt out and keep the narrow
-    * scan. */
+  /** The embeddings corpus with its cosine inputs. Every tier's
+    * corpus-sized math (the 8 plane dots of the LSH bucket id,
+    * quantization, Lloyd's-round assignment, the brute dot products
+    * themselves) runs in the scan-stage projection, whose width is the
+    * file's row-group count ([[Tables.widened]]; probed r13: sf100's
+    * 520 MB embeddings = 4 row groups on 32 cores). Heavy consumers
+    * ride that widen, sized from the file's bytes, as one round-robin
+    * exchange of the RAW float rows (pre-cast: half the bytes of the
+    * double form); their downstream math is order-independent per
+    * pair/row (dots, int-quantized sums, windowed top-k with
+    * total-order tie-breaks), so the reorder moves no output bits.
+    * Filters on corpus consumers (the query panel, centroid seeds)
+    * still push below the exchange, so query-side subplans stay
+    * metadata-sized.
+    *
+    * `heavy = false` (r13 ADVICE, measured): the light bucket-hash
+    * tiers never widen — s2 went 1.5 → 2.3 s at sf100 with it, because
+    * 8 plane dots per row are cheaper than exchanging the row. */
   private def corpus(s: SparkSession, dir: String,
       heavy: Boolean = true): DataFrame = {
     graft.functions.NativeFunctions.register(s)
     val v = col("embedding").cast("array<double>")
     val base = Tables.embeddings(s, dir)
-    // Every tier's corpus-sized math (the 8 plane dots of the LSH
-    // bucket id, quantization, Lloyd's-round assignment, the brute
-    // dot products themselves) runs in the SCAN stage projection, so
-    // its parallelism is the scan's EFFECTIVE split count — which is
-    // row-group-bound, not planned-split-bound (Tables.scanStarved's
-    // scaladoc; probed r13: sf100's 520 MB embeddings = 4 row groups
-    // → the whole brute-force pair loop ran 4-wide on 32 cores, and
-    // a planned-splits predicate never fired because planning said
-    // 32). Widen with one round-robin exchange of the RAW float rows
-    // (pre-cast: half the bytes of the double form). Dead branch at
-    // corpus scale; consumers' downstream math is order-independent
-    // per pair/row (dots, int-quantized sums, windowed top-k with
-    // total-order tie-breaks), so the reorder moves no output bits.
-    // Filters on corpus consumers (the query panel, centroid seeds)
-    // still push below the exchange, so query-side subplans stay
-    // metadata-sized.
-    val wide =
-      if (heavy && Tables.scanStarved(s, dir, "embeddings"))
-        base.repartition(s.sparkContext.defaultParallelism)
-      else base
+    val wide = if (heavy) Tables.widened(s, dir, "embeddings", base) else base
     wide.select($"vec_id", $"label", v.as("v"), sqrt(dot(v, v)).as("nrm"))
   }
 

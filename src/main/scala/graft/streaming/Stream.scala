@@ -602,22 +602,21 @@ object Stream {
     * t18 rules are per-document independent, which is exactly what
     * makes them STREAMABLE — batch boundaries cannot change a verdict
     * (corpus-level ops like d1/d6 need the incremental-index shape,
-    * p3/d13, instead). foreachBatch is the st7 idiom: the gate's two
-    * aggregations are legal there where a chained streaming groupBy is
-    * not. At 100 TB this is the admission loop at the ingest edge —
-    * each arrival interval pays gate cost ∝ batch, never corpus. */
+    * p3/d13, instead). The gate is a row-local filter
+    * (`TextOps.qualityAdmitted`); foreachBatch (the st7 idiom) keeps
+    * each batch's write idempotent. At 100 TB this is the admission
+    * loop at the ingest edge — each arrival interval pays gate cost ∝
+    * batch, never corpus. */
   def st15StreamCuration(s: SparkSession, dir: String): DataFrame = {
     val work = workDir("graft_st15_")
     val admitted = s"$work/admitted"
     drain(s, work, graft.io.Tables.documentsStream(s, dir),
       Sink.Batches(admitted) { (batch, batchId) =>
-        val keep = graft.text.TextOps.qualityVerdict(batch)
-          .filter(col("keep") === 1).select(col("doc_id"))
         // one OVERWRITTEN partition-style dir per batch id: a batch
         // replayed after a crash-before-checkpoint lands on the same
         // path instead of appending twice — the write is idempotent
         // per batch, which is what makes the blind zone append safe
-        batch.join(keep, Seq("doc_id"), "left_semi")
+        graft.text.TextOps.qualityAdmitted(batch)
           .write.mode("overwrite").format(Snapshot.ZoneFormat)
           .save(s"$admitted/b=$batchId")
         ()

@@ -120,7 +120,7 @@ object TextOps {
     // allowlisted in PlanSpec's codegen audit with the measured
     // verdict (SCALING.md §round-13). Keeping the min in-array keeps
     // t4 a pure narrow map: no shuffle at any corpus size.
-    // Widened-when-starved (Tables.documentsWide): the md5-per-window
+    // Widened by bytes (Tables.documentsWide): the md5-per-window
     // work fuses into the scan stage, whose width is row-group-bound;
     // per-row digests under the total-order final sort are
     // order-independent, so the round-robin exchange moves no bits.
@@ -689,7 +689,7 @@ object TextOps {
     * per-doc sort — at 100 TB the vocabulary join shuffles on tok and
     * the final pass keeps 3 rows per doc per task).
     *
-    * The token source rides the widened-when-starved scan seam
+    * The token source rides the widened scan seam
     * ([[graft.io.Tables.documentsWide]], r15): the tokenize+explode
     * stage is the entry's compute bulk, and on a row-group-starved
     * single-file dir it ran at 4–5/32 threads (sf100 measured 224–378 s
@@ -752,7 +752,7 @@ object TextOps {
     // and measured at sf10 the lambda spelling cost 1.6× the whole
     // entry by dropping the scan-side projection out of whole-stage
     // codegen.
-    // widened-when-starved: tokenize + bigram zip + the count
+    // widened by bytes: tokenize + bigram zip + the count
     // partials fuse into the scan stage (integer counts — order-safe)
     val docs = Tables.documentsWide(s, dir, Seq("doc_id", "source", "text"))
       .select($"doc_id", $"source",
@@ -836,7 +836,7 @@ object TextOps {
     * shuffle-on-shingle — co-partitioned with the DF aggregate, so AQE
     * reuses the exchange. */
   def t17Boilerplate(s: SparkSession, dir: String): DataFrame = {
-    // widened-when-starved: the shingle explode + both count partials
+    // widened by bytes: the shingle explode + both count partials
     // fuse into the scan stage (count math — order-safe)
     val sh = graft.functions.Shingles.kgramRows(
         Tables.documentsWide(s, dir, Seq("doc_id", "text")),
@@ -857,7 +857,14 @@ object TextOps {
     // in this count was tried and defeated — the optimizer rewrites
     // count(non-null col) to count(1) and prunes `c`, de-identifying
     // the subtrees. The win that stands is on the PROBE side below.
-    val docFreq = pairCounts.groupBy($"sh").agg(count(lit(1)).as("n_docs"))
+    // The shingle-frequency table is as large as the corpus's distinct
+    // shingles, so the join is a shuffle join on sh, by hint: the
+    // planner's estimate of it ignores the explode's fan-out (a Generate
+    // inherits its child's size) and read 7.6 MB for a 57 MB documents
+    // file, under the 10 MB broadcast threshold, while the relation it
+    // built passed 3.6 GB; AQE then keeps a planned broadcast, because
+    // a sort-merge join would add an exchange.
+    val docFreq = pairCounts.groupBy($"sh").agg(count(lit(1)).as("n_docs")).hint("merge")
     val perDoc = pairCounts.join(docFreq, "sh")
       .groupBy($"doc_id").agg(
         sum($"c").as("n_shingles"),
@@ -881,31 +888,45 @@ object TextOps {
     * sum_chars vs 3n/10n, no division), 8 repetition (top token >20% —
     * integer form 5·top_c > n), 16 unnatural (fewer than 2 stopword
     * hits). All predicates are exact integer algebra over one
-    * token-frequency aggregation, so the gate is bit-exact and the
-    * whole stage is two map-side-combined shuffles (doc,tok → doc). At
-    * 100 TB this replaces five separate filter scans with one pass. */
-  /** The t18 rule set over an arbitrary (doc_id, text) frame — per-doc
-    * independent, so it applies unchanged to a streaming micro-batch
-    * (st15) or the full table (t18). */
-  def qualityVerdict(docs: DataFrame): DataFrame = {
-    val tf = tokensOf(docs, $"doc_id")
-      .groupBy($"doc_id", $"tok").agg(count(lit(1)).as("c"))
-    val agg = tf.groupBy($"doc_id").agg(
-      sum($"c").as("n_tokens"), max($"c").as("top_c"),
-      sum(length($"tok") * $"c").as("sum_chars"),
-      sum(when($"tok".isin(Stopwords: _*), $"c").otherwise(0L)).as("stop_hits"))
-    val mask =
-      when($"n_tokens" < 20, 1).otherwise(0) +
-      when($"n_tokens" > 10000, 2).otherwise(0) +
-      when($"sum_chars" < $"n_tokens" * 3 || $"sum_chars" > $"n_tokens" * 10, 4).otherwise(0) +
-      when($"top_c" * 5 > $"n_tokens", 8).otherwise(0) +
-      when($"stop_hits" < 2, 16).otherwise(0)
-    agg.select($"doc_id", $"n_tokens", mask.cast("int").as("reason_mask"))
-      .withColumn("keep", ($"reason_mask" === 0).cast("int"))
-  }
-
+    * row-local token-frequency summary (the `token_profile` kernel,
+    * [[graft.functions.TokenProfile]]), so the gate is bit-exact and
+    * runs inside the scan stage: no exchange before the verdict. The
+    * table form reads the widened documents seam, so at scale the
+    * verdict's compute runs at the widen's width. */
   def t18QualityGate(s: SparkSession, dir: String): DataFrame =
-    qualityVerdict(Tables.documents(s, dir)).orderBy($"doc_id")
+    qualityVerdict(Tables.documentsWide(s, dir, Seq("doc_id", "text"))).orderBy($"doc_id")
+
+  /** The t18 rule set over an arbitrary (doc_id, text) frame: (doc_id,
+    * n_tokens, reason_mask, keep), one row per document with at least
+    * one token. Per-row independent, so a batch boundary never changes
+    * a verdict; the streaming gates (st15, p5) apply the same rules
+    * through [[qualityAdmitted]]. */
+  def qualityVerdict(docs: DataFrame): DataFrame =
+    profiled(docs).select($"doc_id", $"__p.n_tokens".as("n_tokens"),
+        reasonMask.cast("int").as("reason_mask"))
+      .withColumn("keep", ($"reason_mask" === 0).cast("int"))
+
+  /** The rows of `docs` the t18 gate keeps, columns unchanged — the
+    * in-row equivalent of a semi join against [[qualityVerdict]]'s
+    * kept ids, for frames keyed uniquely by doc_id. */
+  def qualityAdmitted(docs: DataFrame): DataFrame =
+    profiled(docs).filter(reasonMask === 0).drop("__p")
+
+  /** `docs` with its token profile in `__p`, documents without tokens
+    * dropped (the explode spelling never saw them). */
+  private def profiled(docs: DataFrame): DataFrame =
+    docs.withColumn("__p", graft.functions.TokenProfile.column(docs.sparkSession, $"text"))
+      .filter($"__p".isNotNull)
+
+  private def reasonMask: Column = {
+    val (n, top, chars, stops) =
+      ($"__p.n_tokens", $"__p.top_c", $"__p.sum_chars", $"__p.stop_hits")
+    when(n < 20, 1).otherwise(0) +
+      when(n > 10000, 2).otherwise(0) +
+      when(chars < n * 3 || chars > n * 10, 4).otherwise(0) +
+      when(top * 5 > n, 8).otherwise(0) +
+      when(stops < 2, 16).otherwise(0)
+  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "t18_quality_gate" -> t18QualityGate _,

@@ -41,7 +41,9 @@ import graft.streaming.Stream
   *    each pass sets to `<name> <pass> eager|consume`;
   *  - `EXCHANGE`, once per shuffle stage, in the pass that first
   *    shows it (read from the executed AQE plans and the plans of the
-  *    caches they read): its map-side partition count, the input bytes
+  *    caches they read): its origin (`ENSURE_REQUIREMENTS` for a
+  *    planner-inserted exchange, `REPARTITION_BY_NUM` for a widen such
+  *    as `Tables.widened`), its map-side partition count, the input bytes
   *    [[graft.plans.ExchangeSizing]] sized it from (`unknown` when it
   *    kept the ceiling unmeasured) and the bytes its map statuses
   *    report written;
@@ -92,7 +94,7 @@ object Entry {
     def exchanges(): Unit = while (!plans.isEmpty) shuffleStages(plans.poll()).foreach { st =>
       if (shuffles.add(st.shuffle.shuffleId)) {
         val in = st.shuffle.asInstanceOf[SparkPlan].getTagValue(graft.plans.ExchangeSizing.InputBytes)
-        lines.add(s"EXCHANGE $name $pass shuffle=${st.shuffle.shuffleId} " +
+        lines.add(s"EXCHANGE $name $pass shuffle=${st.shuffle.shuffleId} origin=${st.shuffle.shuffleOrigin} " +
           s"partitions=${st.shuffle.outputPartitioning.numPartitions} inputBytes=${in.getOrElse("unknown")} " +
           s"writeBytes=${st.mapStats.map(_.bytesByPartitionId.sum).getOrElse(-1L)}")
       }

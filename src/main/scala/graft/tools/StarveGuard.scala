@@ -31,10 +31,12 @@ import org.apache.spark.sql.SparkSession
   * missing from the dir probes as 0 bytes and is skipped.
   *
   * Override: SPARK_GRAFT_STARVE_FORCE=1 — for entries that ride a
-  * widen seam (Tables.documentsWide repartitions a starved scan for
-  * order-independent consumers: t4/t14/t15/t17/simhash/shingles/
-  * Ann.corpus/d17), whose effective width after the widen exchange is
-  * the full core count even though the raw layout trips the guard. */
+  * widen seam (`Tables.widened` repartitions a scan to the width its
+  * file bytes ask for, at most the core count, for order-independent
+  * consumers: t4/t14/t15/t17/t18/simhash/shingles/Ann.corpus/d17):
+  * every table this guard can trip on (≥ 256 MB) asks for all the
+  * cores, so after the widen exchange the scan runs full-width even
+  * though the raw layout trips the guard. */
 object StarveGuard {
   /** Longest-prefix-first entry-family → input-table map. */
   private[graft] val FamilyTables: Seq[(String, Seq[String])] = Seq(
@@ -88,7 +90,7 @@ object StarveGuard {
           f"effectiveSplits=$eff cores=$cores bytes=${bytes / 1e9}%.2fGB — " +
           "widen-eligible: the scan stage would run at a fraction of the " +
           "box; rewrite the table as multiple files / more row groups, or " +
-          "(if every consumer rides a widen seam like Tables.documentsWide) " +
+          "(if every consumer rides the Tables.widened seam) " +
           "force with SPARK_GRAFT_STARVE_FORCE=1")
       }
       if (!sys.env.get("SPARK_GRAFT_STARVE_FORCE").contains("1")) {

@@ -368,7 +368,8 @@ class CodegenKernelsSpec extends AnyFunSuite {
       "phash_ascii" -> PhashAscii(txt, 64),
       "bitmask_indices" -> BitmaskIndices(aL),
       "simhash_words" -> SimhashWords(txt, 128),
-      "md5_prefix" -> Md5Prefix(txt, 15))
+      "md5_prefix" -> Md5Prefix(txt, 15),
+      "token_profile" -> TokenProfile(txt))
     kernels.foreach { case (name, e) =>
       val proj = GenerateUnsafeProjection.generate(Seq(e)) // throws if codegen is broken
       assert(proj != null, name)
@@ -488,6 +489,58 @@ class CodegenKernelsSpec extends AnyFunSuite {
       val e = intercept[Exception](df.select(call_function("md5_prefix", $"x", n)))
       assert(messages(e).contains("md5_prefix"), s"width $n: ${messages(e)}")
     }
+  }
+
+  test("token_profile ≡ the explode/groupBy verdict spelling, whole-stage, compiled and interpreted") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.types.StringType
+    import org.apache.spark.unsafe.types.UTF8String
+    val stop = graft.text.TextOps.Stopwords
+    // the retired qualityVerdict aggregates, verbatim over (id, text)
+    def reference(docs: org.apache.spark.sql.DataFrame) =
+      docs.select($"id", explode(split($"text", " ")).as("tok")).filter($"tok" =!= "")
+        .groupBy($"id", $"tok").agg(count(lit(1)).as("c"))
+        .groupBy($"id").agg(sum($"c").as("n_tokens"), max($"c").as("top_c"),
+          sum(length($"tok") * $"c").as("sum_chars"),
+          sum(when($"tok".isin(stop: _*), $"c").otherwise(0L)).as("stop_hits"))
+    val edges = Seq(null, "", " ", "   ", "a  b", "  a b  ", "a\tb c", // empty, spaces, tab
+      "tøken 中文 😀 tøken", "é é ß", // multibyte
+      "x y x y z", "b a b a", // tied top tokens
+      "a a", "an", "the an a", "and to of", "thee a_ an the", "THE The the")
+    val rand = samples(Gen.choose(0, 40).flatMap(n => Gen.listOfN(n,
+      Gen.oneOf(Gen.oneOf(stop), Gen.oneOf("", " ", "an", "ab", "ø", "中", "😀", "x"),
+        Gen.alphaStr.map(_.take(6))))
+      .map(_.mkString(" "))), 500)
+    val texts = edges ++ rand
+    val df = texts.zipWithIndex.map { case (t, i) => (i, t) }.toDF("id", "text")
+      .repartition(2) // a Project over a LocalRelation would be folded interpreted
+    val want = reference(df).collect().map(r => r.getInt(0) -> (1 to 4).map(r.getLong)).toMap
+    val got = df.select($"id", graft.functions.TokenProfile.column(spark, $"text").as("p"))
+      .collect().map(r => r.getInt(0) ->
+        (if (r.isNullAt(1)) None else Some((0 to 3).map(r.getStruct(1).getLong)))).toMap
+    assert(got.size == texts.size)
+    val x = BoundReference(0, StringType, nullable = true)
+    val compiled = GenerateUnsafeProjection.generate(Seq(graft.functions.TokenProfile(x)))
+    texts.zipWithIndex.foreach { case (t, i) =>
+      val w = want.get(i)
+      assert(got(i) == w, s"whole-stage text=[$t]")
+      val in = InternalRow(if (t == null) null else UTF8String.fromString(t))
+      val out = compiled(in)
+      assert((if (out.isNullAt(0)) None else Some((0 to 3).map(out.getStruct(0, 4).getLong))) == w,
+        s"compiled text=[$t]")
+      val ev = graft.functions.TokenProfile(x).eval(in).asInstanceOf[InternalRow]
+      assert(Option(ev).map(r => (0 to 3).map(r.getLong)) == w, s"nullSafeEval text=[$t]")
+    }
+    assert(Seq(null, "", " ", "   ").forall(t => !want.contains(texts.indexOf(t))),
+      "the reference keeps no token-free text")
+    // a caller that rewrites its buffer between rows is profiled afresh
+    val buf = "a a".getBytes("UTF-8")
+    val row = InternalRow(UTF8String.fromBytes(buf))
+    assert(compiled(row).getStruct(0, 4).getLong(1) == 2L)
+    buf(2) = 'b'.toByte
+    assert(compiled(row).getStruct(0, 4).getLong(1) == 1L, "the last-text memo served a stale profile")
   }
 
   test("s10 zero-vector: the quantization chain yields NULL qq, never 0/NaN") {

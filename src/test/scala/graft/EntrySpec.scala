@@ -61,6 +61,15 @@ class EntrySpec extends AnyFunSuite {
     assert(ids.distinct.size == ids.size)
   }
 
+  test("Entry.run d2_minhash_sig: EXCHANGE lines name a REPARTITION_BY_NUM widen only on a ≥ 3 MB file") {
+    def exchanges(dir: String): Seq[String] =
+      Entry.run(spark, "d2_minhash_sig", dir, 1).detail.filter(_.startsWith("EXCHANGE "))
+    val small = exchanges(sf)
+    assert(small.nonEmpty && small.forall(_.contains(" origin=ENSURE_REQUIREMENTS ")), small.mkString("\n"))
+    val big = exchanges(WideDocs.from(sf))
+    assert(big.exists(_.contains(" origin=REPARTITION_BY_NUM ")), big.mkString("\n"))
+  }
+
   test("Entry.run st6_stream_dedup: drain batch and state lines, no stream or view left") {
     val r = runClean("st6_stream_dedup")
     for (pass <- Seq("warm", "rep1"); kind <- Seq("BATCH", "STATE"))

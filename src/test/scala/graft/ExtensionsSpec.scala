@@ -354,7 +354,7 @@ class ExtensionsSpec extends AnyFunSuite {
       finally { SparkSession.setDefaultSession(shared); SparkSession.setActiveSession(shared) }
     assert(withExt ne shared, "the builder returned the shared session")
     val names = graft.functions.NativeFunctions.table.map(_._1)
-    assert(names.size == 14)
+    assert(names.size == 15)
     val missing = names.filterNot(n => withExt.catalog.functionExists(n))
     assert(missing.isEmpty, s"not resolved with the extension: ${missing.mkString(", ")}")
     val r = withExt.sql("SELECT dot_f64(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d")

@@ -500,9 +500,10 @@ class StorageSpec extends AnyFunSuite {
     // parquet assigns a row group to the byte-split holding its start,
     // so scan-stage width is min(planned splits, row groups) — a
     // single coalesced write is ONE row group per 128 MB however many
-    // byte splits planning reports. scanStarved drives the widen at
-    // every compute-heavy scan seam; this pins the signal itself, the
-    // widen/no-widen branch, and that a rewrite is seen with no call.
+    // byte splits planning reports. Tables.widened compares it with the
+    // width the file's bytes ask for at every compute-heavy scan seam;
+    // this pins the signal itself, the widen/no-widen branch, and that
+    // a rewrite is seen with no call.
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_rg_").toString
     // ~20 MB of INCOMPRESSIBLE rows (hex-mixed tokens — repetitive
@@ -532,11 +533,10 @@ class StorageSpec extends AnyFunSuite {
     write(512 * 1024 * 1024) // one giant block → ONE row group
     assert(graft.io.Tables.effectiveScanSplits(spark, dir, "documents") == 1,
       "a single-row-group file must report effective width 1")
-    assert(graft.io.Tables.scanStarved(spark, dir, "documents"))
     val widePartitions = graft.io.Tables
       .documentsWide(spark, dir, Seq("doc_id", "text")).rdd.getNumPartitions
     assert(widePartitions == par,
-      s"starved file should widen to defaultParallelism, got $widePartitions")
+      s"a starved ~30 MB file asks for every core, got $widePartitions")
     // value identity: the widen is a pure repartition
     val narrow = graft.io.Tables.documents(spark, dir)
       .select("doc_id", "text").collect().sortBy(_.getLong(0))
@@ -553,7 +553,7 @@ class StorageSpec extends AnyFunSuite {
     // ADVICE): with the session defaults, "a ~30 MB file plans >= par
     // splits" is an accident of defaultParallelism × 128 MB-partition
     // arithmetic — a test master with more cores or a Spark default
-    // bump would flip scanStarved and fail this spuriously. 1 MB
+    // bump would flip the widen and fail this spuriously. 1 MB
     // partitions + zero open cost make planned splits ≈ fileBytes/1 MB,
     // deterministically >= par for this ~30 MB fixture.
     val pinKeys = Seq("spark.sql.files.maxPartitionBytes",
@@ -564,7 +564,6 @@ class StorageSpec extends AnyFunSuite {
       val eff = graft.io.Tables.effectiveScanSplits(spark, dir, "documents")
       assert(eff >= par,
         s"64 KB blocks over ~30 MB at 1 MB planned partitions should clear the row-group bound, got $eff")
-      assert(!graft.io.Tables.scanStarved(spark, dir, "documents"))
       val p = graft.io.Tables
         .documentsWide(spark, dir, Seq("doc_id", "text"))
         .queryExecution.executedPlan.toString
@@ -587,7 +586,7 @@ class StorageSpec extends AnyFunSuite {
 
     // a PARTITIONED directory layout (nested lang=…/ subdirs) must list
     // recursively — the r13 non-recursive listFiles saw zero leaves,
-    // reported groups=0, and pinned scanStarved TRUE forever (widen
+    // reported groups=0, and pinned the widen on forever (its
     // exchange taxed onto every consumer of the dir)
     val dir3 = Files.createTempDirectory("graft_rgnest_").toString
     (0 until 100).map(i => (i.toLong, "a b c", if (i % 2 == 0) "en" else "de", "web", 5L))
@@ -613,34 +612,65 @@ class StorageSpec extends AnyFunSuite {
       s"suffix-less leaves must read as unknown (planned-split bound), got $effNoExt")
   }
 
-  test("documentsWide both sides: widen and no-widen give equal d2/d3 output") {
-    // the sf0.001 corpus as one row group (starved: widened) and as
-    // many (under 4 KB split pins: not widened); d2 and d3 must agree
-    val docs = graft.io.Tables.documents(spark, sf)
-    def layout(blockBytes: Int): String = {
-      val dir = Files.createTempDirectory("graft_widen_").toString
-      docs.coalesce(1).write.option("parquet.block.size", blockBytes)
-        .option("parquet.page.size.row.check.min", 10).parquet(s"$dir/_gen")
-      val part = new java.io.File(s"$dir/_gen").listFiles.find(_.getName.endsWith(".parquet")).get
-      Files.move(part.toPath, java.nio.file.Paths.get(dir, "documents.parquet"))
-      dir
+  test("documentsWide both sides: ≥ 3 MB widens, sf0.001 does not; nine entries agree") {
+    import org.apache.spark.sql.catalyst.plans.logical.Repartition
+    def widenedTo(dir: String): Option[Int] =
+      graft.io.Tables.documentsWide(spark, dir, Seq("doc_id", "text"))
+        .queryExecution.analyzed.collectFirst { case r: Repartition if r.shuffle => r.numPartitions }
+    assert(widenedTo(sf).isEmpty, "the 65 KB sf0.001 file (n = 1) must not widen")
+
+    // the fixture widens to the width its bytes ask for
+    val big = WideDocs.from(sf)
+    val bytes = new java.io.File(s"$big/documents.parquet").length
+    val par = spark.sparkContext.defaultParallelism
+    assert(graft.io.Tables.effectiveScanSplits(spark, big, "documents") == 1)
+    val want = graft.plans.ExchangeSizing.width(bytes, spark.sessionState.conf.getConf(
+      org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES), 1, par)
+    assert(want > 1 && widenedTo(big).contains(want), s"$bytes B: ${widenedTo(big)} vs $want")
+
+    // the same rows as ~512 KB row groups under 512 KB splits: the
+    // effective width covers the ask, so no widen
+    val split = Files.createTempDirectory("graft_widen_split_").toString
+    spark.read.parquet(s"$big/documents.parquet").coalesce(1).write
+      .option("parquet.block.size", 512 * 1024).parquet(s"$split/_gen")
+    val part = new java.io.File(s"$split/_gen").listFiles.find(_.getName.endsWith(".parquet")).get
+    Files.move(part.toPath, java.nio.file.Paths.get(split, "documents.parquet"))
+
+    val entries = Seq("d2_minhash_sig", "d3_lsh_pairs", "d5_simhash", "d17_source_overlap",
+      "t4_fingerprint", "t14_tfidf", "t15_bigram_lm", "t17_boilerplate", "t18_quality_gate")
+    def sha256(dir: String, e: String): String = {
+      val rows = SparkEntry.queries(e)(spark, dir).collect().map(_.toString).sorted
+      assert(rows.nonEmpty, s"$e came out empty on $dir")
+      java.security.MessageDigest.getInstance("SHA-256")
+        .digest(rows.mkString("\n").getBytes("UTF-8")).map("%02x".format(_)).mkString
     }
-    val (starved, split) = (layout(512 * 1024 * 1024), layout(4096))
-    def outputs(dir: String): Seq[Seq[String]] = Seq("d2_minhash_sig", "d3_lsh_pairs").map(e =>
-      SparkEntry.queries(e)(spark, dir).collect().map(_.toString).toSeq.sorted)
-    assert(graft.io.Tables.scanStarved(spark, starved, "documents"))
-    val widened = outputs(starved)
+    val widened = entries.map(sha256(big, _))
     val pins = Seq("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes")
     val prev = pins.map(k => k -> spark.conf.getOption(k))
-    pins.foreach(spark.conf.set(_, "4096"))
+    pins.foreach(spark.conf.set(_, (512 * 1024).toString))
     val narrow = try {
-      assert(!graft.io.Tables.scanStarved(spark, split, "documents"),
+      assert(widenedTo(split).isEmpty,
         s"effective splits ${graft.io.Tables.effectiveScanSplits(spark, split, "documents")}")
-      assert(!graft.io.Tables.documentsWide(spark, split, Seq("doc_id", "text"))
-        .queryExecution.executedPlan.toString.contains("Exchange"))
-      outputs(split)
+      entries.map(sha256(split, _))
     } finally prev.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
-    assert(widened.forall(_.nonEmpty), "d2 or d3 came out empty")
-    assert(widened == narrow, "the widen changed d2 or d3 output")
+    entries.zip(widened.zip(narrow)).foreach { case (e, (w, n)) =>
+      assert(w == n, s"the widen changed $e's output")
+    }
+  }
+}
+
+/** A one-row-group documents file of ≥ 3 MB (GenScale's 60 keyed
+  * replicas of a gate corpus): big enough that `Tables.widened` widens
+  * it, built once per source dir and test JVM. */
+object WideDocs {
+  private val built = scala.collection.mutable.Map.empty[String, String]
+  def from(src: String): String = synchronized {
+    built.getOrElseUpdate(src, {
+      val d = Files.createTempDirectory("graft_widen_big_").toString
+      graft.tools.GenScale.generate(SparkTestSession.spark, src, d, 60, only = Seq("documents"))
+      val bytes = new java.io.File(s"$d/documents.parquet").length
+      require(bytes >= 3000000L, s"fixture is $bytes B, under 3 MB")
+      d
+    })
   }
 }
