@@ -39,10 +39,15 @@ object TokenProfile {
   private val stopwords: Array[Array[Byte]] =
     graft.text.TextOps.Stopwords.map(_.getBytes(UTF_8)).toArray
 
-  /** Per-thread scratch: the token → count map (cleared per row), and
+  /** A scratch map that held more distinct tokens than this is dropped
+    * rather than cleared: `HashMap.clear` walks the whole table, which
+    * never shrinks, so one long document would tax every later row. */
+  private val MaxReusedTokens = 4096
+
+  /** Per-thread scratch: the token → count map (reused per row), and
     * the last text profiled with its result. */
   private final class Scratch {
-    val counts = new java.util.HashMap[java.nio.ByteBuffer, Array[Long]]()
+    var counts = new java.util.HashMap[java.nio.ByteBuffer, Array[Long]]()
     var lastBytes: Array[Byte] = _
     var lastProfile: InternalRow = _
   }
@@ -71,8 +76,9 @@ object TokenProfile {
     // kept as the next call's key, so never the caller's own array
     val bytes = { val b = text.getBytes; if (b eq text.getBaseObject) b.clone() else b }
     val n = bytes.length
+    if (sc.counts.size > MaxReusedTokens) sc.counts = new java.util.HashMap()
+    else sc.counts.clear()
     val seen = sc.counts
-    seen.clear()
     var nTokens, topC, sumChars, stopHits = 0L
     var start = 0
     var i = 0

@@ -30,8 +30,9 @@ object Tables {
     * — a single-writer file of one row group runs its scan-stage
     * projection 1-wide however many cores the box has. Consumers whose
     * per-row compute dominates (the documents seams of
-    * [[documentsWide]], `Ann.corpus`'s dot products) pay one exchange
-    * of the raw rows to run that compute n-wide.
+    * [[documentsWide]]) pay one exchange of the raw rows to run that
+    * compute n-wide. `Ann.corpus` widens its embeddings scan to all
+    * cores instead: its measured crossover is not this one.
     *
     * Why sized by bytes: the exchange's one map task still decodes and
     * serializes the whole table single-threaded, so on a small file
@@ -39,7 +40,11 @@ object Tables {
     * (SCALING.md §"The corpus widen, sized from its bytes"): a 0.12 MB
     * or 0.59 MB documents file (n = 1) is faster narrow, a 5.7 MB or
     * 57 MB one (n = 4) 1.6–3.2× faster widened, and 1.8 MB gives
-    * n = 2. At cluster scale a corpus is thousands of row groups and
+    * n = 2. The crossover, one partition per advisory /
+    * [[graft.plans.ExchangeSizing.Growth]] bytes (1 MB at the default
+    * advisory size), comes from that constant, which bounds planner
+    * exchanges' write growth: retuning it moves this widen as well.
+    * At cluster scale a corpus is thousands of row groups and
     * the branch is dead. Only order-independent consumers may widen
     * (digest/count/min/bit math, or per-row outputs under a
     * total-order final sort): the exchange reorders rows, which would

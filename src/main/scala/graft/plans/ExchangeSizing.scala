@@ -102,7 +102,14 @@ object ExchangeSizing {
 
   /** Bound on how many times its input bytes one map stage may write,
     * set from the largest measured shuffle-write / stage-input ratio
-    * (SCALING.md §"Exchanges sized from their input bytes"). */
+    * (SCALING.md §"Exchanges sized from their input bytes").
+    *
+    * [[graft.io.Tables.widened]] sizes its round-robin scan widen with
+    * the same [[width]], although a widen does not grow its input:
+    * there `Growth` only sets the crossover, one widened partition per
+    * advisory / `Growth` bytes of file (1 MB at the 64 MB default).
+    * Retuning it moves that crossover too (SCALING.md §"The corpus
+    * widen, sized from its bytes"). */
   val Growth = 64
 
   /** The input bytes an exchange was sized from; absent when unmeasured. */

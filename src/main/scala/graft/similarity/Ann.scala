@@ -111,16 +111,24 @@ object Ann {
     * corpus-sized math (the 8 plane dots of the LSH bucket id,
     * quantization, Lloyd's-round assignment, the brute dot products
     * themselves) runs in the scan-stage projection, whose width is the
-    * file's row-group count ([[Tables.widened]]; probed r13: sf100's
-    * 520 MB embeddings = 4 row groups on 32 cores). Heavy consumers
-    * ride that widen, sized from the file's bytes, as one round-robin
-    * exchange of the RAW float rows (pre-cast: half the bytes of the
-    * double form); their downstream math is order-independent per
-    * pair/row (dots, int-quantized sums, windowed top-k with
-    * total-order tie-breaks), so the reorder moves no output bits.
-    * Filters on corpus consumers (the query panel, centroid seeds)
-    * still push below the exchange, so query-side subplans stay
-    * metadata-sized.
+    * file's row-group count ([[Tables.effectiveScanSplits]]; probed
+    * r13: sf100's 520 MB embeddings = 4 row groups on 32 cores). Heavy
+    * consumers widen a scan narrower than the cores to all of them, as
+    * one round-robin exchange of the RAW float rows (pre-cast: half
+    * the bytes of the double form); their downstream math is
+    * order-independent per pair/row (dots, int-quantized sums,
+    * windowed top-k with total-order tie-breaks), so the reorder moves
+    * no output bits. Filters on corpus consumers (the query panel,
+    * centroid seeds) still push below the exchange, so query-side
+    * subplans stay metadata-sized.
+    *
+    * Not [[Tables.widened]]'s byte-sized width (measured, SCALING.md
+    * §"The corpus widen, sized from its bytes"): these tiers' work
+    * grows as rows × queries (or × centroids), far more per byte than
+    * a tokenizer's, so the documents crossover does not carry over. On
+    * a 1.56 MB one-row-group embeddings file the byte rule's 2-wide
+    * widen ran s11 in 2.90 and 3.17 s against 2.30 and 2.12 s at all
+    * 4 cores (two alternating pairs; the same plan spreads ±35 %).
     *
     * `heavy = false` (r13 ADVICE, measured): the light bucket-hash
     * tiers never widen — s2 went 1.5 → 2.3 s at sf100 with it, because
@@ -130,7 +138,10 @@ object Ann {
     graft.functions.NativeFunctions.register(s)
     val v = col("embedding").cast("array<double>")
     val base = Tables.embeddings(s, dir)
-    val wide = if (heavy) Tables.widened(s, dir, "embeddings", base) else base
+    val cores = s.sparkContext.defaultParallelism
+    val wide =
+      if (heavy && Tables.effectiveScanSplits(s, dir, "embeddings") < cores) base.repartition(cores)
+      else base
     wide.select($"vec_id", $"label", v.as("v"), sqrt(dot(v, v)).as("nrm"))
   }
 

@@ -891,10 +891,12 @@ object TextOps {
     * row-local token-frequency summary (the `token_profile` kernel,
     * [[graft.functions.TokenProfile]]), so the gate is bit-exact and
     * runs inside the scan stage: no exchange before the verdict. The
-    * table form reads the widened documents seam, so at scale the
-    * verdict's compute runs at the widen's width. */
+    * kernel costs about what decoding the row does, so the table form
+    * reads the narrow documents scan: the byte-sized widen made it
+    * slower at every measured size (SCALING.md §"The corpus widen,
+    * sized from its bytes"). */
   def t18QualityGate(s: SparkSession, dir: String): DataFrame =
-    qualityVerdict(Tables.documentsWide(s, dir, Seq("doc_id", "text"))).orderBy($"doc_id")
+    qualityVerdict(Tables.documents(s, dir)).orderBy($"doc_id")
 
   /** The t18 rule set over an arbitrary (doc_id, text) frame: (doc_id,
     * n_tokens, reason_mask, keep), one row per document with at least

@@ -33,10 +33,11 @@ import org.apache.spark.sql.SparkSession
   * Override: SPARK_GRAFT_STARVE_FORCE=1 — for entries that ride a
   * widen seam (`Tables.widened` repartitions a scan to the width its
   * file bytes ask for, at most the core count, for order-independent
-  * consumers: t4/t14/t15/t17/t18/simhash/shingles/Ann.corpus/d17):
-  * every table this guard can trip on (≥ 256 MB) asks for all the
-  * cores, so after the widen exchange the scan runs full-width even
-  * though the raw layout trips the guard. */
+  * consumers: t4/t14/t15/t17/t18/simhash/shingles/d17; `Ann.corpus`
+  * widens a starved embeddings scan to all cores): every table this
+  * guard can trip on (≥ 256 MB) asks for all the cores, so after the
+  * widen exchange the scan runs full-width even though the raw layout
+  * trips the guard. */
 object StarveGuard {
   /** Longest-prefix-first entry-family → input-table map. */
   private[graft] val FamilyTables: Seq[(String, Seq[String])] = Seq(

@@ -507,6 +507,7 @@ class CodegenKernelsSpec extends AnyFunSuite {
           sum(when($"tok".isin(stop: _*), $"c").otherwise(0L)).as("stop_hits"))
     val edges = Seq(null, "", " ", "   ", "a  b", "  a b  ", "a\tb c", // empty, spaces, tab
       "tøken 中文 😀 tøken", "é é ß", // multibyte
+      (0 until 5000).map(i => s"w${i % 4999}").mkString(" "), // outgrows the reused scratch map
       "x y x y z", "b a b a", // tied top tokens
       "a a", "an", "the an a", "and to of", "thee a_ an the", "THE The the")
     val rand = samples(Gen.choose(0, 40).flatMap(n => Gen.listOfN(n,
